@@ -130,7 +130,7 @@ _DOP_DEFAULT = 1
 #
 # Protocol: ADDED to the JSON `queries` map (the contract allows adding,
 # never removing/renaming); measured ONCE per bench run AFTER the
-# interleaved passes with its own 1-warmup + min-of-3 schedule (42
+# interleaved passes with its own 2-warmup + min-of-5 schedule (42
 # full-protocol executions of a multi-second query would dominate the
 # bench's wall clock); EXCLUDED from `value` and the vs_duckdb totals so
 # every r13-comparable number keeps its meaning. All documented in the
@@ -180,7 +180,7 @@ def _scaling_spark_df(spark, sf_dir: str, cpus: int):
 
 def scaling_mode_pass(spark, con, sf_dir: str, cpus: int) -> dict[str, dict]:
     """One post-suite scaling-mode measurement for BOTH engines:
-    1 untimed warmup + min-of-3, DOP = cpus on the Spark side,
+    2 untimed warmups + min-of-5, DOP = cpus on the Spark side,
     SET threads already = cpus on the DuckDB side."""
     spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
     # 2 warmups + min-of-5 (the suite's own per-pass schedule): a
@@ -387,7 +387,7 @@ def main() -> int:
                     "interleaved_passes": N_PASSES,
                     # the scaling-mode entry's own schedule (round 14):
                     # it exists to separate core counts, runs post-suite
-                    # at DOP=cpus with 1 warmup + min-of-3 per engine,
+                    # at DOP=cpus with 2 warmups + min-of-5 per engine,
                     # and is EXCLUDED from value/duckdb totals so every
                     # r13-comparable number keeps its meaning
                     "scaling_mode": {

@@ -75,14 +75,14 @@ def _window(names: list[str], oracles: dict[str, str]) -> list[str]:
     """The driver's 50-slot correctness window: pinned entries first,
     then every oracle-backed query ascending by (latest hash-green
     round, name) — so the stalest cohort rotates in every round."""
-    pinned = [n for n in _PINNED if n in names]
-    for n in pinned:
+    for n in _PINNED:
+        assert n in names, f"pinned window entry is not in the catalog: {n}"
         assert n in oracles, f"pinned window entry lacks an oracle: {n}"
     rot = sorted(
-        (n for n in names if n in oracles and n not in set(pinned)),
+        (n for n in names if n in oracles and n not in _PINNED),
         key=lambda n: (LAST_GREEN.get(n, 0), n),
     )
-    return (pinned + rot)[:_WINDOW_SLOTS]
+    return (_PINNED + rot)[:_WINDOW_SLOTS]
 
 
 def build_catalog() -> tuple[dict[str, QueryFn], dict[str, str]]:

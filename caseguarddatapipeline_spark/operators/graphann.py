@@ -385,15 +385,18 @@ def _warn_if_beyond_recall_envelope(emb: DataFrame, caller: str) -> None:
     budget. A user exporting it at scale gets an explicit warning
     instead of silently bad neighbors; the serving tier at scale is IVF
     (the GRAPHANN.json decision record). The size check is a bounded
-    ``limit(N+1).count()`` — a partial scan that stops after N+1 rows,
-    not a full count — so the guard stays cheap at the very scales it
-    warns about. Emitted through ``logging`` (round-11 advice): the
-    default ``warnings`` filter deduplicates per call site, so a user
-    querying several oversized corpora in one process would be warned
-    only once — a logger warns on EVERY oversized invocation."""
+    ``take(N+1)`` of a constant column — a partial scan that stops after
+    N+1 rows, not a full count — so the guard stays cheap at the very
+    scales it warns about. It is not ``limit(N+1).count()``: a limit
+    inside generated code names its counter from a process-wide
+    sequence, so that form compiled new classes on every call. Emitted
+    through ``logging`` (round-11 advice): the default ``warnings``
+    filter deduplicates per call site, so a user querying several
+    oversized corpora in one process would be warned only once — a
+    logger warns on EVERY oversized invocation."""
     if not RECALL_GUARD_ENABLED:
         return
-    n = emb.limit(GRAPH_RECALL_SAFE_N + 1).count()
+    n = len(emb.select(F.lit(1)).take(GRAPH_RECALL_SAFE_N + 1))
     if n > GRAPH_RECALL_SAFE_N:
         import logging
 

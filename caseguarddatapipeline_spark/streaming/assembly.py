@@ -53,8 +53,11 @@ tests/test_stream_assembly.py.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 import pyspark.sql.functions as F
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 
 from ..operators.dedup import _banded_vectorized
@@ -472,11 +475,16 @@ def run_assembly_stream(
                             sig_index, f"ingest_batch={batch_id}", ["band"],
                         ),
                     )
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+                    # wrapped here, each write takes its own copy of this
+                    # thread's local properties (the stream's job group
+                    # and scheduler pool) onto its pool thread
+                    writes = [
+                        inheritable_thread_target(sess)(partial(_write, *s))
+                        for s in sinks
+                    ]
+                    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
                         # surface the first failure (list() re-raises)
-                        list(pool.map(lambda s: _write(*s), sinks))
+                        list(pool.map(lambda w: w(), writes))
                     _lap("state_writes")
                     by_src = spent_hot["by_source"]
                     for r in (

@@ -82,3 +82,13 @@ def test_window_rotation_is_stalest_first():
             "a staler query was left outside the window: "
             f"{min_outside} vs newest inside {keys[-1]}"
         )
+
+
+def test_window_rejects_a_pinned_name_missing_from_the_catalog(monkeypatch):
+    """A mistyped ``_PINNED`` name fails catalog assembly instead of
+    silently dropping out of the correctness window."""
+    from caseguarddatapipeline_spark import catalog
+
+    monkeypatch.setattr(catalog, "_PINNED", [*catalog._PINNED, "no_such_query"])
+    with pytest.raises(AssertionError, match="not in the catalog: no_such_query"):
+        catalog._window(list(QUERIES), ORACLES)

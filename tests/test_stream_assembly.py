@@ -18,13 +18,18 @@ sys.path.insert(0, str(REPO))
 from tools.assembly_stream_bench import planted_docs  # noqa: E402
 
 
-def _drain(spark, tmp_path, n_docs=400, budget=2_000, n_files=4):
+def _planted_input(spark, tmp_path, n_docs=400, n_files=4):
     input_dir = str(tmp_path / "in")
-    work = str(tmp_path / "work")
     if not (tmp_path / "in").exists():
         planted_docs(spark, n_docs).repartition(
             n_files, F.col("doc_id")
         ).write.mode("overwrite").json(input_dir)
+    return input_dir
+
+
+def _drain(spark, tmp_path, n_docs=400, budget=2_000, n_files=4):
+    input_dir = _planted_input(spark, tmp_path, n_docs, n_files)
+    work = str(tmp_path / "work")
     from caseguarddatapipeline_spark.streaming.assembly import (
         run_assembly_stream,
     )
@@ -81,6 +86,25 @@ def test_assembly_stream_exact_dups_never_admitted(spark, tmp_path):
     for d in admitted:
         if d % 10 == 0:
             assert d - 1 not in admitted, f"exact pair ({d-1},{d}) both in"
+
+
+def test_assembly_sink_writes_stay_in_the_stream_job_group(spark, tmp_path):
+    """The four sink writes run on pool threads. They must carry the
+    micro-batch's local properties, so that no drain job escapes the
+    stream's job group (and with it the stream's scheduler pool)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    _planted_input(spark, tmp_path)  # outside the checked window
+    before = set(tracker.getJobIdsForGroup(None))
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", "assembly-caller")
+    try:
+        work = _drain(spark, tmp_path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    escaped = set(tracker.getJobIdsForGroup(None)) - before
+    assert not escaped, f"{len(escaped)} drain jobs ran outside any job group"
+    assert spark.read.parquet(f"{work}/corpus").count() > 0
 
 
 def test_assembly_stream_deterministic(spark, tmp_path):
