@@ -47,14 +47,11 @@ _WINDOW_SLOTS = 50
 _PINNED = [
     "a1_reconciliation_summary",  # flagship continuity pin (r1-)
     # round-14 optimization restructures (zero-debt extends to CHANGED
-    # internals, not just new entries): the beam search's fused
-    # single-state-frame hops + the kNN kernel's dot/(na·nb) operand
-    # order, the 128-bit two-seed span key, the BPE shared words
-    # exchange, the bounded e5 caps collect, localCheckpoint label
-    # propagation (and its two curation dependents), the gated simhash
-    # fan-out hint, and the position-tagged fuzzy blocking.
-    "e2_graph_search",
-    "e2_graph_recall",
+    # internals, not just new entries): the 128-bit two-seed span key,
+    # the BPE shared words exchange, the bounded e5 caps collect,
+    # localCheckpoint label propagation (and its two curation
+    # dependents), the gated simhash fan-out hint, and the
+    # position-tagged fuzzy blocking.
     "e1_span_dedup_sql",
     "e3_bpe_encode_sql",
     "e5_global_token_budget_sql",
@@ -117,7 +114,7 @@ def _registered_modules():
         "relational9", "relational10", "sql_twins", "profiling", "timeseries",
         "quality",
         "skew", "sessions", "textops", "dedup", "curation", "similarity", "pq",
-        "vecindex", "graphann", "layout", "topk",
+        "vecindex", "layout", "topk",
         "multimodal", "pdfops", "docxops", "xlsxops", "mailops", "rtfops",
         "cfbops", "wordops", "biffops", "pptops", "archiveops",
         "incremental", "inference", "rest_fetch", "canonical",

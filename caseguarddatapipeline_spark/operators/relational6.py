@@ -109,9 +109,11 @@ def e1_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     position), while the distance-2 noise cannot. Insert/delete and
     identical pairs match the shorter string itself at ANY deletion
     position, so they come from a second equi-join of the untagged
-    deletion neighborhood against the bare-name side — whose build side
-    is only the #names-row identity frame. Candidate rows ≈ true pairs
-    (plus hash collisions); verified counts: 977k → 252k at sf0.1."""
+    deletion neighborhood against the bare-name side, the #names-row
+    identity frame. That frame grows with the corpus, so it carries no
+    broadcast hint: the optimizer (and AQE at run time) picks the join
+    from its size. Candidate rows ≈ true pairs (plus hash collisions);
+    verified counts: 977k → 252k at sf0.1."""
     customer = load_table(spark, sf_dir, "customer")
     c = customer.select(
         F.col("c_custkey").alias("key"), F.col("c_name").alias("name")
@@ -178,7 +180,7 @@ def e1_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap = F.col("key_a") > F.col("key_b")
     indel = (
         allv.join(
-            F.broadcast(ids),
+            ids,
             (F.col("block") == F.col("block_b"))
             & (F.col("key_a") != F.col("key_b")),
         )

@@ -96,6 +96,15 @@ def test_curation_removals_broadcast_anti_join(spark, sf_dir):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
 
 
+def test_fuzzy_name_match_forces_no_broadcast(spark, sf_dir):
+    # both join sides are customer projections that grow with the corpus;
+    # forcing either into a broadcast is an OOM at scale, so the join
+    # strategy is left to the optimizer and AQE
+    df = QUERIES["e1_fuzzy_name_match"](spark, sf_dir)
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert "strategy=broadcast" not in analyzed, analyzed
+
+
 # Queries whose BroadcastNestedLoopJoin is a BOUNDED broadcast side — a
 # 1-row scalar aggregate or a fixed O(1) query set — so the "loop" is O(n·1):
 # the correct plan, not a quadratic risk. Everything else must ride an
@@ -150,13 +159,6 @@ BNLJ_BOUNDED = {
     "by cell equi-join; same shape as e2_pq_recall)",
     "e5_curriculum_order_scaled": "corpus-count scalar (1-row broadcast) "
     "feeding the ntile arithmetic; both rank windows are bucketed",
-    "e2_graph_search": "fixed 5-vector query set broadcast (entry/hop "
-    "scoring); round 13 replaced the exact O(n²) build's nested-loop "
-    "join with the blocked-grid matmul kernel (same edge set), so the "
-    "remaining BNLJ is only the bounded query-set crossJoin — the "
-    "scale path stays build_knn_graph_blocked (GRAPHANN.json)",
-    "e2_graph_recall": "same shapes as e2_graph_search plus the exact "
-    "top-3 ground truth vs the fixed query set (e2_pq_recall shape)",
     "e3_bpe_encode": "the two learned merges ride a 1-row broadcast into "
     "the per-document encode projection (e3_vocab_induction_2round's "
     "winner-broadcast shape)",

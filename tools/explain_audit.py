@@ -19,11 +19,6 @@ from caseguarddatapipeline_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
-    # plan-only run: the graph recall guard's bounded count is the one
-    # eager job query CONSTRUCTION would otherwise trigger here
-    from caseguarddatapipeline_spark.operators import graphann
-
-    graphann.RECALL_GUARD_ENABLED = False
     spark = get_spark("explain-audit")
     queries, _ = build_catalog()
     names = list(bench.BENCH_QUERIES) + [
@@ -91,14 +86,10 @@ def main() -> int:
         "e5_weighted_mixture",
         # round-9 additions: the skew-proof curriculum twin (histogram-CDF
         # quartiles, prefix-bucketed in-band windows — NO ntile, no
-        # band-only window), and the graph-ANN prototype (broadcast
-        # frontier joins per hop; the O(n²) build is the declared
-        # oracle-scale form, see graphann.py + GRAPHANN.json). The
-        # reworked e1_prefix_filter_join / e1_containment_join above must
-        # now show the bitmap-prune predicate inside the posting join.
+        # band-only window). The reworked e1_prefix_filter_join /
+        # e1_containment_join above must now show the bitmap-prune
+        # predicate inside the posting join.
         "e5_curriculum_order_scaled",
-        "e2_graph_search",
-        "e2_graph_recall",
         # bucketed storage layout: the scan must show Bucketed: true and
         # the per-key agg + co-bucketed join must have NO shuffle
         # exchange (only the final o_orderstatus groupBy shuffles)

@@ -22,9 +22,6 @@ from caseguarddatapipeline_spark.session import get_spark  # noqa: E402
 def main() -> int:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     only = sys.argv[2:]
-    from caseguarddatapipeline_spark.operators import graphann
-
-    graphann.RECALL_GUARD_ENABLED = False
     spark = get_spark("plan-snap")
     queries, _ = build_catalog()
     import os
