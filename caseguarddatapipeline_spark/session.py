@@ -12,6 +12,7 @@ from __future__ import annotations
 import functools
 import logging
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -27,6 +28,22 @@ log = logging.getLogger(__name__)
 # the full sweep: Metaspace 192 -> 211 MB and ~17 MB more JIT code heap.
 CODEGEN_CACHE_ENTRIES = 4096
 _CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+
+# Python worker daemon (static conf ``spark.python.daemon.module``). Spark's
+# own daemon leaves pyspark.zip, the py4j zip and the spark-core jar on
+# the workers' sys.path, and every task's importlib.invalidate_caches()
+# re-reads those archives: 100-140 ms per task on a 4-core box. The
+# engine's daemon drops them when the interpreter's pyspark and py4j
+# match (see pydaemon.py). Spark starts it with ``python -m``, so the
+# package root goes on the workers' PYTHONPATH (merged after Spark's).
+PYTHON_DAEMON_MODULE = f"{__package__}.pydaemon"
+_PYTHON_DAEMON_CONF = "spark.python.daemon.module"
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
+
+# Session-local mark of the interactive-serving profile, kept in the
+# session's own SQL conf: apply_runtime_confs must not re-assert the
+# batch AQE defaults on a session that carries it.
+_LOW_LATENCY_CONF = "caseguarddatapipeline.lowLatency"
 
 # Confs that are safe (and required) to apply to an externally provided
 # session at runtime — e.g. the verify driver's own SparkSession.
@@ -44,13 +61,6 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-# Sessions switched to the interactive-serving profile (by applicationId —
-# object ids can be REUSED by a new session after the old one is GC'd,
-# which would silently skip AQE confs for an unrelated session): for
-# these, apply_runtime_confs must not re-assert the batch AQE defaults.
-_LOW_LATENCY_SESSIONS: set[str] = set()
-
-
 def _session_tag(spark: SparkSession) -> str:
     try:
         return spark.sparkContext.applicationId
@@ -60,8 +70,7 @@ def _session_tag(spark: SparkSession) -> str:
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to any session (ours or the driver's)."""
-    tag = _session_tag(spark)
-    skip_adaptive = tag in _LOW_LATENCY_SESSIONS
+    skip_adaptive = spark.conf.get(_LOW_LATENCY_CONF, "false") == "true"
     for k, v in RUNTIME_CONFS.items():
         if skip_adaptive and k.startswith("spark.sql.adaptive."):
             continue
@@ -76,7 +85,10 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     except Exception:
         entries = CODEGEN_CACHE_ENTRIES
     if entries < CODEGEN_CACHE_ENTRIES:
-        _warn_small_codegen_cache(tag, entries)
+        _warn_small_codegen_cache(_session_tag(spark), entries)
+    daemon = spark.conf.get(_PYTHON_DAEMON_CONF, "pyspark.daemon")
+    if daemon != PYTHON_DAEMON_MODULE:
+        _warn_stock_python_daemon(_session_tag(spark), daemon)
     return spark
 
 
@@ -89,6 +101,18 @@ def _warn_small_codegen_cache(tag: str, entries: int) -> None:
         "session %s: %s=%d is below the engine's working set of %d "
         "generated classes; repeated queries will recompile",
         tag, _CODEGEN_CACHE_CONF, entries, CODEGEN_CACHE_ENTRIES,
+    )
+
+
+@functools.cache
+def _warn_stock_python_daemon(tag: str, daemon: str) -> None:
+    """Once per session: the daemon module is static, so a session built
+    elsewhere keeps Spark's, whose workers re-read pyspark.zip and the
+    spark-core jar on every Python task."""
+    log.warning(
+        "session %s: %s=%s is not the engine's %s; every Python task "
+        "will re-read Spark's zip and jar archives",
+        tag, _PYTHON_DAEMON_CONF, daemon, PYTHON_DAEMON_MODULE,
     )
 
 
@@ -105,19 +129,21 @@ def enable_low_latency(spark: SparkSession, shuffle_partitions: int = 8) -> Spar
     this. Fewer shuffle partitions likewise trade task-launch overhead
     for per-task size — correct when shuffles are MBs, not GBs.
     """
-    _LOW_LATENCY_SESSIONS.add(_session_tag(spark))
+    spark.conf.set(_LOW_LATENCY_CONF, "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return spark
 
 
 def disable_low_latency(spark: SparkSession) -> SparkSession:
-    """Return a session to the batch/ETL profile (AQE defaults)."""
-    _LOW_LATENCY_SESSIONS.discard(_session_tag(spark))
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))),
-    )
+    """Return a session to the batch/ETL profile: AQE defaults and the
+    shuffle width the session was built with."""
+    spark.conf.unset(_LOW_LATENCY_CONF)
+    width = spark.sparkContext.getConf().get("spark.sql.shuffle.partitions")
+    if width is None:
+        spark.conf.unset("spark.sql.shuffle.partitions")
+    else:
+        spark.conf.set("spark.sql.shuffle.partitions", width)
     return apply_runtime_confs(spark)
 
 
@@ -182,11 +208,15 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "16m")
         # Executor↔python-worker transport over unix domain sockets
         # (Spark 4): shaves ~30 ms of per-task handshake off every
-        # Python-stage query (measured 0.206→0.177 s on an identity
-        # mapInPandas); same-host communication in any deployment.
+        # Python-stage query (measured 0.091→0.061 s median on a one-task
+        # identity mapInPandas, local[4], with the engine's daemon);
+        # same-host communication in any deployment.
         .config("spark.python.unix.domain.socket.enabled", "true")
         # Keep generated code across queries (static: builder only).
         .config(_CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
+        # Python workers without Spark's archives (static: builder only).
+        .config(_PYTHON_DAEMON_CONF, PYTHON_DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

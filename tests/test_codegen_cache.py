@@ -44,11 +44,13 @@ def test_warm_serving_pass_compiles_nothing(spark, sf_dir):
 
 
 def _session_with_cache(entries: str, app_id: str):
+    confs = {
+        "spark.sql.codegen.cache.maxEntries": entries,
+        "spark.python.daemon.module": session.PYTHON_DAEMON_MODULE,
+    }
     conf = SimpleNamespace(
         set=lambda k, v: None,
-        get=lambda k, default=None: entries
-        if k == "spark.sql.codegen.cache.maxEntries"
-        else default,
+        get=lambda k, default=None: confs.get(k, default),
     )
     return SimpleNamespace(
         conf=conf, sparkContext=SimpleNamespace(applicationId=app_id)
