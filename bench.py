@@ -64,10 +64,10 @@ BENCH_QUERIES_R11 = [
 # water-filling token budget, and SQ8 quantized search — under the same
 # interleaved+canary protocol. The r11 16-query subtotal is reported
 # alongside for cross-round continuity.
-# Like most of the r11 headliners these are the one-parse SQL serving
-# twins (sql_twins.py — same physical plans as the DataFrame forms,
-# ~10x cheaper plan construction; measured 0.09-0.24 s of py4j build
-# per query on the DataFrame forms, 40% of their serving latency).
+# Like most of the r11 headliners these are one-parse SQL bodies (~10x
+# cheaper plan construction than a DataFrame method chain; measured
+# 0.09-0.24 s of py4j build per query on the DataFrame forms they
+# replaced, 40% of their serving latency).
 BENCH_QUERIES_R12 = [
     "e1_span_dedup_sql",
     "e3_bpe_encode_sql",

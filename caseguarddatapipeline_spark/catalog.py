@@ -65,6 +65,18 @@ _PINNED = [
     # (it was neither pinned nor rotation-due) — pin it now so the
     # changed aggregation is oracle-verified per the stated policy.
     "e3_trigram_familiarity",
+    # one body per operator: each name below now runs its surviving twin
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_regional_volume",
+    "q18_large_orders",
+    "e3_bpe_encode",
+    "e5_global_token_budget",
+    "e2_cosine_topk",
+    "e2_knn_per_query",
+    "e3_zscore_by_source",
+    "e5_curriculum_order",
+    "e5_token_budget_sample",
 ]
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..sources import load_table
 from .reconcile import crm_snapshot, store_snapshot
+from .sql_twins import QUERIES as SQL_TWINS
 
 # --------------------------------------------------------------------------
 # P — projections / filters (reference: etl/reconciliation.py:143-167,
@@ -431,71 +432,6 @@ def w7_priority_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# Headline analytical queries (bench workload)
-# --------------------------------------------------------------------------
-
-
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-shaped pricing summary over lineitem — the engine's
-    headline scan+agg benchmark. Single scan, partial+final hash agg on a
-    4-group key; whole-stage codegen end to end."""
-    li = load_table(spark, sf_dir, "lineitem")
-    cutoff = F.to_timestamp_ntz(F.lit("1998-09-01 00:00:00"))
-    return (
-        li.filter(F.col("l_shipdate") <= cutoff)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                    * (1 + F.col("l_tax"))
-                ),
-                2,
-            ).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-shaped 3-way join + top-k revenue. Customer dim is
-    broadcast; orders⋈lineitem shuffles once on orderkey; top-10 via
-    TakeOrderedAndProject."""
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    cutoff = F.to_timestamp_ntz(F.lit("1997-06-01 00:00:00"))
-    return (
-        li.filter(F.col("l_shipdate") > cutoff)
-        .join(
-            orders.filter(F.col("o_orderdate") < cutoff),
-            li.l_orderkey == orders.o_orderkey,
-        )
-        .join(
-            F.broadcast(customer.filter(F.col("c_mktsegment") == "BUILDING")),
-            orders.o_custkey == customer.c_custkey,
-        )
-        .groupBy("l_orderkey", "o_orderpriority")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
 QUERIES = {
     "p1_active_filter": p1_active_filter,
     "p4_document_admission": p4_document_admission,
@@ -521,8 +457,9 @@ QUERIES = {
     "w5_batch_numbering": w5_batch_numbering,
     "w5_batch_numbering_by_key": w5_batch_numbering_by_key,
     "w7_priority_bands": w7_priority_bands,
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_priority": q3_shipping_priority,
+    # one body per headline TPC-H shape: the SQL-surface twin's
+    "q1_pricing_summary": SQL_TWINS["q1_pricing_summary_sql"],
+    "q3_shipping_priority": SQL_TWINS["q3_shipping_priority_sql"],
 }
 
 ORACLES = {

@@ -1,14 +1,11 @@
-"""Headline multi-way-join queries (TPC-H Q5/Q18 shapes): deep join chains
-that exercise Catalyst's join reordering, broadcast selection, and AQE.
+"""TPC-H Q9 (product profit) as a DataFrame operator, plus the catalog
+names of the Q5/Q18 join-chain shapes.
 
-Q5 shape: 6-way star join (region→nation→customer→orders→lineitem→supplier)
-with the co-nation predicate. All dimensions broadcast; the only shuffles
-are fact-side aggregation exchanges — at 100 TB the plan is scan-heavy and
-shuffle-light, exactly what a star schema wants.
-
-Q18 shape: large-order detection — an aggregate-then-semi-join pattern.
-The having-sum subquery result (few keys) broadcasts back against orders;
-no full orders×lineitem shuffle join of row payloads.
+Q5 (regional volume) and Q18 (large orders) have one body each: the
+one-parse SQL twins in sql_twins.py serve both names. Their join
+strategy is Catalyst's: no forced broadcast of ``customer``, which grows
+with the corpus. Q18 keeps one hint on the HAVING-filtered aggregate,
+whose A/B is recorded with its template.
 """
 
 from __future__ import annotations
@@ -17,73 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import load_table
-
-
-def q5_regional_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue by nation inside one region/date window (TPC-H Q5 shape).
-    Supplier and customer must share the nation (the Q5 co-location
-    predicate)."""
-    region = load_table(spark, sf_dir, "region")
-    nation = load_table(spark, sf_dir, "nation")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-
-    lo = F.to_timestamp_ntz(F.lit("1996-01-01 00:00:00"))
-    hi = F.to_timestamp_ntz(F.lit("1997-01-01 00:00:00"))
-    dims = (
-        nation.join(F.broadcast(region.filter(F.col("r_name") == "ASIA")),
-                    nation.n_regionkey == region.r_regionkey)
-        .select("n_nationkey", "n_name")
-    )
-    cust = customer.join(F.broadcast(dims), customer.c_nationkey == dims.n_nationkey)
-    supp = supplier.join(
-        F.broadcast(dims.select(F.col("n_nationkey").alias("s_nkey"))),
-        supplier.s_nationkey == F.col("s_nkey"),
-    ).select("s_suppkey", "s_nationkey")
-    ord_window = orders.filter((F.col("o_orderdate") >= lo) & (F.col("o_orderdate") < hi))
-    revenue = F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        li.join(ord_window, li.l_orderkey == ord_window.o_orderkey)
-        .join(F.broadcast(cust), (F.col("o_custkey") == F.col("c_custkey")))
-        .join(
-            F.broadcast(supp),
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("s_nationkey") == F.col("c_nationkey")),
-        )
-        .groupBy("n_name")
-        .agg(F.round(revenue, 2).alias("revenue"))
-        .orderBy(F.desc("revenue"))
-    )
-
-
-def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orders whose total lineitem quantity exceeds a threshold (TPC-H Q18
-    shape): aggregate lineitem first (partial+final on orderkey), keep the
-    few qualifying keys, then broadcast-semi-join back to orders+customer."""
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("total_qty"))
-        .filter(F.col("total_qty") > 150)
-    )
-    return (
-        orders.join(F.broadcast(big), orders.o_orderkey == big.l_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .select(
-            "c_name",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_date"),
-            "o_totalprice",
-            F.round("total_qty", 2).alias("total_qty"),
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(100)
-    )
+from .sql_twins import QUERIES as SQL_TWINS
 
 
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,8 +55,8 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES = {
-    "q5_regional_volume": q5_regional_volume,
-    "q18_large_orders": q18_large_orders,
+    "q5_regional_volume": SQL_TWINS["q5_regional_volume_sql"],
+    "q18_large_orders": SQL_TWINS["q18_large_orders_sql"],
     "q9_product_profit": q9_product_profit,
 }
 

@@ -77,54 +77,6 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def e2_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 cosine neighbors of vec_id=0 over the whole corpus.
-
-    The single query vector is a 1-row broadcast; the corpus side is one
-    narrow scan — at 100 TB this is the shape you want: no shuffle, the
-    top-k collapses via TakeOrderedAndProject."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    query = emb.filter(F.col("vec_id") == 0).select(
-        _dbl(F.col("embedding")).alias("q_emb")
-    ).select("q_emb", _norm(F.col("q_emb")).alias("q_norm"))
-    # norms precomputed once per row, not once per pair
-    corpus = emb.filter(F.col("vec_id") > 0).select(
-        "vec_id", "label", _dbl(F.col("embedding")).alias("emb")
-    ).select("vec_id", "label", "emb", _norm(F.col("emb")).alias("nrm"))
-    cos = _dot(F.col("emb"), F.col("q_emb")) / (F.col("nrm") * F.col("q_norm"))
-    return (
-        corpus.crossJoin(F.broadcast(query))
-        .select("vec_id", "label", F.round(cos, 4).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-    )
-
-
-def e2_knn_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-NN for each of the first 5 vectors against the rest of the corpus:
-    broadcast the query set, rank with a per-query window over the rounded
-    cosine (deterministic ties via vec_id)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), _dbl(F.col("embedding")).alias("q_emb")
-    ).select("query_id", "q_emb", _norm(F.col("q_emb")).alias("q_norm"))
-    # norms precomputed once per row, not once per pair
-    corpus = emb.select("vec_id", _dbl(F.col("embedding")).alias("emb")).select(
-        "vec_id", "emb", _norm(F.col("emb")).alias("nrm")
-    )
-    cos = _dot(F.col("emb"), F.col("q_emb")) / (F.col("nrm") * F.col("q_norm"))
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", F.round(cos, 4).alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
-
-
 def e2_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED vector search: 3-NN per query restricted to corpus vectors
     sharing the query's label — the metadata-predicate + similarity shape
@@ -537,12 +489,11 @@ def _use_arrow_kernel(spark: SparkSession, sf_dir: str) -> bool:
     return dim >= _ARROW_MIN_DIM
 
 
-# Single-parse SQL forms of the small-corpus serving paths: the identical
-# HOF query text (same float op order, so row-identical results) built in
-# ONE spark.sql parse instead of ~30 py4j expression hops — plan
-# construction drops from ~100 ms to ~15 ms, which dominates sub-100 ms
-# executions. The DataFrame forms above stay as the catalog's documented
-# operators; these serve the routed hot path.
+# The exact cosine operators' only bodies: codegen HOF query text built
+# in ONE spark.sql parse instead of ~30 py4j expression hops (plan
+# construction ~100 ms → ~15 ms, which dominates sub-100 ms executions).
+# The _vectorized names route to these same bodies below their Arrow
+# thresholds (same float op order, so row-identical results).
 _DOT_SQL = (
     "aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
     "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
@@ -607,6 +558,23 @@ def _serve_sql(spark: SparkSession, sf_dir: str, template: str) -> DataFrame:
     return spark.sql(template.format(emb=scoped_views(spark, sf_dir)["embeddings"]))
 
 
+def e2_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-10 cosine neighbors of vec_id=0 over the whole corpus.
+
+    The single query vector is a 1-row broadcast; the corpus side is one
+    narrow scan with norms computed once per row — at 100 TB this is the
+    shape you want: no shuffle, the top-k collapses via
+    TakeOrderedAndProject."""
+    return _serve_sql(spark, sf_dir, _COSINE_TOPK_SQL)
+
+
+def e2_knn_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """3-NN for each of the first 5 vectors against the rest of the corpus:
+    broadcast the query set, rank with a per-query window over the rounded
+    cosine (deterministic ties via vec_id)."""
+    return _serve_sql(spark, sf_dir, _KNN_SQL)
+
+
 def e2_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-vectorized variant of e2_cosine_topk: the query vector is
     driver-side index metadata (one 64-d float row, like IVF's
@@ -618,7 +586,7 @@ def e2_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor dominates, so _use_arrow_kernel routes the small/narrow case
     to the codegen HOF plan instead (same rows either way)."""
     if not _use_arrow_kernel(spark, sf_dir):
-        return _serve_sql(spark, sf_dir, _COSINE_TOPK_SQL)
+        return e2_cosine_topk(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     q = _query_vectors(spark, sf_dir, 1)[0]["embedding"]
     qv = np.array(q, dtype=np.float64)
@@ -646,7 +614,7 @@ def e2_knn_per_query_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     Routed like e2_cosine_topk_vectorized: small/narrow corpora serve
     the codegen HOF plan (identical rows), wide/large take this kernel."""
     if not _use_arrow_kernel(spark, sf_dir):
-        return _serve_sql(spark, sf_dir, _KNN_SQL)
+        return e2_knn_per_query(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     qrows = _query_vectors(spark, sf_dir, 5)
     q_ids = np.array([r["vec_id"] for r in qrows])

@@ -1,4 +1,4 @@
-"""SQL-surface twins of the heavy relational queries.
+"""SQL-surface bodies of the heavy relational queries.
 
 One query text serves BOTH engines: the Spark form runs it via a single
 ``spark.sql`` over per-sf scoped temp views (one parse/analyze round
@@ -7,12 +7,15 @@ method chain, which pays one py4j hop per operator), and the oracle form
 is the identical text over DuckDB's plain view names. Identical text ⇒
 structural parity by construction.
 
-Physical plans are the same as the DataFrame twins (Catalyst does not
-care which front end built the logical plan): dims broadcast, facts
-shuffle once, top-k collapses to TakeOrderedAndProject — asserted in
-tests/test_plans.py. This is also the engine's user-facing SQL story:
-the reference has no query language (SURVEY.md §4); here any query a
-user writes in ANSI SQL is served by the same catalog.
+Each TPC-H ``_sql`` body here is its operator's only body: the base
+catalog name (q1_pricing_summary, q3_shipping_priority,
+q5_regional_volume, q18_large_orders) is registered to the same function
+object and keeps its own DuckDB oracle. Join strategy is Catalyst's
+(dims broadcast by its size estimate, facts shuffle once, top-k
+collapses to TakeOrderedAndProject) — asserted in tests/test_plans.py.
+This is also the engine's user-facing SQL story: the reference has no
+query language (SURVEY.md §4); here any query a user writes in ANSI SQL
+is served by the same catalog.
 """
 
 from __future__ import annotations
@@ -20,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.tables import TABLES, scoped_views
+from . import dedup, quality, textops
+from . import pq as pqmod
 
 # {table} placeholders are substituted with scoped view names (Spark) or
 # the plain table names (DuckDB oracle).
@@ -145,16 +150,16 @@ def _spark_fn(name: str):
 
 
 # ---------------------------------------------------------------------------
-# Round 12: Spark-DIALECT serving twins of the four operators that joined
-# the bench headline schedule. Unlike _TEMPLATES (one common-dialect text
-# for both engines), these operators lean on array higher-order functions
-# whose names differ per dialect (filter/transform/aggregate vs
+# Round 12: Spark-DIALECT serving twins of operators in the bench
+# headline schedule. Unlike _TEMPLATES (one common-dialect text for both
+# engines), these operators lean on array higher-order functions whose
+# names differ per dialect (filter/transform/aggregate vs
 # list_filter/list_transform/list_reduce), so the Spark text below pairs
 # with the ORIGINAL DuckDB oracle imported from each operator's module —
 # the driver still hash-compares the two. Purpose is the same as the
 # other twins: ONE spark.sql parse instead of a DataFrame method chain
-# (measured: 0.09-0.24 s of py4j plan construction per build on these
-# four — 40% of their serving latency), with an identical physical plan.
+# (measured: 0.09-0.24 s of py4j plan construction per build — 40% of
+# their serving latency), with an identical physical plan.
 # ---------------------------------------------------------------------------
 
 _SPARK_ONLY_TEMPLATES: dict[str, str] = {
@@ -208,137 +213,6 @@ _SPARK_ONLY_TEMPLATES: dict[str, str] = {
                round(CAST(count(CASE WHEN n_docs >= 2 THEN 1 END) AS DOUBLE)
                      / count(*), 6) AS dup_span_fraction
         FROM tagged GROUP BY doc_id
-    """,
-    # e3_bpe_encode twin: vocab-bounded merge learning (two pair aggs +
-    # 1-row broadcasts) + one map-side encode projection.
-    # Round 13 (optimization): tokenization drops the interpreted
-    # filter-lambda — `words` explodes the raw split and filters with a
-    # codegen WHERE (explode∘filter ≡ filter∘explode), `counts` uses
-    # array_remove(…, '') — identical results, measured ~20% off the
-    # two `words` evaluations.
-    # Round 14 (optimization, guide §2.4 — share one exchange): the
-    # `length(word) >= 2` filter moved INTO the words CTE. Words of
-    # length 1 contribute nothing to either consumer (p1 skips them;
-    # replace() never lengthens, so their post-merge segment is still
-    # length 1 and p2's length(w) >= 2 drops it), but with the filter
-    # only on the p1 branch the optimizer pushed it below that branch's
-    # aggregation, making the two inlined words subtrees canonically
-    # DIFFERENT — so the corpus-sized words aggregation executed twice.
-    # With identical subtrees ReusedExchange shares the one aggregation
-    # exchange: the executed plan carries ONE words scan+agg.
-    "e3_bpe_encode_sql": """
-        WITH words AS (
-            SELECT word, count(*) AS n
-            FROM (SELECT explode(split(text, ' ')) AS word
-                  FROM {documents})
-            WHERE word != '' AND length(word) >= 2
-            GROUP BY word
-        ), p1 AS (
-            SELECT substring(word, i, 2) AS pair, sum(n) AS c
-            FROM (SELECT word, n,
-                         explode(sequence(1, length(word) - 1)) AS i
-                  FROM words)
-            GROUP BY substring(word, i, 2)
-        ), winner AS (
-            SELECT pair AS merge1 FROM p1 ORDER BY c DESC, pair ASC LIMIT 1
-        ), seg AS (
-            SELECT /*+ BROADCAST(winner) */ n, merge1,
-                   replace(word, merge1, char(1)) AS w
-            FROM words CROSS JOIN winner
-        ), p2 AS (
-            SELECT merge1, substring(w, i, 2) AS pair2, sum(n) AS c
-            FROM (SELECT n, merge1, w,
-                         explode(sequence(1, length(w) - 1)) AS i
-                  FROM seg WHERE length(w) >= 2)
-            GROUP BY merge1, substring(w, i, 2)
-        ), winner2 AS (
-            SELECT merge1, pair2 AS merge2
-            FROM p2 ORDER BY c DESC, pair2 ASC LIMIT 1
-        ), counts AS (
-            SELECT /*+ BROADCAST(winner2) */ doc_id,
-                   aggregate(toks, CAST(0 AS BIGINT),
-                             (a, w) -> a + length(w)) AS n_sym_raw,
-                   aggregate(toks, CAST(0 AS BIGINT),
-                             (a, w) -> a + length(
-                                 replace(replace(w, merge1, char(1)),
-                                         merge2, char(2)))) AS n_sym_bpe
-            FROM (SELECT doc_id,
-                         array_remove(split(text, ' '), '') AS toks
-                  FROM {documents})
-            CROSS JOIN winner2
-        )
-        SELECT doc_id, n_sym_raw, n_sym_bpe,
-               round(CAST(n_sym_bpe AS DOUBLE)
-                     / CAST(greatest(n_sym_raw, CAST(1 AS BIGINT))
-                            AS DOUBLE), 6) AS compression
-        FROM counts
-    """,
-    # e5_global_token_budget twin: water-filling level from ONE agg over
-    # the #sources-row totals (quality.py round-12 form), then the
-    # per-source prefix admission
-    "e5_global_token_budget_sql": """
-        WITH ranked AS (
-            SELECT doc_id, source,
-                   aggregate(split(text, ''), CAST(0 AS BIGINT),
-                             (acc, c) -> (acc * 131 + ascii(c))
-                                         % 2147483647) % 1000000 AS h,
-                   size(filter(split(text, ' '), t -> t != ''))
-                       AS n_tokens
-            FROM {documents}
-        ), totals AS (
-            SELECT source, CAST(sum(n_tokens) AS BIGINT) AS t
-            FROM ranked GROUP BY source
-        ), sorted_t AS (
-            SELECT source, t,
-                   CAST(row_number() OVER w AS BIGINT) AS i,
-                   CAST(sum(t) OVER w AS BIGINT) AS cum,
-                   lead(t) OVER w AS t_next,
-                   CAST(count(*) OVER () AS BIGINT) AS n
-            FROM totals WINDOW w AS (ORDER BY t ASC, source ASC)
-        ), lvl AS (
-            SELECT coalesce(
-                       CASE WHEN t1 * n > 6000
-                            THEN CAST(6000 div n AS BIGINT) END,
-                       level_i, t_max) AS level
-            FROM (SELECT min(CASE WHEN i = 1 THEN t END) AS t1,
-                         max(n) AS n, max(t) AS t_max,
-                         min_by(
-                             CASE WHEN t_next IS NOT NULL
-                                   AND t_next * (n - i) > 6000 - cum
-                                   AND cum <= 6000
-                                  THEN CAST((6000 - cum) div (n - i)
-                                            AS BIGINT) END,
-                             CASE WHEN t_next IS NOT NULL
-                                   AND t_next * (n - i) > 6000 - cum
-                                   AND cum <= 6000
-                                  THEN i END) AS level_i
-                  FROM sorted_t)
-        ), caps AS (
-            SELECT /*+ BROADCAST(lvl) */ source, t,
-                   least(t, level) AS cap
-            FROM totals CROSS JOIN lvl
-        ), fit AS (
-            SELECT source, count(*) AS n_docs_kept,
-                   CAST(max(cum_tokens) AS BIGINT) AS tokens_used
-            FROM (SELECT /*+ BROADCAST(caps) */ r.source, r.cum_tokens
-                  FROM (SELECT source, doc_id, n_tokens,
-                               CAST(sum(n_tokens) OVER (
-                                   PARTITION BY source
-                                   ORDER BY h ASC, doc_id ASC)
-                                   AS BIGINT) AS cum_tokens
-                        FROM ranked) r
-                  JOIN caps ON r.source = caps.source
-                  WHERE r.cum_tokens <= caps.cap)
-            GROUP BY source
-        )
-        SELECT c.source,
-               c.t AS total_tokens,
-               CAST(c.cap AS BIGINT) AS cap,
-               c.t <= c.cap AS fully_kept,
-               coalesce(f.n_docs_kept, 0) AS n_docs_kept,
-               CAST(coalesce(f.tokens_used, 0) AS BIGINT) AS tokens_used
-        FROM caps c LEFT JOIN fit f ON c.source = f.source
-        ORDER BY c.source
     """,
     # e2_sq8_search twin: per-dimension bounds agg (two array literals,
     # 1-row broadcast), scan-local encode+RECONSTRUCT, fold ADC distance
@@ -417,168 +291,30 @@ def _spark_only_fn(name: str):
     return run
 
 
-# ---------------------------------------------------------------------------
-# Round 13 (optimization): the water-filling budget twin, restructured.
-#
-# The single-statement form re-evaluates its `ranked` CTE once per
-# reference (Spark inlines CTEs — no automatic materialization), so the
-# plan scanned documents THREE times and ran the per-character hash
-# projection on every pass (measured: 0.42 s exec, 22 Exchanges at
-# sf0.1). The allocation level, however, is a function of the per-source
-# TOTALS table — #sources rows, metadata-sized at any corpus scale
-# (guide §8: decide on a lightweight proxy, touch the heavy rows once).
-# So: one cheap tokenize-only aggregation collects the totals (the same
-# metadata-collect pattern as the IVF centroids, vecindex.py), the
-# water-filling level is computed driver-side with the IDENTICAL integer
-# arithmetic as the SQL form (sorted prefix feasibility, cross-
-# multiplied, `div`), and ONE main job runs the expensive char-hash +
-# admission window against the #sources-row caps relation inlined as a
-# VALUES literal (broadcast). Two scans instead of three, the expensive
-# projection exactly once, no BNLJ barrier. Recomputed per invocation —
-# nothing is memoized across runs.
-# ---------------------------------------------------------------------------
-
-_E5_BUDGET = 6000
-
-# Round 14 (guide §3 small-side discipline): the collect + inlined
-# VALUES literal is metadata-sized only while `source` is a bounded
-# label set. A corpus that keyed source by, say, domain (10^6-10^7
-# distinct values) would blow up both the driver collect and the SQL
-# text, so the collect is LIMIT-bounded: past this many distinct
-# sources the query falls back to the committed one-statement template
-# (_SPARK_ONLY_TEMPLATES — the degenerate-corpus path already), which
-# computes the same water-fill level entirely engine-side. 10k sources
-# ≈ a 500 KB VALUES literal — comfortably metadata-sized; the fallback
-# is pinned by tests/test_sql_twins.py.
-_E5_MAX_SOURCES = 10_000
-
-_E5_TOTALS_SQL = """
-    SELECT source, CAST(sum(n_tokens) AS BIGINT) AS t
-    FROM (SELECT source,
-                 size(array_remove(split(text, ' '), '')) AS n_tokens
-          FROM {documents})
-    GROUP BY source
-"""
-
-_E5_MAIN_SQL = """
-    WITH caps AS (
-        SELECT source, CAST(t AS BIGINT) AS t, CAST(cap AS BIGINT) AS cap
-        FROM (VALUES {caps_values}) AS v(source, t, cap)
-    ), ranked AS (
-        SELECT doc_id, source,
-               aggregate(split(text, ''), CAST(0 AS BIGINT),
-                         (acc, c) -> (acc * 131 + ascii(c))
-                                     % 2147483647) % 1000000 AS h,
-               size(array_remove(split(text, ' '), '')) AS n_tokens
-        FROM {documents}
-    ), fit AS (
-        SELECT source, count(*) AS n_docs_kept,
-               CAST(max(cum_tokens) AS BIGINT) AS tokens_used
-        FROM (SELECT /*+ BROADCAST(caps) */ r.source, r.cum_tokens
-              FROM (SELECT source, doc_id, n_tokens,
-                           CAST(sum(n_tokens) OVER (
-                               PARTITION BY source
-                               ORDER BY h ASC, doc_id ASC)
-                               AS BIGINT) AS cum_tokens
-                    FROM ranked) r
-              JOIN caps ON r.source = caps.source
-              WHERE r.cum_tokens <= caps.cap)
-        GROUP BY source
-    )
-    SELECT c.source,
-           c.t AS total_tokens,
-           CAST(c.cap AS BIGINT) AS cap,
-           c.t <= c.cap AS fully_kept,
-           coalesce(f.n_docs_kept, 0) AS n_docs_kept,
-           CAST(coalesce(f.tokens_used, 0) AS BIGINT) AS tokens_used
-    FROM caps c LEFT JOIN fit f ON c.source = f.source
-    ORDER BY c.source
-    LIMIT {n_sources}
-"""
-# ^ The LIMIT equals the exact output row count (one row per source,
-# known at build time from the collected totals), so it is a no-op on
-# the data at any scale but lets the final ORDER BY plan as
-# TakeOrderedAndProject instead of a global Sort+Exchange — one fewer
-# stage per execution (falls back to the sort automatically if a corpus
-# ever exceeded the topK threshold).
-
-
-def _e5_water_fill_level(ts: list[int], budget: int) -> int:
-    """The SQL form's level pick, verbatim in integers: ts ascending;
-    coalesce(CASE WHEN t1*n > B THEN B div n END,
-             first feasible (B - cum_i) div (n - i),
-             t_max)."""
-    n = len(ts)
-    if ts[0] * n > budget:
-        return budget // n
-    cum = 0
-    for i in range(1, n):  # t_next = ts[i] exists only for i < n
-        cum += ts[i - 1]
-        if ts[i] * (n - i) > budget - cum and cum <= budget:
-            return (budget - cum) // (n - i)
-    return ts[-1]
-
-
-def _e5_budget_fn(name: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views = scoped_views(spark, sf_dir)
-        # bounded collect (LIMIT n+1): one row past the cap proves the
-        # source set is NOT metadata-sized, without collecting it all
-        totals = (
-            spark.sql(_E5_TOTALS_SQL.format(**views))
-            .limit(_E5_MAX_SOURCES + 1)
-            .collect()
-        )
-        if not totals or len(totals) > _E5_MAX_SOURCES:
-            # degenerate empty corpus, or source cardinality beyond the
-            # VALUES-literal bound: the one-statement form
-            return spark.sql(
-                _SPARK_ONLY_TEMPLATES[name].format(**views)
-            )
-        rows = sorted((int(r["t"]), str(r["source"])) for r in totals)
-        level = _e5_water_fill_level([t for t, _ in rows], _E5_BUDGET)
-        caps_values = ", ".join(
-            "('{}', {}, {})".format(s.replace("'", "''"), t, min(t, level))
-            for t, s in rows
-        )
-        return spark.sql(
-            _E5_MAIN_SQL.format(
-                caps_values=caps_values,
-                documents=views["documents"],
-                n_sources=len(rows),
-            )
-        )
-
-    run.__name__ = name
-    return run
-
-
-def _spark_only_oracles() -> dict[str, str]:
-    # the DuckDB side of each twin is the ORIGINAL operator's oracle —
-    # identical output contract, dialect-appropriate text
-    from . import dedup, quality, textops
-    from . import pq as pqmod
-
-    return {
-        "e1_span_dedup_sql": dedup.ORACLES["e1_span_dedup"],
-        "e3_bpe_encode_sql": textops.ORACLES["e3_bpe_encode"],
-        "e5_global_token_budget_sql": quality.ORACLES[
-            "e5_global_token_budget"
-        ],
-        "e2_sq8_search_sql": pqmod.ORACLES["e2_sq8_search"],
-    }
-
-
+# The span-dedup and SQ8 texts above are Spark-only twins; BPE encoding
+# and the global token budget are served by their own operators' bodies
+# (textops, quality), under both catalog names. The DuckDB side of each
+# is the original operator's oracle — identical output contract,
+# dialect-appropriate text.
 QUERIES = {name: _spark_fn(name) for name in _TEMPLATES}
 QUERIES.update(
-    {name: _spark_only_fn(name) for name in _SPARK_ONLY_TEMPLATES}
-)
-QUERIES["e5_global_token_budget_sql"] = _e5_budget_fn(
-    "e5_global_token_budget_sql"
+    {
+        "e1_span_dedup_sql": _spark_only_fn("e1_span_dedup_sql"),
+        "e3_bpe_encode_sql": textops.e3_bpe_encode,
+        "e5_global_token_budget_sql": quality.e5_global_token_budget,
+        "e2_sq8_search_sql": _spark_only_fn("e2_sq8_search_sql"),
+    }
 )
 
 ORACLES = {
     name: template.format(**{t: t for t in TABLES})
     for name, template in _TEMPLATES.items()
 }
-ORACLES.update(_spark_only_oracles())
+ORACLES.update(
+    {
+        "e1_span_dedup_sql": dedup.ORACLES["e1_span_dedup"],
+        "e3_bpe_encode_sql": textops.ORACLES["e3_bpe_encode"],
+        "e5_global_token_budget_sql": quality.ORACLES["e5_global_token_budget"],
+        "e2_sq8_search_sql": pqmod.ORACLES["e2_sq8_search"],
+    }
+)

@@ -438,7 +438,71 @@ def e3_vocab_induction_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BPE_MARK2 = "\x02"  # round-2 merged-symbol placeholder
+# One-parse SQL body of e3_bpe_encode (it also serves the catalog name
+# e3_bpe_encode_sql): vocab-bounded merge learning (two pair aggs +
+# 1-row broadcasts) + one map-side encode projection.
+# Round 13 (optimization): tokenization drops the interpreted
+# filter-lambda — `words` explodes the raw split and filters with a
+# codegen WHERE (explode∘filter ≡ filter∘explode), `counts` uses
+# array_remove(…, '') — identical results, measured ~20% off the
+# two `words` evaluations.
+# Round 14 (optimization — share one exchange): the
+# `length(word) >= 2` filter moved INTO the words CTE. Words of
+# length 1 contribute nothing to either consumer (p1 skips them;
+# replace() never lengthens, so their post-merge segment is still
+# length 1 and p2's length(w) >= 2 drops it), but with the filter
+# only on the p1 branch the optimizer pushed it below that branch's
+# aggregation, making the two inlined words subtrees canonically
+# DIFFERENT — so the corpus-sized words aggregation executed twice.
+# With identical subtrees ReusedExchange shares the one aggregation
+# exchange: the executed plan carries ONE words scan+agg.
+_BPE_ENCODE_SQL = """
+    WITH words AS (
+        SELECT word, count(*) AS n
+        FROM (SELECT explode(split(text, ' ')) AS word
+              FROM {documents})
+        WHERE word != '' AND length(word) >= 2
+        GROUP BY word
+    ), p1 AS (
+        SELECT substring(word, i, 2) AS pair, sum(n) AS c
+        FROM (SELECT word, n,
+                     explode(sequence(1, length(word) - 1)) AS i
+              FROM words)
+        GROUP BY substring(word, i, 2)
+    ), winner AS (
+        SELECT pair AS merge1 FROM p1 ORDER BY c DESC, pair ASC LIMIT 1
+    ), seg AS (
+        SELECT /*+ BROADCAST(winner) */ n, merge1,
+               replace(word, merge1, char(1)) AS w
+        FROM words CROSS JOIN winner
+    ), p2 AS (
+        SELECT merge1, substring(w, i, 2) AS pair2, sum(n) AS c
+        FROM (SELECT n, merge1, w,
+                     explode(sequence(1, length(w) - 1)) AS i
+              FROM seg WHERE length(w) >= 2)
+        GROUP BY merge1, substring(w, i, 2)
+    ), winner2 AS (
+        SELECT merge1, pair2 AS merge2
+        FROM p2 ORDER BY c DESC, pair2 ASC LIMIT 1
+    ), counts AS (
+        SELECT /*+ BROADCAST(winner2) */ doc_id,
+               aggregate(toks, CAST(0 AS BIGINT),
+                         (a, w) -> a + length(w)) AS n_sym_raw,
+               aggregate(toks, CAST(0 AS BIGINT),
+                         (a, w) -> a + length(
+                             replace(replace(w, merge1, char(1)),
+                                     merge2, char(2)))) AS n_sym_bpe
+        FROM (SELECT doc_id,
+                     array_remove(split(text, ' '), '') AS toks
+              FROM {documents})
+        CROSS JOIN winner2
+    )
+    SELECT doc_id, n_sym_raw, n_sym_bpe,
+           round(CAST(n_sym_bpe AS DOUBLE)
+                 / CAST(greatest(n_sym_raw, CAST(1 AS BIGINT))
+                        AS DOUBLE), 6) AS compression
+    FROM counts
+"""
 
 
 def e3_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,89 +520,14 @@ def e3_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     _2round re-segmentation identity), so the whole encoder is two
     nested replaces inside one higher-order aggregate over the per-doc
     token array — pure codegen'd column algebra over the corpus scan.
-    The two learned merges ride a 1-row broadcast. Scale: the merge
+    The two learned merges ride 1-row broadcasts. Scale: the merge
     LEARNING is |vocab|-bounded (Zipf), the ENCODING is one map-side
     pass over documents with zero data-sized shuffles — the posture a
-    100 TB tokenize-and-count job needs."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = _vocab_words(docs)
-    pairs1 = words.filter(F.length("word") >= 2).select(
-        "n",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("word") - 1),
-                lambda i: F.col("word").substr(i, F.lit(2)),
-            )
-        ).alias("pair"),
-    )
-    winner1 = (
-        pairs1.groupBy("pair")
-        .agg(F.sum("n").alias("c"))
-        .orderBy(F.desc("c"), F.asc("pair"))
-        .limit(1)
-        .select(F.col("pair").alias("merge1"))
-    )
-    seg = words.crossJoin(F.broadcast(winner1)).select(
-        "n",
-        "merge1",
-        F.replace(F.col("word"), F.col("merge1"), F.lit(_BPE_MARK)).alias("w"),
-    )
-    pairs2 = seg.filter(F.length("w") >= 2).select(
-        "n",
-        "merge1",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("w") - 1),
-                lambda i: F.col("w").substr(i, F.lit(2)),
-            )
-        ).alias("pair2"),
-    )
-    winner2 = (
-        pairs2.groupBy("merge1", "pair2")
-        .agg(F.sum("n").alias("c"))
-        .orderBy(F.desc("c"), F.asc("pair2"))
-        .limit(1)
-        .select("merge1", F.col("pair2").alias("merge2"))
-    )
-    toks = F.filter(_tokens(), lambda t: t != "")
-    raw_len = F.aggregate(
-        F.col("toks"),
-        F.lit(0).cast("long"),
-        lambda acc, w: acc + F.length(w),
-    )
-    bpe_len = F.aggregate(
-        F.col("toks"),
-        F.lit(0).cast("long"),
-        lambda acc, w: acc
-        + F.length(
-            F.replace(
-                F.replace(w, F.col("merge1"), F.lit(_BPE_MARK)),
-                F.col("merge2"),
-                F.lit(_BPE_MARK2),
-            )
-        ),
-    )
-    # two-step projection: Spark does not CSE inside HOF lambdas (see
-    # _shingles), so compression derives from the materialized counts
-    counts = (
-        docs.select("doc_id", toks.alias("toks"))
-        .crossJoin(F.broadcast(winner2))
-        .select(
-            "doc_id",
-            raw_len.alias("n_sym_raw"),
-            bpe_len.alias("n_sym_bpe"),
-        )
-    )
-    return counts.select(
-        "doc_id",
-        "n_sym_raw",
-        "n_sym_bpe",
-        F.round(
-            F.col("n_sym_bpe").cast("double")
-            / F.greatest(F.col("n_sym_raw"), F.lit(1)).cast("double"),
-            6,
-        ).alias("compression"),
-    )
+    100 TB tokenize-and-count job needs. One ``spark.sql`` parse
+    (``_BPE_ENCODE_SQL``) builds the plan."""
+    from ..sources.tables import scoped_views
+
+    return spark.sql(_BPE_ENCODE_SQL.format(**scoped_views(spark, sf_dir)))
 
 
 _NROUND_MARKS = ["\x01", "\x02", "\x03", "\x04"]  # pinned-depth markers

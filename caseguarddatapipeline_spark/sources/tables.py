@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from ..session import apply_runtime_confs
@@ -175,7 +176,8 @@ def scoped_views(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     tests/test_catalog.py pins for the loader. Lets operators be written
     as ONE ``spark.sql(...)`` call: a single parse+analyze round trip
     instead of one py4j hop per DataFrame method (~10× cheaper plan
-    construction for join-heavy queries)."""
+    construction for join-heavy queries). A table absent from sf_dir
+    gets no view (a documents-only corpus still serves)."""
     warm = _WARM_CACHE["partitions"]
     key = (_session_key(spark), os.path.abspath(sf_dir), warm)
     views = _SCOPED_VIEWS.get(key)
@@ -183,8 +185,14 @@ def scoped_views(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         tag = f"{abs(hash(key)) % 10**8:08d}"
         views = {}
         for name in TABLES:
+            try:
+                df = load_table(spark, sf_dir, name)
+            except AnalysisException as e:
+                if e.getCondition() != "PATH_NOT_FOUND":
+                    raise
+                continue
             vname = f"{name}__{tag}"
-            load_table(spark, sf_dir, name).createOrReplaceTempView(vname)
+            df.createOrReplaceTempView(vname)
             views[name] = vname
         _SCOPED_VIEWS[key] = views
     return views

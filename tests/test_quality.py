@@ -14,6 +14,18 @@ from caseguarddatapipeline_spark.operators.quality import (
 )
 
 
+def _oracle_problems(sf_dir, df, oracle_name):
+    """Differences between ``df`` and the DuckDB oracle ``oracle_name``
+    over the same parquet files, compared the way tools/parity.py does."""
+    from caseguarddatapipeline_spark.operators.quality import ORACLES
+    from tools.parity import compare, oracle_connection
+
+    got = df.toPandas()
+    assert len(got) > 0
+    want = oracle_connection(sf_dir).execute(ORACLES[oracle_name]).fetchdf()
+    return compare(got, want)
+
+
 def test_gopher_rules_flags_consistent(spark, sf_dir):
     rows = e3_gopher_rules(spark, sf_dir).collect()
     assert rows
@@ -189,23 +201,18 @@ def test_global_shuffle_scaled_matches_ntile_form(spark, sf_dir):
 
 def test_zscore_scaled_matches_window_form(spark, sf_dir):
     """The histogram + tie-group-window decomposition is row-identical to
-    the per-source-window form — same z, percent rank, and ntile decile."""
+    the oracle's per-source-window form — same z, percent rank, and ntile
+    decile."""
     from caseguarddatapipeline_spark.operators.quality import (
-        e3_zscore_by_source,
         zscore_by_source_scaled,
     )
     from caseguarddatapipeline_spark.sources import load_table
 
-    base = {
-        r.doc_id: (r.z_len, r.len_pct_rank, r.len_decile)
-        for r in e3_zscore_by_source(spark, sf_dir).collect()
-    }
     docs = load_table(spark, sf_dir, "documents")
-    scaled = {
-        r.doc_id: (r.z_len, r.len_pct_rank, r.len_decile)
-        for r in zscore_by_source_scaled(docs).collect()
-    }
-    assert base == scaled
+    problems = _oracle_problems(
+        sf_dir, zscore_by_source_scaled(docs), "e3_zscore_by_source"
+    )
+    assert not problems, problems
 
 
 def test_neardup_recall_invariants(spark, sf_dir):
@@ -237,28 +244,21 @@ def test_curriculum_order_bands(spark, sf_dir):
 
 
 def test_curriculum_order_scaled_identical(spark, sf_dir):
-    """The histogram-CDF deployment form is row-identical to the faithful
-    ntile form (round-8 verdict item 2), and its plan has no data-sized
-    single-partition window: the only unpartitioned window runs over the
-    distinct-quality histogram, and in-band positions come from
-    (band, key-prefix-bucket) windows, never PARTITION BY band alone."""
+    """The histogram-CDF deployment form is row-identical to the oracle's
+    faithful ntile form (round-8 verdict item 2), and its plan has no
+    data-sized single-partition window: the only unpartitioned window
+    runs over the distinct-quality histogram, and in-band positions come
+    from (band, key-prefix-bucket) windows, never PARTITION BY band
+    alone."""
     from caseguarddatapipeline_spark.operators.quality import (
         curriculum_order_scaled,
-        e5_curriculum_order,
     )
     from caseguarddatapipeline_spark.sources import load_table
 
-    base = {
-        r.doc_id: (r.quality, r.band, r.pos_in_band)
-        for r in e5_curriculum_order(spark, sf_dir).collect()
-    }
     docs = load_table(spark, sf_dir, "documents")
     scaled_df = curriculum_order_scaled(docs)
-    scaled = {
-        r.doc_id: (r.quality, r.band, r.pos_in_band)
-        for r in scaled_df.collect()
-    }
-    assert base == scaled
+    problems = _oracle_problems(sf_dir, scaled_df, "e5_curriculum_order")
+    assert not problems, problems
     # plan guard: no window may partition the corpus by band alone — the
     # scale twin's whole point is that in-band position is bucketed by a
     # key prefix. Every windowspecdefinition partitioned on band must
@@ -380,18 +380,18 @@ def test_token_budget_sample_prefix_and_boundary(spark, tmp_path):
 
 def test_token_budget_scaled_matches_window_form(spark, sf_dir):
     """The hash-prefix-bucket decomposition is row-identical to the
-    whole-source-window form — same kept counts, token totals, hash
-    bounds, and fill ratios per source."""
+    oracle's whole-source-window form — same kept counts, token totals,
+    hash bounds, and fill ratios per source."""
     from caseguarddatapipeline_spark.operators.quality import (
-        e5_token_budget_sample,
         token_budget_sample_scaled,
     )
     from caseguarddatapipeline_spark.sources import load_table
 
-    base = sorted(map(tuple, e5_token_budget_sample(spark, sf_dir).collect()))
     docs = load_table(spark, sf_dir, "documents")
-    scaled = sorted(map(tuple, token_budget_sample_scaled(docs).collect()))
-    assert base == scaled
+    problems = _oracle_problems(
+        sf_dir, token_budget_sample_scaled(docs), "e5_token_budget_sample"
+    )
+    assert not problems, problems
 
 
 def test_token_budget_scaled_skewed_giant_source(spark):
@@ -474,17 +474,12 @@ def test_global_token_budget_waterfill_properties(spark, sf_dir):
         assert r["fully_kept"] == (r["total_tokens"] <= r["cap"])
 
 
-def test_global_token_budget_crafted_allocation(spark):
+def test_global_token_budget_crafted_allocation(spark, tmp_path):
     """Known-answer crafted corpus: totals [10, 20, 100] tokens under a
     60-token global budget water-fill to caps [10, 20, 30] (small sources
     fully kept, the crawl capped at the level); under a 25-token budget
     nobody fits fully and everyone caps at 25 div 3 = 8."""
-    import pyspark.sql.functions as F
-
     from caseguarddatapipeline_spark.operators import quality as Q
-
-    def corpus(tmp_rows):
-        return spark.createDataFrame(tmp_rows, "doc_id long, source string, text string")
 
     # one doc per source with exactly t single-char tokens
     rows = [
@@ -492,15 +487,16 @@ def test_global_token_budget_crafted_allocation(spark):
         (1, "s20", " ".join(["b"] * 20)),
         (2, "s100", " ".join(["c"] * 100)),
     ]
+    spark.createDataFrame(rows, "doc_id long, source string, text string") \
+        .coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
 
     def run(budget):
         import unittest.mock as mock
 
-        with mock.patch.object(Q, "GLOBAL_TOKEN_BUDGET", budget), mock.patch.object(
-            Q, "load_table", lambda spark_, sf_, name: corpus(rows)
-        ):
+        with mock.patch.object(Q, "GLOBAL_TOKEN_BUDGET", budget):
             return {
-                r["source"]: r for r in Q.e5_global_token_budget(spark, "ignored").collect()
+                r["source"]: r
+                for r in Q.e5_global_token_budget(spark, str(tmp_path)).collect()
             }
 
     got = run(60)

@@ -115,11 +115,8 @@ def test_sql_twins_cross_sf_isolation(spark):
 
 
 def test_sql_twin_matches_dataframe_twin(spark, sf_dir):
+    # the flagship keeps two bodies (entry() and its one-parse twin)
     for sql_name, df_name in [
-        ("q1_pricing_summary_sql", "q1_pricing_summary"),
-        ("q3_shipping_priority_sql", "q3_shipping_priority"),
-        ("q5_regional_volume_sql", "q5_regional_volume"),
-        ("q18_large_orders_sql", "q18_large_orders"),
         ("a1_reconciliation_summary_sql", "a1_reconciliation_summary"),
     ]:
         got = sorted(map(tuple, QUERIES[sql_name](spark, sf_dir).collect()))
@@ -127,18 +124,38 @@ def test_sql_twin_matches_dataframe_twin(spark, sf_dir):
         assert got == want, sql_name
 
 
+# Catalog names served by ONE body: each pair is the same function object,
+# so the two names cannot drift apart (each keeps its own oracle).
+ALIAS_PAIRS = [
+    ("q1_pricing_summary", "q1_pricing_summary_sql"),
+    ("q3_shipping_priority", "q3_shipping_priority_sql"),
+    ("q5_regional_volume", "q5_regional_volume_sql"),
+    ("q18_large_orders", "q18_large_orders_sql"),
+    ("e3_bpe_encode", "e3_bpe_encode_sql"),
+    ("e5_global_token_budget", "e5_global_token_budget_sql"),
+    ("e3_zscore_by_source", "e3_zscore_by_source_scaled"),
+    ("e5_curriculum_order", "e5_curriculum_order_scaled"),
+    ("e5_token_budget_sample", "e5_token_budget_sample_scaled"),
+]
+
+
+def test_alias_pairs_share_one_body():
+    split = [(a, b) for a, b in ALIAS_PAIRS if QUERIES[a] is not QUERIES[b]]
+    assert not split, f"names with two bodies: {split}"
+
+
 def test_e5_budget_caps_collect_is_bounded(spark, sf_dir, monkeypatch):
-    """Round-14 guard: the water-fill twin's driver-side caps collect is
-    LIMIT-bounded. Past _E5_MAX_SOURCES distinct sources it must fall
-    back to the one-statement template — same rows, no unbounded
-    collect/VALUES literal. Pinned by forcing the bound below the
-    corpus's source count and comparing against the main path."""
-    from caseguarddatapipeline_spark.operators import sql_twins
+    """Round-14 guard: the water-fill body's driver-side caps collect is
+    LIMIT-bounded. Past _GLOBAL_BUDGET_MAX_SOURCES distinct sources it
+    must fall back to the one-statement template — same rows, no
+    unbounded collect/VALUES literal. Pinned by forcing the bound below
+    the corpus's source count and comparing against the main path."""
+    from caseguarddatapipeline_spark.operators import quality
 
     q = QUERIES["e5_global_token_budget_sql"]
     main = sorted(map(tuple, q(spark, sf_dir).collect()))
     n_sources = len(main)
     assert n_sources >= 2, "fixture corpus must have several sources"
-    monkeypatch.setattr(sql_twins, "_E5_MAX_SOURCES", n_sources - 1)
+    monkeypatch.setattr(quality, "_GLOBAL_BUDGET_MAX_SOURCES", n_sources - 1)
     fallback = sorted(map(tuple, q(spark, sf_dir).collect()))
     assert fallback == main

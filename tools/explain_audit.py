@@ -49,11 +49,11 @@ def main() -> int:
         "a32_psi_drift",
         # round-6 additions: the two-round BPE induction (1-row broadcast
         # winner + replace re-segmentation) and the skew-proof token-budget
-        # twin (hash-prefix buckets: tiny offset window + bucket-local
-        # cumsum, no whole-source window task)
+        # body (hash-prefix buckets: tiny offset window + bucket-local
+        # cumsum, no whole-source window task). The global token budget's
+        # plan is its bench name's, e5_global_token_budget_sql.
         "e3_vocab_induction_2round",
         "e5_token_budget_sample_scaled",
-        "e5_global_token_budget",
         "e2_ivfpq_residual_1round",
         # the materialized postings store's search face: the scan must
         # show PartitionFilters on cell (static pruning to probed cells)
@@ -92,12 +92,9 @@ def main() -> int:
         "e5_curriculum_order_scaled",
         # bucketed storage layout: the scan must show Bucketed: true and
         # the per-key agg + co-bucketed join must have NO shuffle
-        # exchange (only the final o_orderstatus groupBy shuffles)
+        # exchange (only the final o_orderstatus groupBy shuffles). BPE
+        # encoding's plan is its bench name's, e3_bpe_encode_sql.
         "s15_bucketed_colocation",
-        # BPE encoding: merge learning is |vocab|-bounded (two groupBy
-        # shuffles + 1-row broadcasts); the per-document encode itself
-        # must be one map-side projection over the corpus scan
-        "e3_bpe_encode",
         # round-10 additions: byte-real multimodal decode — each must be
         # a binaryFile scan feeding ONE ArrowEvalPython/mapInPandas stage
         # with no shuffle before the kernel; the N-round BPE encode must

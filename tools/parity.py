@@ -71,16 +71,23 @@ def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
     return problems
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
-    queries, oracles = build_catalog()
-    spark = get_spark("parity")
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table file in ``sf_dir`` —
+    the names every oracle reads."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
+    return con
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    only = set(sys.argv[2:])
+    queries, oracles = build_catalog()
+    spark = get_spark("parity")
+    con = oracle_connection(sf_dir)
     n_pass = n_fail = n_rows_only = 0
     for name, fn in queries.items():
         if only and name not in only:
