@@ -77,6 +77,17 @@ _PINNED = [
     "e3_zscore_by_source",
     "e5_curriculum_order",
     "e5_token_budget_sample",
+    # one MinHash kernel, one LSH tail, one span-dedup body, one SQ8
+    # ranking: each name below now executes a changed body
+    "e1_minhash_lsh",
+    "e1_minhash_lsh_vectorized",
+    "e1_span_dedup",
+    "e2_sq8_search",
+    "e2_sq8_refine_search",
+    "e2_sq8_recall",
+    "e5_dedup_report",
+    "e5_corpus_curation",
+    "e5_curation_funnel",
 ]
 
 

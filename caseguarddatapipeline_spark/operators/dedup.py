@@ -24,8 +24,9 @@ token hashing uses the portable char polynomial (identical int64 results
 in Spark and DuckDB), shingle/signature/band arithmetic is pure integer
 math, so candidate pairs, jaccard values, fingerprints, and hamming
 distances all hash-match the independent engine. (FIXTURES.md §D forbids
-engine-specific hash oracles — xxhash64 remains only in the optional
-``hashed=False`` signature path and the a17 salt, neither oracle-facing.)
+engine-specific hash oracles — xxhash64 appears only where its value never
+reaches an output: the optional ``hashed=False`` signature path, identity
+keys such as the span-dedup key and shingle ids, and the a17 salt.)
 """
 
 from __future__ import annotations
@@ -220,8 +221,42 @@ def _pair_jaccard(sh_a, sh_b):
     )
 
 
+# The LSH tail as ONE spark.sql parse (~15 ms) instead of a DataFrame
+# chain whose nested higher-order lambdas cost ~170 ms of py4j expression
+# construction per build. DISTINCT ≡ dropDuplicates(doc_a, doc_b) here:
+# jaccard is a function of the pair.
+_BAND_PAIRS_SQL = f"""
+    SELECT DISTINCT p.doc_a, p.doc_b, p.jaccard
+    FROM (
+      SELECT explode(flatten(transform(members, (m, i) ->
+                 transform(slice(members, i + 2, size(members)), m2 ->
+                     named_struct(
+                         'doc_a', m.doc_id,
+                         'doc_b', m2.doc_id,
+                         'jaccard',
+                         round(CAST(size(array_intersect(
+                                   m.shingles, m2.shingles)) AS DOUBLE)
+                               / size(array_union(
+                                     m.shingles, m2.shingles)),
+                               6)))))) AS p
+      FROM (
+        SELECT band, band_sig,
+               sort_array(collect_list(struct(doc_id, shingles)))
+                   AS members
+        FROM (SELECT doc_id, shingles, band, band_sig,
+                     row_number() OVER (PARTITION BY band, band_sig
+                                        ORDER BY doc_id) AS rn
+              FROM {{banded}})
+        WHERE rn <= {_BUCKET_CAP}
+        GROUP BY band, band_sig
+      )
+      WHERE size(members) >= 2
+    )
+"""
+
+
 def _band_pairs(banded: DataFrame, dedup_pairs: bool = True) -> DataFrame:
-    """Shared LSH tail: one shuffle on the (band, band_sig) bucket key,
+    """The LSH tail: one shuffle on the (band, band_sig) bucket key,
     then in-bucket pair expansion — signatures and shingles are computed
     ONCE upstream. Input columns: doc_id, shingles, band, band_sig.
 
@@ -247,118 +282,25 @@ def _band_pairs(banded: DataFrame, dedup_pairs: bool = True) -> DataFrame:
     regression (bounded output, no unbounded task, near-dup neighbours
     of capped members still surface).
 
-    ``dedup_pairs=False`` skips the final (doc_a, doc_b) dropDuplicates
-    shuffle for callers whose downstream op subsumes it (e.g. curation's
+    ``dedup_pairs=False`` drops the final DISTINCT (its shuffle) for
+    callers whose downstream op subsumes it (e.g. curation's
     ``distinct`` over doc_b alone)."""
-    w = Window.partitionBy("band", "band_sig").orderBy("doc_id")
-    capped = (
-        banded.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _BUCKET_CAP)
-        .drop("rn")
-    )
-
-    members = F.col("members")
-    pairs = F.flatten(
-        F.transform(
-            members,
-            lambda m, i: F.transform(
-                F.slice(members, i + 2, F.size(members)),
-                lambda m2: F.struct(
-                    m["doc_id"].alias("doc_a"),
-                    m2["doc_id"].alias("doc_b"),
-                    _pair_jaccard(m["shingles"], m2["shingles"]).alias("jaccard"),
-                ),
-            ),
-        )
-    )
-    out = (
-        capped.groupBy("band", "band_sig")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "shingles"))
-            ).alias("members")
-        )
-        .filter(F.size("members") >= 2)
-        .select(F.explode(pairs).alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.jaccard")
-    )
-    return out.dropDuplicates(["doc_a", "doc_b"]) if dedup_pairs else out
-
-
-def _banded_hof(docs: DataFrame) -> DataFrame:
-    """HOF-expression banded-signature builder: (doc_id, text) →
-    (doc_id, shingles, band, band_sig). The portable integer pipeline
-    (char-polynomial token hash → combined shingle hash → 16-perm minhash
-    → 4 band signatures) as pure column expressions; shared by
-    e1_minhash_lsh and the corpus-curation pipeline."""
-    docs = (
-        docs.select("doc_id", F.split(F.col("text"), " ").alias("toks0"))
-        .select("doc_id", F.filter("toks0", lambda t: t != "").alias("toks"))
-        # sub-shingle-width docs have NO shingle set: without this filter
-        # their single out-of-bounds window hashes to NULL, every such doc
-        # band-matches every other, and the verify stage scores
-        # [NULL]∩[NULL] as jaccard 1.0 — "one two" ≡ "x"
-        .filter(F.size("toks") >= 3)
-        .select(
-            "doc_id", F.transform("toks", _portable_token_hash).alias("th")
-        )
-        .select(
-            "doc_id", _shingle_hashes_from_token_hashes(F.col("th")).alias("shingles")
-        )
-        .withColumn("sig", _minhash_signature(F.col("shingles"), hashed=True))
-    )
-    rows_per_band = N_MINHASH // LSH_BANDS
-    return docs.select(
-        "doc_id",
-        "shingles",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":",
-                        *[
-                            F.element_at(F.col("sig"), b * rows_per_band + r + 1)
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(LSH_BANDS)
-                ]
-            )
-        ).alias("band", "band_sig"),
-    )
-
-
-def e1_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup candidates, verified with true Jaccard.
-
-    token char-polynomial hash → combined shingle hash → 16-perm minhash
-    signature → 4 bands of 4 → band-bucket equi-join → candidate pairs →
-    exact Jaccard verify. Every stage is integer arithmetic both engines
-    compute identically, so the whole LSH pipeline — candidate pairs AND
-    their jaccard values — hash-matches the DuckDB oracle.
-    """
-    # The source may be a single small parquet split while the per-row work
-    # is CPU-heavy — spread it across all cores before computing
-    # signatures. At real scale the scan is already multi-partition and
-    # AQE coalesces any excess.
-    par = spark.sparkContext.defaultParallelism
-    docs = _spread(
-        load_table(spark, sf_dir, "documents"), par, "doc_id"
-    ).select("doc_id", "text")
-    return _band_pairs(_banded_hof(docs))
+    text = _BAND_PAIRS_SQL
+    if not dedup_pairs:
+        text = text.replace("SELECT DISTINCT", "SELECT", 1)
+    return banded.sparkSession.sql(text, banded=banded)
 
 
 def _banded_vectorized(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """Arrow-vectorized twin of ``_banded_hof``: (doc_id, text) →
-    (doc_id, shingles, band, band_sig). The per-document signature
-    kernel (char-polynomial token hash → combined shingle hash → 16-perm
+    """The MinHash signature kernel: (doc_id, text) →
+    (doc_id, shingles, band, band_sig). The portable integer pipeline
+    (char-polynomial token hash → combined shingle hash → 16-perm
     minhash → 4 band signatures) runs in numpy over Arrow batches via
-    mapInPandas — identical integer arithmetic, so callers share the HOF
-    form's DuckDB oracles. The HOF interpreter pays per character per
-    expression node; here the per-token loop is Python but the
-    shingle/signature math is one (shingles × 16) numpy broadcast per
-    doc. Docs with < n tokens are excluded at admission, exactly like the
-    HOF form and the streaming gate — they have no shingle set."""
+    mapInPandas — the same integer arithmetic as the HOF column
+    functions (``_portable_token_hash``, ``_shingle_hashes_from_token_hashes``,
+    ``_minhash_signature``) and the DuckDB oracles. Docs with < 3 tokens
+    are excluded at admission, like the oracles and the streaming gate —
+    they have no shingle set."""
     import numpy as np  # local: keep module import-safe without numpy
     import pandas as pd
 
@@ -372,9 +314,9 @@ def _banded_vectorized(spark: SparkSession, docs: DataFrame) -> DataFrame:
         int(spark.conf.get("spark.sql.shuffle.partitions")),
         min(8, spark.sparkContext.defaultParallelism),
     )
-    # same sub-shingle-width admission as _banded_hof (JVM-side, before
-    # the Python stage): a < 3-token doc has no shingle set — the numpy
-    # kernel would also crash batching its ragged empty rows to Arrow
+    # sub-shingle-width admission, JVM-side before the Python stage: a
+    # < 3-token doc has no shingle set, so every doc reaching the kernel
+    # has at least one trigram (its reduceat segment is never empty)
     docs = (
         _spread(docs, par, "doc_id")
         .select("doc_id", "text")
@@ -387,44 +329,6 @@ def _banded_vectorized(spark: SparkSession, docs: DataFrame) -> DataFrame:
     B = np.array([7919 * (i + 1) for i in range(N_MINHASH)], dtype=np.int64)
     rows_per_band = N_MINHASH // LSH_BANDS
 
-    def _perdoc(pdf):
-        # Row-at-a-time fallback (non-ASCII batches / degenerate docs):
-        # the original kernel, kept bit-identical to the HOF oracle.
-        doc_ids, bands, band_sigs, shingle_sets = [], [], [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            th = np.array(
-                [_py_token_hash(t) for t in (text or "").split(" ") if t],
-                dtype=np.int64,
-            )
-            if len(th) < 3:
-                # no trigram shingle exists: emit NO signature rows (the
-                # doc can never band-match) instead of letting min() over
-                # an empty array crash the whole job — reachable when a
-                # raw-split token count upstream includes empty strings
-                # this kernel filters out
-                continue
-            sh = np.unique(((th[:-2] * 131 + th[1:-1]) * 131 + th[2:]) % M)
-            sig = ((sh[:, None] * A[None, :] + B[None, :]) % M).min(axis=0)
-            sh_list = sh.astype(np.int32).tolist()
-            for b in range(LSH_BANDS):
-                doc_ids.append(doc_id)
-                bands.append(b)
-                band_sigs.append(
-                    ":".join(
-                        str(v)
-                        for v in sig[b * rows_per_band:(b + 1) * rows_per_band]
-                    )
-                )
-                shingle_sets.append(sh_list)
-        return pd.DataFrame(
-            {
-                "doc_id": doc_ids,
-                "band": bands,
-                "band_sig": band_sigs,
-                "shingles": shingle_sets,
-            }
-        )
-
     def kernel(batches):
         # Emitting the 4 banded rows directly from Python measured
         # FASTER than emitting one row per doc + JVM-side posexplode:
@@ -432,29 +336,28 @@ def _banded_vectorized(spark: SparkSession, docs: DataFrame) -> DataFrame:
         # extra generate stage only added pipeline overhead.
         #
         # The whole batch is hashed as ONE flat numpy problem (no
-        # per-document Python loop): token char-codes become a flat
-        # byte array hashed by a masked Horner recurrence (max-token-
-        # length iterations, each a vectorized step over every token in
-        # the batch); trigram shingles are one shifted-multiply over the
-        # flat token-hash array with a doc-boundary mask; per-doc sorted
-        # uniques come from one lexsort; the 16-perm signature is
-        # minimum.reduceat per permutation. Same integer arithmetic as
-        # the per-doc form ⇒ same oracle. Measured ~4× over the per-doc
-        # loop at sf0.1 (386→~90 ms kernel time).
+        # per-document Python loop): token code points (utf-32-le, the
+        # value Spark's ascii() and DuckDB's ascii() return per
+        # character) become a flat int array hashed by a masked Horner
+        # recurrence (max-token-length iterations, each a vectorized
+        # step over every token in the batch); trigram shingles are one
+        # shifted-multiply over the flat token-hash array with a
+        # doc-boundary mask; per-doc sorted uniques come from one
+        # lexsort; the 16-perm signature is minimum.reduceat per
+        # permutation. Measured ~4× over a per-doc loop at sf0.1
+        # (386→~90 ms kernel time).
         for pdf in batches:
             n_docs = len(pdf)
+            if n_docs == 0:
+                continue
             tok_lists = [
                 [t for t in tx.split(" ") if t] for tx in pdf["text"]
             ]
             all_toks = [t for toks in tok_lists for t in toks]
             ntok = np.array([len(toks) for toks in tok_lists], dtype=np.int64)
-            joined = "".join(all_toks)
-            if n_docs == 0 or not joined.isascii() or ntok.min() < 3:
-                yield _perdoc(pdf)
-                continue
             lens = np.array([len(t) for t in all_toks], dtype=np.int64)
             codes = np.frombuffer(
-                joined.encode("ascii"), dtype=np.uint8
+                "".join(all_toks).encode("utf-32-le"), dtype=np.uint32
             ).astype(np.int64)
             starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
             th = np.zeros(len(all_toks), dtype=np.int64)
@@ -510,59 +413,18 @@ def _banded_vectorized(spark: SparkSession, docs: DataFrame) -> DataFrame:
     )
 
 
-# SQL text of the _band_pairs tail (round-13 optimization): the
-# DataFrame form of the tail costs ~170 ms of py4j expression
-# construction PER BUILD (nested higher-order lambdas are the expensive
-# hops) — a third of the query's serving latency. This is the identical
-# algebra — cap window, sorted collect_list, in-bucket pair expansion,
-# exact-jaccard verify, pair dedup (DISTINCT ≡ dropDuplicates here:
-# jaccard is a function of the pair) — parsed in ONE spark.sql round
-# trip (~15 ms). _band_pairs stays as the shared composable tail for
-# the HOF form and curation callers.
-_BAND_PAIRS_SQL = f"""
-    SELECT DISTINCT p.doc_a, p.doc_b, p.jaccard
-    FROM (
-      SELECT explode(flatten(transform(members, (m, i) ->
-                 transform(slice(members, i + 2, size(members)), m2 ->
-                     named_struct(
-                         'doc_a', m.doc_id,
-                         'doc_b', m2.doc_id,
-                         'jaccard',
-                         round(CAST(size(array_intersect(
-                                   m.shingles, m2.shingles)) AS DOUBLE)
-                               / size(array_union(
-                                     m.shingles, m2.shingles)),
-                               6)))))) AS p
-      FROM (
-        SELECT band, band_sig,
-               sort_array(collect_list(struct(doc_id, shingles)))
-                   AS members
-        FROM (SELECT doc_id, shingles, band, band_sig,
-                     row_number() OVER (PARTITION BY band, band_sig
-                                        ORDER BY doc_id) AS rn
-              FROM {{v}})
-        WHERE rn <= {_BUCKET_CAP}
-        GROUP BY band, band_sig
-      )
-      WHERE size(members) >= 2
-    )
-"""
+def e1_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash+LSH near-dup candidates, verified with true Jaccard.
 
-
-def e1_minhash_lsh_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH with the Arrow-vectorized signature kernel
-    (``_banded_vectorized``) and the band-bucket verify tail —
-    same results and oracle as e1_minhash_lsh, ~25% faster at sf0.1 and
-    widening with document length. The tail is served via the
-    single-parse ``_BAND_PAIRS_SQL`` twin of ``_band_pairs``."""
+    token char-polynomial hash → combined shingle hash → 16-perm minhash
+    signature → 4 bands of 4 (``_banded_vectorized``) → band-bucket
+    pair expansion → exact Jaccard verify (``_band_pairs``). Every stage
+    is integer arithmetic both engines compute identically, so the whole
+    LSH pipeline — candidate pairs AND their jaccard values —
+    hash-matches the DuckDB oracle. Served under both catalog names
+    (``e1_minhash_lsh`` and ``e1_minhash_lsh_vectorized``)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    banded = _banded_vectorized(spark, docs)
-    from .similarity import _session_key
-
-    tag = f"{abs(hash((_session_key(spark), sf_dir))) % 10**8:08d}"
-    vname = f"e1mh_banded__{tag}"
-    banded.createOrReplaceTempView(vname)
-    return spark.sql(_BAND_PAIRS_SQL.format(v=vname))
+    return _band_pairs(_banded_vectorized(spark, docs))
 
 
 def _py_token_hash(t: str) -> int:
@@ -1317,6 +1179,44 @@ def prefix_filter_pairs(docs: DataFrame) -> DataFrame:
 
 SPAN_N = 8  # tokens per span; Lee et al. 2022 use 50-token spans at corpus scale
 
+# The span-duplication profile as one spark.sql parse. Span keys are a
+# 128-bit two-seed xxhash64 pair over the token slice, carried as two
+# flat long columns. The key feeds only the duplicate-count equality,
+# never an output value, and tokens contain no spaces, so the token-slice
+# key identifies the same spans as the oracle's md5 over the joined
+# string. A single 64-bit key has birthday-collision expectation ≫ 1 at
+# the declared 100 TB envelope (~10^11 spans), and a collision silently
+# merges distinct spans into one duplicate group; the pair pushes that
+# expectation below ~10^-4. Measured on the isolated query: a token-slice
+# hash instead of md5 over the joined string 0.38 → 0.28 s (no per-span
+# digest and hex string, a narrower shuffle key); the 128-bit pair over
+# a 64-bit key +15% (0.26 → 0.30 s at sf0.1); a struct-valued key
+# instead of two flat columns +55%. array_remove(…, '') replaces an
+# interpreted filter lambda (same result, ~15% cheaper).
+_SPAN_DEDUP_SQL = f"""
+        WITH spans AS (
+            SELECT doc_id, xxhash64(sp) AS h1, xxhash64(8191L, sp) AS h2
+            FROM (SELECT doc_id, toks FROM
+                    (SELECT doc_id,
+                            array_remove(split(text, ' '), '') AS toks
+                     FROM {{documents}})
+                  WHERE size(toks) >= {SPAN_N})
+            LATERAL VIEW explode(array_distinct(transform(
+                sequence(1, size(toks) - {SPAN_N - 1}),
+                i -> slice(toks, i, {SPAN_N}))))
+                t AS sp
+        ), tagged AS (
+            SELECT doc_id, count(*) OVER (PARTITION BY h1, h2) AS n_docs
+            FROM spans
+        )
+        SELECT doc_id,
+               count(*) AS n_spans,
+               count(CASE WHEN n_docs >= 2 THEN 1 END) AS n_dup_spans,
+               round(CAST(count(CASE WHEN n_docs >= 2 THEN 1 END) AS DOUBLE)
+                     / count(*), 6) AS dup_span_fraction
+        FROM tagged GROUP BY doc_id
+"""
+
 
 def e1_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPAN-level (substring) duplication profile — the fourth granularity
@@ -1333,8 +1233,8 @@ def e1_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     that whole-doc similarity dilutes below threshold.
 
     Scale shape: span TEXT never crosses a shuffle — documents fan out to
-    (doc_id, md5) pairs map-side, and the expensive span stream is
-    computed ONCE: a count-over-hash window tags each span with its
+    (doc_id, key) pairs map-side, and the expensive span stream is
+    computed ONCE: a count-over-key window tags each span with its
     document frequency in the same pass that carries it to the per-doc
     aggregate, so there is no posting-list self-join re-deriving the
     stream (the join form recomputes span generation per side — measured
@@ -1343,14 +1243,20 @@ def e1_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     128-bit keys; no pairwise stage anywhere. The suffix-array
     construction of the paper needs a global sort; the posting-list form
     trades its byte-exact span boundaries for pure shuffle-parallelism at
-    fixed span length."""
-    return span_duplication_profile(load_table(spark, sf_dir, "documents"))
+    fixed span length. Served under both catalog names (``e1_span_dedup``
+    and ``e1_span_dedup_sql``) over the scoped temp views."""
+    from ..sources.tables import scoped_views
+
+    v = scoped_views(spark, sf_dir)
+    return spark.sql(_SPAN_DEDUP_SQL.format(documents=v["documents"]))
 
 
 def _span_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, h) stream of per-document DISTINCT ``SPAN_N``-token span
     hashes (md5) — docs shorter than ``SPAN_N`` tokens contribute no rows.
-    Shared by the batch profile and the streaming span-dedup index."""
+    The streaming span-dedup index's key; md5 is its persisted key
+    format (the batch profile keys spans by ``_SPAN_DEDUP_SQL``'s
+    two-seed xxhash64 pair)."""
     toks = docs.select(
         "doc_id",
         F.filter(F.split(F.col("text"), " "), lambda t: t != "").alias("toks"),
@@ -1371,29 +1277,10 @@ def _span_hashes(docs: DataFrame) -> DataFrame:
 
 
 def span_duplication_profile(docs: DataFrame) -> DataFrame:
-    """DataFrame-level body of ``e1_span_dedup`` (docs needs doc_id,
-    text) — shared with the scale-stress probe, which runs it on an
-    n×-replicated corpus."""
-    spans = _span_hashes(docs)
-    # (doc_id, h) is distinct per doc, so the per-hash window count IS the
-    # distinct-document frequency of the span
-    n_docs = F.count(F.lit(1)).over(Window.partitionBy("h"))
-    return (
-        spans.withColumn("n_docs", n_docs)
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.count(F.when(F.col("n_docs") >= 2, 1)).alias("n_dup_spans"),
-        )
-        .select(
-            "doc_id",
-            "n_spans",
-            "n_dup_spans",
-            F.round(
-                F.col("n_dup_spans").cast("double") / F.col("n_spans"), 6
-            ).alias("dup_span_fraction"),
-        )
-    )
+    """``e1_span_dedup``'s query text over any (doc_id, text) frame —
+    shared with e5_dedup_report and the scale-stress probe, which runs
+    it on an n×-replicated corpus."""
+    return docs.sparkSession.sql(_SPAN_DEDUP_SQL, documents=docs)
 
 
 def e1_span_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1726,7 +1613,7 @@ QUERIES = {
     "e1_dedup_stats": e1_dedup_stats,
     "e1_ngram_jaccard": e1_ngram_jaccard,
     "e1_minhash_lsh": e1_minhash_lsh,
-    "e1_minhash_lsh_vectorized": e1_minhash_lsh_vectorized,
+    "e1_minhash_lsh_vectorized": e1_minhash_lsh,
     "e1_simhash": e1_simhash,
     "e1_dedup_clusters": e1_dedup_clusters,
 }

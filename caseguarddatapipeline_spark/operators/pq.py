@@ -546,69 +546,81 @@ def e2_sq8_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cell bounds and its own measured recall@3.
     Quantization is round-half-up on identically-associated double
     arithmetic and all fold sums run in index order, so the oracle is
-    IEEE-exact."""
+    IEEE-exact. One spark.sql parse (``_SQ8_SEARCH_SQL``) serves both
+    catalog names (``e2_sq8_search`` and ``e2_sq8_search_sql``)."""
     return _sq8_ranked(spark, sf_dir, TOPK)
+
+
+# The SQ8 ADC ranking as one spark.sql parse, at depth {topn}: the
+# per-dimension bounds agg (two array literals, 1-row broadcast), a
+# scan-local encode + RECONSTRUCT, the fold ADC distance vs the fixed
+# 5-query broadcast, per-query top-{topn}. The reconstruction depends
+# only on the corpus row, so it is computed once per corpus vector in
+# `encoded` (same per-element float op order as the oracle:
+# lo_j + CAST(code_j AS DOUBLE)·(hi_j − lo_j)/255), and the per-pair work
+# is zip_with + one fold — ~6 expression nodes per element instead of
+# ~40 when the dequantization ran inside the per-pair lambda (measured
+# 0.287 s before, see OPTIMIZATION_r13.md).
+_SQ8_SEARCH_SQL = """
+        WITH corpus AS (
+            SELECT vec_id,
+                   transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
+            FROM {embeddings}
+        ), bounds AS (
+            SELECT transform(array_sort(collect_list(struct(j, lo))),
+                             s -> s.lo) AS lo,
+                   transform(array_sort(collect_list(struct(j, hi))),
+                             s -> s.hi) AS hi
+            FROM (SELECT j, min(v) AS lo, max(v) AS hi
+                  FROM (SELECT posexplode(emb) AS (j, v) FROM corpus)
+                  GROUP BY j)
+        ), encoded AS (
+            SELECT /*+ BROADCAST(bounds) */ vec_id,
+                   transform(sequence(1, 64), j ->
+                       element_at(lo, j)
+                       + CAST(CASE WHEN element_at(hi, j)
+                                        = element_at(lo, j)
+                                   THEN 0
+                                   ELSE CAST(round((element_at(emb, j)
+                                                    - element_at(lo, j))
+                                                   / (element_at(hi, j)
+                                                      - element_at(lo, j))
+                                                   * 255.0, 0) AS INT)
+                              END AS DOUBLE)
+                         * (element_at(hi, j) - element_at(lo, j))
+                         / 255.0) AS recon
+            FROM corpus CROSS JOIN bounds
+        ), scored AS (
+            SELECT /*+ BROADCAST(q) */ q.query_id, c.vec_id,
+                   round(aggregate(
+                       zip_with(q.q_emb, c.recon,
+                                (x, y) -> (x - y) * (x - y)),
+                       CAST(0.0 AS DOUBLE), (acc, v) -> acc + v), 4)
+                       AS adist
+            FROM encoded c
+            JOIN (SELECT vec_id AS query_id, emb AS q_emb
+                  FROM corpus WHERE vec_id < 5) q
+              ON c.vec_id != q.query_id
+        )
+        SELECT query_id, vec_id, adist, rank
+        FROM (SELECT query_id, vec_id, adist,
+                     row_number() OVER (PARTITION BY query_id
+                                        ORDER BY adist ASC, vec_id ASC)
+                         AS rank
+              FROM scored)
+        WHERE rank <= {topn}
+"""
 
 
 def _sq8_ranked(spark: SparkSession, sf_dir: str, topn: int) -> DataFrame:
     """The SQ8 ADC ranking at parametric depth — ``e2_sq8_search`` takes
     the top ``TOPK``; the refine tier widens to ``REFINE_CAND``
     candidates before the exact re-rank."""
-    corpus = _corpus(spark, sf_dir)
-    dims = corpus.select(F.posexplode("emb").alias("j", "v"))
-    bounds = (
-        dims.groupBy("j")
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "lo"))),
-                lambda s: s["lo"],
-            ).alias("lo"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "hi"))),
-                lambda s: s["hi"],
-            ).alias("hi"),
-        )
-    )
-    idx = F.sequence(F.lit(1), F.lit(SQ_DIM))
-    lo, hi = F.col("lo"), F.col("hi")
+    from ..sources.tables import scoped_views
 
-    def _code(j):
-        x = F.element_at(F.col("emb"), j)
-        l, h = F.element_at(lo, j), F.element_at(hi, j)
-        return (
-            F.when(h == l, F.lit(0))
-            .otherwise(F.round((x - l) / (h - l) * 255.0, 0).cast("int"))
-        )
-
-    encoded = corpus.crossJoin(F.broadcast(bounds)).select(
-        "vec_id", "lo", "hi", F.transform(idx, _code).alias("codes")
-    )
-    queries = _pq_queries(corpus)
-
-    def _sq_term(j):
-        deq = F.element_at(lo, j) + F.element_at(F.col("codes"), j).cast(
-            "double"
-        ) * (F.element_at(hi, j) - F.element_at(lo, j)) / 255.0
-        diff = F.element_at(F.col("q_emb"), j) - deq
-        return diff * diff
-
-    adist = F.round(
-        F.aggregate(
-            F.transform(idx, _sq_term), F.lit(0.0), lambda acc, v: acc + v
-        ),
-        4,
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("vec_id")
-    )
-    return (
-        encoded.join(
-            F.broadcast(queries), F.col("vec_id") != F.col("query_id")
-        )
-        .select("query_id", "vec_id", adist.alias("adist"))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= topn)
+    v = scoped_views(spark, sf_dir)
+    return spark.sql(
+        _SQ8_SEARCH_SQL.format(embeddings=v["embeddings"], topn=topn)
     )
 
 

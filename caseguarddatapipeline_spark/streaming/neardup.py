@@ -11,9 +11,10 @@ Per batch (foreachBatch):
 1. admission: rows with NULL/short text (< 3 tokens — below the shingle
    width) divert out of the signature path instead of poisoning it; a
    malformed line must not wedge the stream on a poison batch;
-2. the Arrow-vectorized signature kernel (operators/dedup.py
-   ``_banded_vectorized`` — same integer arithmetic as the oracle-
-   checked batch operator) produces (doc_id, band, band_sig, shingles);
+2. the MinHash signature kernel (operators/dedup.py
+   ``_banded_vectorized`` — the one kernel the oracle-checked batch
+   operator e1_minhash_lsh runs) produces (doc_id, band, band_sig,
+   shingles);
 3. candidates = equi-join against the index on (band, band_sig) —
    the posting-list probe, NOT all-pairs; exact Jaccard verifies on the
    carried shingle sets and pairs ≥ the threshold land in
@@ -34,7 +35,7 @@ drops signatures past the dedup horizon.
 
 Within-batch pairs are intentionally NOT emitted here — a batch is also
 its own near-dup candidate set, and the batch operator
-(e1_minhash_lsh_vectorized) covers that; composing both per batch is
+(e1_minhash_lsh) covers that; composing both per batch is
 one extra call at the foreachBatch site.
 """
 

@@ -50,17 +50,60 @@ def test_minhash_identical_signatures(spark):
 
 
 def test_vectorized_lsh_matches_hof_form(spark):
-    """The numpy kernel must reproduce the HOF pipeline bit-for-bit:
-    same candidate pairs, same verified jaccard values."""
-    from caseguarddatapipeline_spark.operators.dedup import (
-        e1_minhash_lsh,
-        e1_minhash_lsh_vectorized,
-    )
+    """The numpy kernel must reproduce the portable integer pipeline
+    bit-for-bit: the catalog's one LSH body gives the DuckDB oracle's
+    candidate pairs and verified jaccard values."""
+    from caseguarddatapipeline_spark.catalog import build_catalog
+    from tools.parity import compare, oracle_connection
 
+    queries, oracles = build_catalog()
     sf = "/root/testdata/sf0.001"
-    got = sorted(map(tuple, e1_minhash_lsh_vectorized(spark, sf).collect()))
-    want = sorted(map(tuple, e1_minhash_lsh(spark, sf).collect()))
-    assert got == want and len(got) > 0
+    got = queries["e1_minhash_lsh"](spark, sf).toPandas()
+    want = oracle_connection(sf).execute(oracles["e1_minhash_lsh"]).fetchdf()
+    assert len(got) > 0
+    assert compare(got, want) == []
+
+
+def test_signature_kernel_reads_code_points(spark):
+    """Non-ASCII tokens (accented, CJK, emoji) hash by code point, as the
+    HOF column functions do: the kernel's shingles and band signatures
+    equal ``minhash_signature(hashed_shingles(...))``'s. 1- and 2-token
+    docs have no shingle set and yield no rows."""
+    from caseguarddatapipeline_spark import functions as CF
+    from caseguarddatapipeline_spark.operators.dedup import _banded_vectorized
+
+    rows = [
+        (0, "café naïve résumé über straße façade"),
+        (1, "数据 去重 管道 训练 语料"),
+        (2, "ship it 🚀 with 😀 and a😀b too"),
+        (3, "mixed ascii then Ωmega and 数据 again"),
+        (4, "solo"),
+        (5, "two 数据"),
+        (6, "plain ascii words only in this one"),
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    got = {
+        (r["doc_id"], r["band"]): (r["band_sig"], sorted(r["shingles"]))
+        for r in _banded_vectorized(spark, docs).collect()
+    }
+    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+    ref = (
+        docs.select("doc_id", F.transform(toks, CF.token_hash).alias("th"))
+        .select("doc_id", CF.hashed_shingles(F.col("th")).alias("sh"))
+        .select("doc_id", "sh", CF.minhash_signature(F.col("sh")).alias("sig"))
+        .collect()
+    )
+    want = {}
+    for r in ref:
+        if r["doc_id"] in (4, 5):
+            continue
+        for b in range(4):
+            want[(r["doc_id"], b)] = (
+                ":".join(str(v) for v in r["sig"][4 * b:4 * b + 4]),
+                sorted(r["sh"]),
+            )
+    assert got == want
+    assert {d for d, _ in got} == {0, 1, 2, 3, 6}
 
 
 def test_dedup_clusters_merge_chains(spark):
@@ -94,7 +137,7 @@ def test_degenerate_bucket_is_capped(spark):
     from caseguarddatapipeline_spark.operators.dedup import (
         _BUCKET_CAP,
         _band_pairs,
-        _banded_hof,
+        _banded_vectorized,
     )
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
@@ -106,7 +149,7 @@ def test_degenerate_bucket_is_capped(spark):
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     assert n_dup > _BUCKET_CAP
 
-    got = _band_pairs(_banded_hof(docs)).collect()
+    got = _band_pairs(_banded_vectorized(spark, docs)).collect()
     # bounded: nothing beyond cap-sized buckets pairs up
     assert len(got) <= _BUCKET_CAP * (_BUCKET_CAP + 1) // 2
     ident = [r for r in got if r["doc_a"] >= 2 and r["doc_b"] >= 2]

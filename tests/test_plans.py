@@ -164,16 +164,13 @@ BNLJ_BOUNDED = {
     "5-vector query set broadcast (IVF-composable at scale, see docstring)",
     "e2_sq8_search": "per-dimension bounds row (1-row broadcast) + fixed "
     "5-vector query set broadcast (same shape as e2_knn_per_query; "
-    "IVF-composable at scale, see docstring)",
+    "IVF-composable at scale, see docstring); same body as "
+    "e2_sq8_search_sql",
     "e3_ngram_lm_score": "vocabulary-size scalar (1-row broadcast)",
     "e5_mixture_epochs": "corpus totals scalar (1-row broadcast, same "
     "shape as e5_domain_mixture)",
     "e3_dsir_weights": "model totals (n_raw, n_tgt, V) scalar "
     "(1-row broadcast)",
-    "e5_dedup_report": "round 13: the per-tier (n_pairs, n_docs) stats "
-    "collapsed into one exploded-pass aggregate per tier — no scalar "
-    "crossJoins remain; entry kept for the minhash tier's bounded "
-    "1-row shapes inherited from e1_minhash_lsh",
     "e2_sq8_recall": "exact-side ground truth vs fixed 5-vector query "
     "set broadcast + the composed e2_sq8_search (same shape as "
     "e2_pq_recall)",
@@ -193,12 +190,10 @@ BNLJ_BOUNDED = {
     "fixed 5-vector query set broadcast, same shape as e2_sq8_search; the "
     "refine stage's exact re-rank joins candidate vec_ids back by equi-key "
     "point-lookup, so the only BNLJ sides are the two bounded broadcasts",
-    # round-12 one-parse SQL serving twins: same bounded-broadcast shapes
-    # as their adjudicated originals (the first two are the same body)
+    # the `_sql` catalog names: each is the same body as its operator
     "e3_bpe_encode_sql": "same body as e3_bpe_encode",
     "e5_global_token_budget_sql": "same body as e5_global_token_budget",
-    "e2_sq8_search_sql": "per-dimension bounds row (1-row broadcast) + "
-    "fixed 5-vector query set broadcast (e2_sq8_search's shape)",
+    "e2_sq8_search_sql": "same body as e2_sq8_search",
     "e5_temperature_mixture": "corpus (total, sqrt-mass) scalar "
     "(1-row broadcast, e5_domain_mixture's shape)",
     "e2_binary_search": "per-dimension midpoint row (1-row broadcast) + "
@@ -229,6 +224,25 @@ def test_no_nested_loop_or_cartesian_anywhere(spark, sf_dir):
         if bad:
             offenders[name] = bad
     assert not offenders, f"nested-loop/cartesian plans: {offenders}"
+
+
+def test_bnlj_allowlist_is_live(spark, sf_dir, monkeypatch):
+    # an allowlist entry whose query plans no BroadcastNestedLoopJoin is
+    # stale: it would wave a future quadratic plan through unreviewed
+    from caseguarddatapipeline_spark.operators import quality
+
+    # the global budget's BNLJ is in its one-statement fallback, taken
+    # past _GLOBAL_BUDGET_MAX_SOURCES sources
+    fallback_only = {"e5_global_token_budget", "e5_global_token_budget_sql"}
+    stale = []
+    for name in BNLJ_BOUNDED:
+        with monkeypatch.context() as m:
+            if name in fallback_only:
+                m.setattr(quality, "_GLOBAL_BUDGET_MAX_SOURCES", 0)
+            plan = _plan(QUERIES[name](spark, sf_dir))
+        if "BroadcastNestedLoopJoin" not in plan:
+            stale.append(name)
+    assert not stale, f"BNLJ_BOUNDED entries that plan no BNLJ: {stale}"
 
 
 def test_curation_shuffle_budget(spark, sf_dir):

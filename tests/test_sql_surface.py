@@ -136,6 +136,9 @@ ALIAS_PAIRS = [
     ("e3_zscore_by_source", "e3_zscore_by_source_scaled"),
     ("e5_curriculum_order", "e5_curriculum_order_scaled"),
     ("e5_token_budget_sample", "e5_token_budget_sample_scaled"),
+    ("e1_minhash_lsh", "e1_minhash_lsh_vectorized"),
+    ("e1_span_dedup", "e1_span_dedup_sql"),
+    ("e2_sq8_search", "e2_sq8_search_sql"),
 ]
 
 

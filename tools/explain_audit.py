@@ -40,9 +40,8 @@ def main() -> int:
         "e4_binaryfile_scan",
         "e2_hard_negatives",
         "e1_prefix_filter_join",
-        # span-level dedup (posting-list join, no pairwise stage), the
-        # shingle-containment prefix join, and BM25's inverted-index plan
-        "e1_span_dedup",
+        # the shingle-containment prefix join and BM25's inverted-index
+        # plan (span dedup's plan is its bench name's, e1_span_dedup_sql)
         "e1_containment_join",
         "e3_bm25_search",
         "e3_vocab_induction",
@@ -66,11 +65,11 @@ def main() -> int:
         # round-7 additions: winnowing postings (staged projections, all
         # array-local), the MOSS near-dup join (df-capped inverted-index
         # equi-join), bigram-LM scoring (Zipf-bounded model equi-join),
-        # SQ8 ANN (bounds broadcast + fold distance), Markov transitions
+        # Markov transitions (SQ8 ANN's plan is its bench name's,
+        # e2_sq8_search_sql)
         "e3_winnow_fingerprints",
         "e1_winnow_join",
         "e3_ngram_lm_score",
-        "e2_sq8_search",
         "w14_event_transitions",
         "e5_mixture_epochs",
         "e3_doc_entropy",

@@ -434,11 +434,12 @@ def main() -> int:
         "lsh_neardup": (lambda: _band_pairs(
             _banded_vectorized(spark, docs_n)
         ).agg(F.count(F.lit(1))), doc_rows),
-        # span-level dedup shape: sliding 8-token spans hashed and
-        # posting-list joined (e1_span_dedup) on the replicated corpus —
-        # replica siblings share text, so every span is a cross-replica
-        # duplicate and the dup-join carries the full span stream. Pure
-        # JVM codegen (split/transform/md5), two narrow-key shuffles.
+        # span-level dedup shape: sliding 8-token spans keyed by a
+        # 128-bit hash pair and counted per key (e1_span_dedup's query
+        # text) on the replicated corpus — replica siblings share text,
+        # so every span is a cross-replica duplicate and the key count
+        # carries the full span stream. Pure JVM codegen
+        # (split/transform/xxhash64), two narrow-key shuffles.
         "span_dedup": (lambda: span_duplication_profile(docs_n).agg(
             F.count(F.lit(1)), F.sum("n_dup_spans")
         ), doc_rows),
