@@ -21,10 +21,8 @@ bounding re-entry at ~7. No cohort can go stale the way the
 round-1-5 cohorts did under the manual list (rounds 1-11's swap
 history is in git: this file @ d49cd42).
 Rows-only entries can never turn a slot green, so they are permanently
-outside the window; each carries its exact evidence elsewhere
-(a16_approx_distinct_users: pytest-pinned ±rel-sd vs exact distinct by
-documented policy; e2_ivf_search: superseded by its exact-oracle
-_1round/_2round twins + the recall assertion in tests/test_similarity.py).
+outside the window; the one left (a16_approx_distinct_users) carries its
+exact evidence in pytest: ±rel-sd vs exact distinct by documented policy.
 """
 
 from __future__ import annotations

@@ -44,10 +44,28 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..sources import load_table
-from .similarity import IVF1_CENTS_SQL, _coarse_cells, _ivf1_index, _probe_list
+from .similarity import (
+    _COSINE_DESC,
+    IVF1_CENTS_SQL,
+    N_QUERIES,
+    _cent_literal,
+    _coarse_cells,
+    _dot,
+    _ivf1_index,
+    _norm,
+    _probe_list,
+    _query_set,
+    _vectors,
+)
+from .topk import topk_per_key_window
 
-M, SUBDIM, K, N_QUERIES, TOPK = 4, 16, 16, 5, 3
+M, SUBDIM, K, TOPK = 4, 16, 16, 3
 NPROBE = 4
+
+# per-query ranking order of the quantized searches: approximate distance
+# ascending, ties to the lower vec_id
+_ADIST_ASC = [("adist", False), ("vec_id", False)]
+
 
 def _w_argmin():
     return Window.partitionBy("vec_id", "m").orderBy(F.asc("d6"), F.asc("cell"))
@@ -64,18 +82,7 @@ def _l2sq(a, b):
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
-
-
-def _pq_queries(corpus: DataFrame) -> DataFrame:
-    """(query_id, q_emb): the fixed first-N_QUERIES query set every PQ
-    search family probes with."""
-    return corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
+    return _vectors(load_table(spark, sf_dir, "embeddings"))
 
 
 def _subvectors(corpus: DataFrame) -> DataFrame:
@@ -189,7 +196,7 @@ def _residual_subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     e2_ivfpq_residual_1round."""
     corpus = _corpus(spark, sf_dir)
     seeds, centroids = _ivf1_index(spark, sf_dir)
-    cent_mat = _seed_matrix_lit(centroids)
+    cent_mat = _cent_literal(centroids)
     cells = _coarse_cells(corpus, seeds, keep_emb=True)
     resid = F.zip_with(
         F.col("emb"),
@@ -293,18 +300,13 @@ def e2_pq_search_1round(spark: SparkSession, sf_dir: str) -> DataFrame:
     subs = _subvectors(_corpus(spark, sf_dir))
     cents, codes = _load_pq_index(spark, sf_dir)
     dtab = _adc_table(subs, cents)
-
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("vec_id")
-    )
-    return (
+    scored = (
         codes.join(F.broadcast(dtab), ["m", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
         .agg(F.round(F.sum("d"), 4).alias("adist"))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= TOPK)
     )
+    return topk_per_key_window(scored, ["query_id"], _ADIST_ASC, TOPK, "rank")
 
 
 def e2_ivfpq_search_1round(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,7 +331,7 @@ def e2_ivfpq_search_1round(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the single _coarse_cells/_probe_list definitions (similarity.py).
     seeds, centroids = _ivf1_index(spark, sf_dir)
     cells = _coarse_cells(corpus, seeds)
-    probes = _probe_list(_pq_queries(corpus), centroids, NPROBE).select(
+    probes = _probe_list(_query_set(corpus), centroids, NPROBE).select(
         "query_id", "probe_cell"
     )
 
@@ -337,27 +339,13 @@ def e2_ivfpq_search_1round(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(probes),
         (cells.cell == probes.probe_cell) & (cells.vec_id != probes.query_id),
     ).select("query_id", "vec_id", "cell")
-
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("vec_id")
-    )
-    return (
+    scored = (
         cand.join(codes, "vec_id")
         .join(F.broadcast(dtab), ["query_id", "m", "code"])
         .groupBy("query_id", "vec_id", "cell")
         .agg(F.round(F.sum("d"), 4).alias("adist"))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= TOPK)
     )
-
-
-def _seed_matrix_lit(seeds: list[list[float]]):
-    """16×64 literal array-of-arrays of the coarse seed vectors — index
-    metadata embedded in the plan, same posture as _cell_cosines (and
-    built the same way: one JVM-parsed SQL text, not k×dim py4j lits)."""
-    from .similarity import _cent_literal
-
-    return _cent_literal(seeds)
+    return topk_per_key_window(scored, ["query_id"], _ADIST_ASC, TOPK, "rank")
 
 
 def e2_ivfpq_residual_1round(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -387,11 +375,11 @@ def e2_ivfpq_residual_1round(spark: SparkSession, sf_dir: str) -> DataFrame:
     way."""
     corpus = _corpus(spark, sf_dir)
     seeds, centroids = _ivf1_index(spark, sf_dir)
-    cent_mat = _seed_matrix_lit(centroids)
+    cent_mat = _cent_literal(centroids)
 
     cells = _coarse_cells(corpus, seeds)
     rcents, rcodes = _load_pq_index(spark, sf_dir, residual=True)
-    probes = _probe_list(_pq_queries(corpus), centroids, NPROBE)
+    probes = _probe_list(_query_set(corpus), centroids, NPROBE)
     # per-probed-cell query residual → subvectors → ADC table
     q_resid = F.zip_with(
         F.col("q_emb"),
@@ -432,18 +420,13 @@ def e2_ivfpq_residual_1round(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("cell") == F.col("probe_cell"))
         & (F.col("vec_id") != F.col("query_id")),
     ).select("query_id", "vec_id", "cell")
-
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("vec_id")
-    )
-    return (
+    scored = (
         cand.join(rcodes, "vec_id")
         .join(F.broadcast(dtab), ["query_id", "cell", "m", "code"])
         .groupBy("query_id", "vec_id", "cell")
         .agg(F.round(F.sum("d"), 4).alias("adist"))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= TOPK)
     )
+    return topk_per_key_window(scored, ["query_id"], _ADIST_ASC, TOPK, "rank")
 
 
 def e2_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -462,29 +445,39 @@ def e2_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     far better; the point of THIS query is that the tradeoff is measured
     continuously, and a codebook regression (e.g. a broken Lloyd step)
     shows up as a recall drop the driver would catch."""
-    approx = e2_pq_search_1round(spark, sf_dir).select("query_id", "vec_id")
+    return _recall_at_k(spark, sf_dir, e2_pq_search_1round(spark, sf_dir))
+
+
+def _recall_at_k(spark: SparkSession, sf_dir: str, approx: DataFrame) -> DataFrame:
+    """Per-query recall@TOPK of an approximate search's (query_id,
+    vec_id) hits against the EXACT squared-L2 top-TOPK (6dp-rounded,
+    vec_id tie-break) over the same query set: a semi-join of the exact
+    top-k against the approximate hits, then ``n_overlap`` and
+    ``recall_at_3`` per query (0 for a query with no hit). The one body
+    behind every ``*_recall`` name."""
+    approx = approx.select("query_id", "vec_id")
     corpus = _corpus(spark, sf_dir)
-    queries = _pq_queries(corpus)
+    queries = _query_set(corpus)
     dist = F.round(_l2sq(F.col("emb"), F.col("q_emb")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("vec_id"))
-    exact = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", dist.alias("dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "vec_id")
-    )
+    exact = topk_per_key_window(
+        corpus.join(
+            F.broadcast(queries), F.col("vec_id") != F.col("query_id")
+        ).select("query_id", "vec_id", dist.alias("dist")),
+        ["query_id"],
+        [("dist", False), ("vec_id", False)],
+        TOPK,
+        "rank",
+    ).select("query_id", "vec_id")
     hits = (
         exact.join(approx, ["query_id", "vec_id"], "left_semi")
         .groupBy("query_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )
+    n_overlap = F.coalesce(F.col("n_overlap"), F.lit(0))
     return queries.select("query_id").join(hits, "query_id", "left").select(
         "query_id",
-        F.coalesce(F.col("n_overlap"), F.lit(0)).alias("n_overlap"),
-        F.round(F.coalesce(F.col("n_overlap"), F.lit(0)) / float(TOPK), 4).alias(
-            "recall_at_3"
-        ),
+        n_overlap.alias("n_overlap"),
+        F.round(n_overlap / float(TOPK), 4).alias("recall_at_3"),
     )
 
 
@@ -497,30 +490,7 @@ def e2_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking — a drop in this number flags a quantization regression
     (bounds drift, rounding change) the adist-vs-exact epsilon test
     can't localize to ordering."""
-    approx = e2_sq8_search(spark, sf_dir).select("query_id", "vec_id")
-    corpus = _corpus(spark, sf_dir)
-    queries = _pq_queries(corpus)
-    dist = F.round(_l2sq(F.col("emb"), F.col("q_emb")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("vec_id"))
-    exact = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", dist.alias("dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "vec_id")
-    )
-    hits = (
-        exact.join(approx, ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    return queries.select("query_id").join(hits, "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n_overlap"), F.lit(0)).alias("n_overlap"),
-        F.round(F.coalesce(F.col("n_overlap"), F.lit(0)) / float(TOPK), 4).alias(
-            "recall_at_3"
-        ),
-    )
+    return _recall_at_k(spark, sf_dir, e2_sq8_search(spark, sf_dir))
 
 
 SQ_DIM = 64  # embeddings width (matches M * SUBDIM)
@@ -642,28 +612,22 @@ def e2_sq8_refine_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus table, never a scan. Reference analog: Pinecone queries
     return approximate matches that process_case.py re-reads at full
     precision (etl/flows/process_case.py:292-318)."""
-    from .similarity import _dot, _norm
-
     cand = _sq8_ranked(spark, sf_dir, REFINE_CAND).select(
         "query_id", "vec_id", "adist"
     )
     corpus = _corpus(spark, sf_dir)
-    queries = _pq_queries(corpus)
+    queries = _query_set(corpus)
     cosine = F.round(
         _dot(F.col("emb"), F.col("q_emb"))
         / (_norm(F.col("emb")) * _norm(F.col("q_emb"))),
         4,
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
+    refined = (
         cand.join(corpus, "vec_id")
         .join(F.broadcast(queries), "query_id")
         .select("query_id", "vec_id", "adist", cosine.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= TOPK)
     )
+    return topk_per_key_window(refined, ["query_id"], _COSINE_DESC, TOPK, "rank")
 
 
 def _binary_mids(corpus: DataFrame) -> DataFrame:
@@ -719,14 +683,11 @@ def binary_topk(
     hamming = (
         F.bit_count(F.expr("w_lo ^ q_lo")) + F.bit_count(F.expr("w_hi ^ q_hi"))
     ).cast("int")
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("vec_id")
-    )
-    return (
-        coded.join(F.broadcast(qcodes), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", hamming.alias("hamming"))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= topn)
+    scored = coded.join(
+        F.broadcast(qcodes), F.col("vec_id") != F.col("query_id")
+    ).select("query_id", "vec_id", hamming.alias("hamming"))
+    return topk_per_key_window(
+        scored, ["query_id"], [("hamming", False), ("vec_id", False)], topn, "rank"
     )
 
 
@@ -761,30 +722,7 @@ def e2_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest pin (tests/test_similarity.py) guards the
     binarizer/packing seam: a sign-flip or word-packing regression
     collapses recall to the random baseline."""
-    approx = e2_binary_search(spark, sf_dir).select("query_id", "vec_id")
-    corpus = _corpus(spark, sf_dir)
-    queries = _pq_queries(corpus)
-    dist = F.round(_l2sq(F.col("emb"), F.col("q_emb")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("vec_id"))
-    exact = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", dist.alias("dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "vec_id")
-    )
-    hits = (
-        exact.join(approx, ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    return queries.select("query_id").join(hits, "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n_overlap"), F.lit(0)).alias("n_overlap"),
-        F.round(
-            F.coalesce(F.col("n_overlap"), F.lit(0)) / float(TOPK), 4
-        ).alias("recall_at_3"),
-    )
+    return _recall_at_k(spark, sf_dir, e2_binary_search(spark, sf_dir))
 
 
 def e2_ivfsq8_search_1round(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -846,7 +784,7 @@ def e2_ivfsq8_search_1round(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = cells.join(F.broadcast(cell_bounds), "cell").select(
         "vec_id", "cell", "lo", "hi", F.transform(idx, _code).alias("codes")
     )
-    probes = _probe_list(_pq_queries(corpus), centroids, NPROBE)
+    probes = _probe_list(_query_set(corpus), centroids, NPROBE)
 
     def _sq_term(j):
         deq = F.element_at(lo, j) + F.element_at(F.col("codes"), j).cast(
@@ -861,19 +799,12 @@ def e2_ivfsq8_search_1round(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         4,
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("vec_id")
-    )
-    return (
-        encoded.join(
-            F.broadcast(probes),
-            (F.col("cell") == F.col("probe_cell"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", "vec_id", "cell", adist.alias("adist"))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= TOPK)
-    )
+    scored = encoded.join(
+        F.broadcast(probes),
+        (F.col("cell") == F.col("probe_cell"))
+        & (F.col("vec_id") != F.col("query_id")),
+    ).select("query_id", "vec_id", "cell", adist.alias("adist"))
+    return topk_per_key_window(scored, ["query_id"], _ADIST_ASC, TOPK, "rank")
 
 
 def e2_ivfsq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -883,32 +814,7 @@ def e2_ivfsq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall number is a claim, not a component). Captures BOTH loss
     sources at once: coarse-probe misses (candidates outside the nprobe
     cells) and per-cell 8-bit quantization error."""
-    approx = e2_ivfsq8_search_1round(spark, sf_dir).select(
-        "query_id", "vec_id"
-    )
-    corpus = _corpus(spark, sf_dir)
-    queries = _pq_queries(corpus)
-    dist = F.round(_l2sq(F.col("emb"), F.col("q_emb")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("vec_id"))
-    exact = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", dist.alias("dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "vec_id")
-    )
-    hits = (
-        exact.join(approx, ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    return queries.select("query_id").join(hits, "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n_overlap"), F.lit(0)).alias("n_overlap"),
-        F.round(F.coalesce(F.col("n_overlap"), F.lit(0)) / float(TOPK), 4).alias(
-            "recall_at_3"
-        ),
-    )
+    return _recall_at_k(spark, sf_dir, e2_ivfsq8_search_1round(spark, sf_dir))
 
 
 QUERIES = {

@@ -28,6 +28,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..sources import load_table
 from ..sources.tables import _data_size, _session_key
+from .topk import topk_per_key_window
 
 
 def _round_half_up(x, decimals):
@@ -77,6 +78,51 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
+# The fixed query set every E2 search probes with: the first N_QUERIES
+# corpus vectors (the oracles spell it `vec_id < 5`).
+N_QUERIES = 5
+
+# per-query ranking order of the exact-cosine searches: ties to lower vec_id
+_COSINE_DESC = [("cosine", True), ("vec_id", False)]
+
+
+def _vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, emb): the embeddings table with every vector cast to
+    double — the corpus shape each E2 stage scores."""
+    return emb.select("vec_id", _dbl(F.col("embedding")).alias("emb"))
+
+
+def _query_set(corpus: DataFrame) -> DataFrame:
+    """(query_id, q_emb): the fixed first-``N_QUERIES`` query set, taken
+    from a (vec_id, emb) corpus — the one definition every E2 search
+    (exact, IVF, PQ, SQ8, postings store) and recall check probes with."""
+    return corpus.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
+    )
+
+
+def _label_scored(spark: SparkSession, sf_dir: str, on) -> DataFrame:
+    """The query set (with its label as ``q_label``) joined to the corpus
+    vectors that satisfy the label predicate ``on``, with the rounded
+    exact ``cosine`` — the shared body of the two label-predicate
+    searches below."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("q_label"),
+        _dbl(F.col("embedding")).alias("q_emb"),
+    ).select(
+        "query_id", "q_label", "q_emb", _norm(F.col("q_emb")).alias("q_norm")
+    )
+    corpus = emb.select(
+        "vec_id", "label", _dbl(F.col("embedding")).alias("emb")
+    ).select("vec_id", "label", "emb", _norm(F.col("emb")).alias("nrm"))
+    cos = _dot(F.col("emb"), F.col("q_emb")) / (F.col("nrm") * F.col("q_norm"))
+    return corpus.join(F.broadcast(queries), on).withColumn(
+        "cosine", F.round(cos, 4)
+    )
+
+
 def e2_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED vector search: 3-NN per query restricted to corpus vectors
     sharing the query's label — the metadata-predicate + similarity shape
@@ -88,29 +134,13 @@ def e2_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB is the difference between reading one collection and reading
     the lake. (Post-filtering — score all, then filter — would also
     return too few results when a label is sparse.)"""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        _dbl(F.col("embedding")).alias("q_emb"),
-    ).select(
-        "query_id", "q_label", "q_emb", _norm(F.col("q_emb")).alias("q_norm")
-    )
-    corpus = emb.select(
-        "vec_id", "label", _dbl(F.col("embedding")).alias("emb")
-    ).select("vec_id", "label", "emb", _norm(F.col("emb")).alias("nrm"))
-    cos = _dot(F.col("emb"), F.col("q_emb")) / (F.col("nrm") * F.col("q_norm"))
-    scored = corpus.join(
-        F.broadcast(queries),
+    scored = _label_scored(
+        spark,
+        sf_dir,
         (F.col("label") == F.col("q_label"))
         & (F.col("vec_id") != F.col("query_id")),
-    ).select("query_id", "q_label", "vec_id", F.round(cos, 4).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "q_label", "vec_id", "cosine", "rank")
-    )
+    ).select("query_id", "q_label", "vec_id", "cosine")
+    return topk_per_key_window(scored, ["query_id"], _COSINE_DESC, 3, "rank")
 
 
 def e2_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,31 +156,12 @@ def e2_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     only boundary-adjacent cells are scored. Reference context: the
     embedder's per-case vectors (vectorization/embedder.py:31-74) are the
     positives; this op manufactures the negatives a fine-tune needs."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        _dbl(F.col("embedding")).alias("q_emb"),
+    scored = _label_scored(
+        spark, sf_dir, F.col("label") != F.col("q_label")
     ).select(
-        "query_id", "q_label", "q_emb", _norm(F.col("q_emb")).alias("q_norm")
+        "query_id", "q_label", "vec_id", F.col("label").alias("neg_label"), "cosine"
     )
-    corpus = emb.select(
-        "vec_id", "label", _dbl(F.col("embedding")).alias("emb")
-    ).select("vec_id", "label", "emb", _norm(F.col("emb")).alias("nrm"))
-    cos = _dot(F.col("emb"), F.col("q_emb")) / (F.col("nrm") * F.col("q_norm"))
-    scored = corpus.join(
-        F.broadcast(queries), F.col("label") != F.col("q_label")
-    ).select(
-        "query_id", "q_label", "vec_id",
-        F.col("label").alias("neg_label"),
-        F.round(cos, 4).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "q_label", "vec_id", "neg_label", "cosine", "rank")
-    )
+    return topk_per_key_window(scored, ["query_id"], _COSINE_DESC, 3, "rank")
 
 
 def e2_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -163,7 +174,7 @@ def e2_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is the tiny groupBy(cell)."""
     emb = load_table(spark, sf_dir, "embeddings")
     _, cents = _ivf1_index(spark, sf_dir)
-    corpus = emb.select("vec_id", _dbl(F.col("embedding")).alias("emb"))
+    corpus = _vectors(emb)
     cos6 = F.transform(_cell_cosines(cents, F.col("emb")), lambda c: F.round(c, 6))
     assigned = corpus.select(
         (F.array_position(cos6, F.array_max(cos6)) - 1).cast("int").alias("cell"),
@@ -301,144 +312,6 @@ def _cell_cosines(cents: list[list[float]], emb_col, vec_norm=None):
         cent_arr,
         lambda c, i: _dot(c, emb_col)
         / (F.element_at(cn_arr, i + 1) * vnorm),
-    )
-
-
-def e2_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: k-means coarse quantizer → multi-probe cell search.
-
-    Index build = one corpus pass per Lloyd iteration, no shuffle of
-    vectors: seed centroids with the first k vectors, then iterate
-    (assign every vector to its nearest centroid via a per-row argmax
-    against the broadcast-literal centroid array — map-only — and
-    recompute centroids as per-cell means: one agg producing k×dim
-    values). Only the k×dim centroid matrix ever reaches the driver,
-    exactly like a real IVF index's coarse quantizer — it is NOT a
-    data-sized collect. Search: each query probes its nprobe=4 nearest
-    of k=16 cells, so the scored candidate set is an equi-join on cell
-    id covering ~nprobe/k of the corpus instead of a full scan — at
-    100 TB you'd persist `cell` as a partition column and the probe
-    join becomes partition pruning. Achieves ≥90% recall@3 on the
-    synthetic corpus (asserted against the brute-force baseline in
-    tests/test_similarity.py).
-
-    NOT a catalog entry (retired round 12 — was rows-only since r2):
-    the iterative quantizer isn't SQL-expressible, so the catalog
-    carries the exact-oracle e2_ivf_search_1round/_2round twins
-    instead (same algebra, iteration count pinned). This form remains
-    the production-shaped entry point and keeps its recall@3 ≥ 0.9
-    assertion in tests/test_similarity.py."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    k_cells, nprobe, n_iters = 16, 4, 3
-    corpus = emb.select("vec_id", _dbl(F.col("embedding")).alias("emb"))
-
-    seeds = [
-        r["e"]
-        for r in emb.filter(F.col("vec_id") < k_cells)
-        .orderBy("vec_id")
-        .select(_dbl(F.col("embedding")).alias("e"))
-        .collect()
-    ]
-
-    def assign(cents):
-        cos_arr = _cell_cosines(cents, F.col("emb"))
-        return (F.array_position(cos_arr, F.array_max(cos_arr)) - 1).cast("int")
-
-    # Lloyd iterations: cell means over the previous assignment. Each
-    # round shuffles only per-partition PARTIAL SUMS — mapInPandas folds
-    # every input partition down to ≤k (cell, count, sum-vector) rows with
-    # one numpy reduction, so the exchange carries partitions×k rows
-    # instead of n×dim posexploded values (64× the corpus width; 3072×
-    # with production-sized vectors). A k-row zip_with agg finishes the
-    # mean; empty cells keep their old centroid.
-    import pandas as pd
-
-    dim = 64
-
-    def _partial_sums(batches):
-        import numpy as np
-
-        acc: dict[int, list] = {}  # cell -> [count, sum-vector]
-        for pdf in batches:
-            for cell, grp in pdf.groupby("cell"):
-                m = np.stack(grp["emb"].to_numpy())
-                if cell in acc:
-                    acc[cell][0] += len(m)
-                    acc[cell][1] += m.sum(axis=0)
-                else:
-                    acc[cell] = [len(m), m.sum(axis=0)]
-        if acc:
-            yield pd.DataFrame(
-                {
-                    "cell": list(acc),
-                    "n": [v[0] for v in acc.values()],
-                    "sums": [v[1] for v in acc.values()],
-                }
-            )
-
-    zeros = F.array_repeat(F.lit(0.0), dim)
-    vec_sum = F.aggregate(
-        F.collect_list("sums"),
-        zeros,
-        lambda a, x: F.zip_with(a, x, lambda u, v: u + v),
-    )
-    centroids = seeds
-    for _ in range(n_iters):
-        refined_rows = (
-            corpus.select(assign(centroids).alias("cell"), "emb")
-            .mapInPandas(_partial_sums, "cell int, n long, sums array<double>")
-            .groupBy("cell")
-            .agg(F.sum("n").alias("n"), vec_sum.alias("s"))
-            .select(
-                "cell",
-                F.transform("s", lambda v: v / F.col("n")).alias("centroid"),
-            )
-            .collect()
-        )
-        by_cell = {r["cell"]: list(r["centroid"]) for r in refined_rows}
-        centroids = [by_cell.get(i, centroids[i]) for i in range(k_cells)]
-
-    cells = corpus.select(
-        "vec_id", "emb", assign(centroids).alias("cell")
-    ).withColumn("nrm", _norm(F.col("emb")))
-
-    # queries: rank cells by cosine, keep the nprobe nearest as probe list
-    cos_idx = F.transform(
-        _cell_cosines(centroids, F.col("q_emb")),
-        lambda c, i: F.struct(c.alias("cos"), i.alias("idx")),
-    )
-    probes_arr = F.transform(
-        F.slice(F.reverse(F.array_sort(cos_idx)), 1, nprobe), lambda s: s["idx"]
-    )
-    queries = (
-        emb.filter(F.col("vec_id") < 5)
-        .select(
-            F.col("vec_id").alias("query_id"), _dbl(F.col("embedding")).alias("q_emb")
-        )
-        .select(
-            "query_id",
-            "q_emb",
-            _norm(F.col("q_emb")).alias("q_norm"),
-            F.explode(probes_arr).alias("probe_cell"),
-        )
-    )
-
-    # per-vector norms hoisted out of the per-candidate fold (round 13 —
-    # HOF folds are interpreted with no CSE; same operand order, so the
-    # cosine is bit-identical)
-    cos = _dot(F.col("emb"), F.col("q_emb")) / (
-        F.col("nrm") * F.col("q_norm")
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cells.join(
-            F.broadcast(queries),
-            (cells.cell == queries.probe_cell)
-            & (cells.vec_id != queries.query_id),
-        )
-        .select("query_id", "vec_id", "cell", F.round(cos, 4).alias("cosine"))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= 3)
     )
 
 
@@ -616,7 +489,7 @@ def e2_knn_per_query_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not _use_arrow_kernel(spark, sf_dir):
         return e2_knn_per_query(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    qrows = _query_vectors(spark, sf_dir, 5)
+    qrows = _query_vectors(spark, sf_dir, N_QUERIES)
     q_ids = np.array([r["vec_id"] for r in qrows])
     qm = np.array([r["embedding"] for r in qrows], dtype=np.float64)  # (5, d)
     qn = np.sqrt((qm * qm).sum(axis=1))  # (5,)
@@ -653,12 +526,7 @@ def e2_knn_per_query_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = emb.select("vec_id", "embedding").mapInPandas(
         score, "query_id long, vec_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return topk_per_key_window(scored, ["query_id"], _COSINE_DESC, 3, "rank")
 
 
 _IVF1_K, _IVF1_NPROBE = 16, 4
@@ -733,7 +601,7 @@ def publish_ivf_index(
         .select(_dbl(F.col("embedding")).alias("e"))
         .collect()
     ]
-    corpus = emb.select("vec_id", _dbl(F.col("embedding")).alias("emb"))
+    corpus = _vectors(emb)
     cents1 = _lloyd_round(corpus, seeds)
     cents2 = _lloyd_round(corpus, cents1)
     rows = (
@@ -805,16 +673,15 @@ def e2_ivf_search_1round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable IVF ANN: the quantizer is pinned to exactly ONE
     Lloyd round seeded by the first k=16 vectors, which makes the whole
     pipeline — assignment, centroid means, multi-probe search — plain
-    relational algebra with an exact DuckDB oracle (the general
-    iterative build stays in ``e2_ivf_search``; only the iteration
-    count was the non-SQL part). Assignment cosines and centroid
-    components are rounded to 6dp in BOTH engines so cross-engine float
-    association can't flip an argmax. Search: each query probes its
-    nprobe=4 nearest of k=16 cells — candidates come from an equi-join
-    on cell id (~nprobe/k of the corpus, not a full scan); at 100 TB
-    `cell` persists as a partition column and the probe join becomes
-    partition pruning. Mirrors the reference's Pinecone serving path
-    (etl/flows/process_case.py:292-318) with the index in-engine."""
+    relational algebra with an exact DuckDB oracle. Assignment cosines
+    and centroid components are rounded to 6dp in BOTH engines so
+    cross-engine float association can't flip an argmax. Search: each
+    query probes its nprobe=4 nearest of k=16 cells — candidates come
+    from an equi-join on cell id (~nprobe/k of the corpus, not a full
+    scan); at 100 TB `cell` persists as a partition column and the probe
+    join becomes partition pruning. Mirrors the reference's Pinecone
+    serving path (etl/flows/process_case.py:292-318) with the index
+    in-engine."""
     emb = load_table(spark, sf_dir, "embeddings")
     seeds, centroids = _ivf1_index(spark, sf_dir)
     return _ivf_probe_search(
@@ -911,16 +778,12 @@ def _ivf_candidates_arrow(
     P = np.asarray(probe_cents, dtype=np.float64)
     Pn = np.sqrt((P * P).sum(axis=1))
     out_schema = "query_id long, vec_id long, cell int, cosine double"
-    qrows = (
-        emb.filter(F.col("vec_id") < 5)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()  # 5×dim query metadata, the _query_vectors posture
-    )
+    # N_QUERIES×dim query metadata, the _query_vectors posture
+    qrows = _query_set(_vectors(emb)).orderBy("query_id").collect()
     if not qrows:  # no query vectors: same empty result as the HOF route
         return emb.sparkSession.createDataFrame([], out_schema)
-    q_ids = np.array([r["vec_id"] for r in qrows])
-    Q = np.array([r["embedding"] for r in qrows], dtype=np.float64)
+    q_ids = np.array([r["query_id"] for r in qrows])
+    Q = np.array([r["q_emb"] for r in qrows], dtype=np.float64)
     Qn = np.sqrt((Q * Q).sum(axis=1))
     qcos6 = _round_half_up((Q @ P.T) / np.outer(Qn, Pn), 6)
     probe_sets = [
@@ -977,16 +840,13 @@ def _ivf_candidates(
     at bench scale, the Arrow kernel wins ~250× once data dominates."""
     if use_arrow:
         return _ivf_candidates_arrow(emb, assign_cents, probe_cents)
-    corpus = emb.select("vec_id", _dbl(F.col("embedding")).alias("emb"))
-    cells = _coarse_cells(corpus, assign_cents, keep_emb=True).withColumn(
+    cells = _coarse_cells(_vectors(emb), assign_cents, keep_emb=True).withColumn(
         "nrm", _norm(F.col("emb"))
     )
+    # the query side casts its own copy (a second lambda): sharing the
+    # corpus column would renumber every later lambda in the plan
     queries = _probe_list(
-        emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), _dbl(F.col("embedding")).alias("q_emb")
-        ),
-        probe_cents,
-        _IVF1_NPROBE,
+        _query_set(_vectors(emb)), probe_cents, _IVF1_NPROBE
     ).withColumn("q_norm", _norm(F.col("q_emb")))
 
     # per-vector norms hoisted out of the per-candidate fold (round 13 —
@@ -1013,13 +873,12 @@ def _ivf_probe_search(
     use_arrow: bool = False,
 ) -> DataFrame:
     """Top-3-per-query form of the multi-probe IVF search."""
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        _ivf_candidates(emb, assign_cents, probe_cents, use_arrow=use_arrow)
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= 3)
+    return topk_per_key_window(
+        _ivf_candidates(emb, assign_cents, probe_cents, use_arrow=use_arrow),
+        ["query_id"],
+        _COSINE_DESC,
+        3,
+        "rank",
     )
 
 
@@ -1046,16 +905,14 @@ def e2_ivf_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def e2_ivf_search_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-checkable IVF ANN with a TWO-round Lloyd quantizer — the
-    closest exact-oracle stand-in for the fully iterative ``e2_ivf_search``
-    (its n_iters=3 build is only one round away). Both rounds are plain
-    relational algebra (6dp-rounded cosines before every argmax, 6dp-
-    rounded centroid means), so DuckDB reproduces the quantizer bit-for-
-    bit and the whole search has an exact hash oracle. Corpus vectors are
-    assigned by the round-1 centroids (the assignment that produced the
-    round-2 means); queries probe their nprobe=4 nearest round-2
-    centroids. Mirrors the reference's Pinecone serving path
-    (etl/flows/process_case.py:292-318) with the index in-engine."""
+    """Driver-checkable IVF ANN with a TWO-round Lloyd quantizer. Both
+    rounds are plain relational algebra (6dp-rounded cosines before every
+    argmax, 6dp-rounded centroid means), so DuckDB reproduces the
+    quantizer bit-for-bit and the whole search has an exact hash oracle.
+    Corpus vectors are assigned by the round-1 centroids (the assignment
+    that produced the round-2 means); queries probe their nprobe=4
+    nearest round-2 centroids. Mirrors the reference's Pinecone serving
+    path (etl/flows/process_case.py:292-318) with the index in-engine."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents1, cents2 = _ivf2_index(spark, sf_dir)
     return _ivf_probe_search(
@@ -1073,11 +930,6 @@ QUERIES = {
     "e2_index_stats": e2_index_stats,
     "e2_embedding_norms": e2_embedding_norms,
     "e2_lsh_buckets": e2_lsh_buckets,
-    # e2_ivf_search itself is RETIRED from the catalog (round 12,
-    # verdict item 8): rows-only since r2, fully superseded by the
-    # exact-oracle _1round/_2round twins below (identical algebra,
-    # iteration count pinned); the Lloyd-iterated form stays callable
-    # and its recall@3 >= 0.9 stays asserted in tests/test_similarity.py
     "e2_ivf_search_1round": e2_ivf_search_1round,
     "e2_ivf_search_2round": e2_ivf_search_2round,
     "e2_ivf_range_search": e2_ivf_range_search,

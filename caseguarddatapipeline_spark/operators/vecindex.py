@@ -41,19 +41,22 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import load_table
 from .similarity import (
+    _COSINE_DESC,
     _IVF1_NPROBE,
     IVF1_CENTS_SQL,
     _coarse_cells,
-    _dbl,
     _dot,
     _ivf1_index,
     _norm,
     _probe_list,
+    _query_set,
+    _vectors,
 )
+from .topk import topk_per_key_window
 
 
 def _postings_store_dir(sf_dir: str) -> str:
@@ -67,8 +70,7 @@ def _postings_store_dir(sf_dir: str) -> str:
 def _assign(vectors: DataFrame, cents: list[list[float]]) -> DataFrame:
     """(vec_id, emb, cell) for a batch of raw (vec_id, embedding) vectors,
     assigned by the SAME 6dp argmax as every other IVF stage."""
-    corpus = vectors.select("vec_id", _dbl(F.col("embedding")).alias("emb"))
-    return _coarse_cells(corpus, cents, keep_emb=True)
+    return _coarse_cells(_vectors(vectors), cents, keep_emb=True)
 
 
 def publish_ivf_postings(
@@ -249,12 +251,7 @@ def s12_postings_search(
     _, cents = _ivf1_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     probe_rows = _probe_list(
-        emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"),
-            _dbl(F.col("embedding")).alias("q_emb"),
-        ),
-        cents,
-        _IVF1_NPROBE,
+        _query_set(_vectors(emb)), cents, _IVF1_NPROBE
     ).collect()  # nqueries×nprobe rows of index metadata, never data-sized
     probes = spark.createDataFrame(
         [(r["query_id"], list(r["q_emb"]), r["probe_cell"]) for r in probe_rows],
@@ -276,24 +273,16 @@ def s12_postings_search(
     cos = _dot(F.col("emb"), F.col("q_emb")) / (
         F.col("nrm") * F.col("q_nrm")
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
+    scored = posts.join(
+        F.broadcast(probes),
+        (posts.cell == probes.probe_cell) & (posts.vec_id != probes.query_id),
+    ).select(
+        "query_id",
+        "vec_id",
+        F.col("cell").cast("int").alias("cell"),
+        F.round(cos, 4).alias("cosine"),
     )
-    return (
-        posts.join(
-            F.broadcast(probes),
-            (posts.cell == probes.probe_cell)
-            & (posts.vec_id != probes.query_id),
-        )
-        .select(
-            "query_id",
-            "vec_id",
-            F.col("cell").cast("int").alias("cell"),
-            F.round(cos, 4).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= 3)
-    )
+    return topk_per_key_window(scored, ["query_id"], _COSINE_DESC, 3, "rank")
 
 
 QUERIES = {"s12_postings_search": s12_postings_search}

@@ -193,15 +193,12 @@ def test_ivfsq8_candidates_respect_probes_and_bound(spark, sf_dir):
     8-bit grid's worst case (sum_j ((hi_j-lo_j)/255/2 * (2*|q_j-x_j| +
     (hi_j-lo_j)/255/2)) — checked via the loose-but-sufficient epsilon
     on this corpus)."""
-    from caseguarddatapipeline_spark.operators.pq import (
-        _corpus,
-        _l2sq,
-        _pq_queries,
-    )
+    from caseguarddatapipeline_spark.operators.pq import _corpus, _l2sq
     from caseguarddatapipeline_spark.operators.similarity import (
         _coarse_cells,
         _ivf1_index,
         _probe_list,
+        _query_set,
     )
 
     hits = e2_ivfsq8_search_1round(spark, sf_dir)
@@ -217,7 +214,7 @@ def test_ivfsq8_candidates_respect_probes_and_bound(spark, sf_dir):
         r.vec_id: r.cell for r in _coarse_cells(corpus, seeds).collect()
     }
     probes = {}
-    for r in _probe_list(_pq_queries(corpus), centroids, NPROBE).collect():
+    for r in _probe_list(_query_set(corpus), centroids, NPROBE).collect():
         probes.setdefault(r.query_id, set()).add(r.probe_cell)
     assert all(r.cell == cells[r.vec_id] for r in rows)
     assert all(r.cell in probes[r.query_id] for r in rows)
@@ -225,7 +222,7 @@ def test_ivfsq8_candidates_respect_probes_and_bound(spark, sf_dir):
     exact = {
         (r.query_id, r.vec_id): r.d
         for r in corpus.join(
-            F.broadcast(_pq_queries(corpus)),
+            F.broadcast(_query_set(corpus)),
             F.col("vec_id") != F.col("query_id"),
         )
         .select(

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import pytest
+
 from caseguarddatapipeline_spark.operators.similarity import (
     e2_cosine_topk,
-    e2_ivf_search,
+    e2_ivf_search_1round,
+    e2_ivf_search_2round,
     e2_knn_per_query,
 )
 
@@ -17,9 +20,12 @@ def test_topk_is_sorted_and_bounded(spark, sf_dir):
     assert all(-1.0 <= c <= 1.0 for c in cosines)
 
 
-def test_ivf_recall_vs_bruteforce(spark, sf_dir):
+@pytest.mark.parametrize(
+    "search", [e2_ivf_search_1round, e2_ivf_search_2round], ids=lambda f: f.__name__
+)
+def test_ivf_recall_vs_bruteforce(spark, sf_dir, search):
     brute = e2_knn_per_query(spark, sf_dir).collect()
-    ivf = e2_ivf_search(spark, sf_dir).collect()
+    ivf = search(spark, sf_dir).collect()
     brute_sets = {}
     for r in brute:
         brute_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
