@@ -86,6 +86,10 @@ _PINNED = [
     "e5_dedup_report",
     "e5_corpus_curation",
     "e5_curation_funnel",
+    # one exact distributed rank: both names now rank through
+    # topk.exact_rank instead of a single-partition window
+    "e5_global_shuffle",
+    "w5_batch_numbering",
 ]
 
 

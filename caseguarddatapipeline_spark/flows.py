@@ -24,9 +24,10 @@ import os
 import shutil
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from .operators.reconcile import reconcile_fused
+from .operators.topk import exact_rank, range_buckets
 from .sources.connectors import csv_case_scan
 from .streaming.jobs import JOB_SCHEMA, jobs_from_reconciliation, run_jobs_stream
 
@@ -46,65 +47,30 @@ def _job_json():
     return F.to_json(F.struct(*JOB_COLS), {"ignoreNullFields": "false"})
 
 
-def _numbered_jobs(
-    jobs: DataFrame, batch_size: int, order_col: str
-) -> tuple[DataFrame, int, DataFrame | None]:
-    """Contiguous global sequence numbers WITHOUT a driver collect or a
-    single-partition sort: range-partition on the order key (a cluster-wide
-    sort where every task holds one contiguous key range), count rows per
-    partition (a ≤#partitions-row collect — scheduler metadata, not data),
-    broadcast the cumulative offsets as a literal map, and add
-    partition-local row_numbers. seq = offset[pid] + local_rn − 1;
-    batch = seq DIV batch_size. This is the distributed form of the W5
-    batch numbering (operators/relational.py:376; reference slicing:
-    etl/flows/onboard_tenant.py:206-235) — the global window variant
-    collapses onto one task at 100×, this one never does.
-
-    The range-partitioned frame is PERSISTED before the tally collect:
-    repartitionByRange picks its boundaries by sampling, so two separate
-    executions (the tally job and the later write job) could range-split a
-    large/skewed input DIFFERENTLY, making the broadcast offsets disagree
-    with the write-time partitioning — duplicate/gapped sequence numbers.
-    Persisting pins ONE materialized partitioning that both jobs reuse.
-    Returns (numbered frame, total row count, persisted handle) — the
-    caller unpersists the handle after its write action (None when the
-    input was empty and nothing was cached)."""
-    spark = jobs.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    parts = (
-        jobs.repartitionByRange(n_parts, order_col)
-        .sortWithinPartitions(order_col)
-        .withColumn("_pid", F.spark_partition_id())
-    ).persist()
-    tallies = parts.groupBy("_pid").agg(F.count(F.lit(1)).alias("n"))
-    counts = {r["_pid"]: r["n"] for r in tallies.collect()}  # ≤ n_parts rows
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    if not offsets:
-        parts.unpersist()
-        return jobs.withColumn("batch", F.lit(0).cast("long")), 0, None
-    off_map = F.create_map(
-        *[F.lit(v) for kv in offsets.items() for v in kv]
+def _numbered_jobs(jobs: DataFrame, batch_size: int) -> DataFrame:
+    """Adds ``batch`` = (global job_id rank − 1) DIV batch_size with no
+    driver collect and no single-partition sort: ``topk.exact_rank``
+    over equal-width buckets of job_id's exact [min, max] range. The
+    bounds and bucket offsets are deterministic aggregates, so the
+    numbering is the same in every job that evaluates the frame — nothing
+    to persist. The distributed form of the W5 batch numbering (reference
+    slicing: etl/flows/onboard_tenant.py:206-235)."""
+    ranked = exact_rank(
+        range_buckets(jobs, "job_id", "_bkt"), "_rnk", [F.col("job_id")], "_bkt"
     )
-    w = Window.partitionBy("_pid").orderBy(order_col)
-    seq = F.element_at(off_map, F.col("_pid")) + F.row_number().over(w) - 1
-    numbered = parts.withColumn(
-        "batch", F.floor(seq / batch_size).cast("long")
-    ).drop("_pid")
-    return numbered, acc, parts
+    return ranked.withColumn(
+        "batch", F.floor((F.col("_rnk") - 1) / batch_size).cast("long")
+    ).drop("_bkt", "_rnk")
 
 
 def _write_job_batches(
-    jobs: DataFrame, queue_dir: str, batch_size: int, prefix: str,
-    order_col: str = "job_id",
+    jobs: DataFrame, queue_dir: str, batch_size: int, prefix: str
 ) -> tuple[int, int]:
     """Distributed queue-batch writer: every executor writes its own batch
     files; the driver only renames (O(#batches) fs-metadata ops, zero row
     data). repartition("batch") puts each batch whole into one task, so
     each ``batch=N`` staging dir holds exactly one part file, written in
-    (batch, order_col) order — byte-identical to what the old
+    (batch, job_id) order — byte-identical to what the old
     collect-and-slice writer produced. The rename into the legacy
     ``{prefix}-NNNNNN.json`` names keeps the file-stream queue contract;
     on an object store you'd skip the renames and publish the partitioned
@@ -115,20 +81,17 @@ def _write_job_batches(
     # clear it up front — the overwrite write would do it anyway, but the
     # zero-jobs path skips the write entirely
     shutil.rmtree(staging, ignore_errors=True)
-    numbered, n_jobs, cached = _numbered_jobs(jobs, batch_size, order_col)
-    try:
-        if n_jobs:
-            (
-                numbered.repartition("batch")
-                .sortWithinPartitions("batch", order_col)
-                .select(_job_json().alias("value"), "batch")
-                .write.mode("overwrite")
-                .partitionBy("batch")
-                .text(staging)
-            )
-    finally:
-        if cached is not None:
-            cached.unpersist()
+    n_jobs = jobs.count()
+    if n_jobs:
+        (
+            _numbered_jobs(jobs, batch_size)
+            .repartition("batch")
+            .sortWithinPartitions("batch", "job_id")
+            .select(_job_json().alias("value"), "batch")
+            .write.mode("overwrite")
+            .partitionBy("batch")
+            .text(staging)
+        )
     n_batches = 0
     if os.path.isdir(staging):
         for d in sorted(os.listdir(staging)):

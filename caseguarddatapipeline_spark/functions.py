@@ -128,7 +128,10 @@ def seeded_draw(key: Column, seed_knuth: int = 2654435761) -> Column:
 
 def seeded_order_key(key: Column, seed: str = "seed42:") -> Column:
     """md5-derived permutation key (bit-identical across engines) — the
-    e5_global_shuffle training order for an arbitrary key column."""
+    e5_global_shuffle training order for an arbitrary key column. Its
+    first two hex chars are a prefix of the key, so they serve as the
+    monotone bucket column ``operators.topk.exact_rank`` needs to rank
+    the permutation without a global sort."""
     return F.md5(F.concat(F.lit(seed), key.cast("string")))
 
 

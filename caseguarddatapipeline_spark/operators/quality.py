@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..sources import load_table
 from .textops import STOPWORDS
+from .topk import exact_rank, ntile, ntile_start
 
 # Rule thresholds sit inside the synthetic corpus' observed spread
 # (n_words 10-99, distinct-ratio 0.28-0.72 at sf0.01) so every rule
@@ -104,13 +105,13 @@ def e5_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     across runs/engines because the permutation is a pure function of
     (seed, doc_id) — the property a training job needs to resume mid-epoch.
 
-    Scale path: ntile's single global sort is exactly what
-    ``repartitionByRange(N, key).sortWithinPartitions(key)`` distributes —
-    range boundaries come from sampling, each shard materializes as one
-    partition, and position-in-shard is a partition-local zipWithIndex;
-    no stage ever holds the global order on one node. The ntile form here
-    keeps the oracle exact; the range form is the 100 TB deployment and
-    differs only at shard boundaries (sampled vs exact quantiles)."""
+    The oracle states this as ntile over one global sort. Here the global
+    rank is ``topk.exact_rank`` over the 2-hex-char prefix of the order
+    key: a PREFIX of the key, so (bucket, key) order equals key order
+    exactly, and md5 uniformity bounds every window task at ~n/256 (widen
+    the prefix past that). ``shard`` is ``ntile`` arithmetic on (rank, n)
+    and ``pos`` is rank minus the shard's start — exact at every shard
+    boundary, with no stage that holds the whole order."""
     docs = load_table(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
@@ -118,49 +119,19 @@ def e5_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.concat(F.lit(SHUFFLE_SEED), F.col("doc_id").cast("string"))).alias(
             "order_key"
         ),
-    )
-    sharded = keyed.select(
-        "doc_id",
-        "source",
-        "order_key",
-        F.ntile(N_SHARDS).over(Window.orderBy("order_key")).alias("shard"),
-    )
-    pos = F.row_number().over(Window.partitionBy("shard").orderBy("order_key"))
-    return sharded.select("doc_id", "source", "order_key", "shard", pos.alias("pos"))
-
-
-def global_shuffle_scaled(docs: DataFrame, n_shards: int = N_SHARDS) -> DataFrame:
-    """The 100 TB deployment form of e5_global_shuffle — identical
-    semantics (seeded md5 permutation → shard + in-shard position), zero
-    single-node stages:
-
-    - shard assignment = ``repartitionByRange(n, order_key)``: boundaries
-      come from distributed sampling, each shard is ONE partition — no
-      global-order window (the oracle form's ntile) ever materializes.
-    - in-shard position = partition-local arithmetic on
-      ``monotonically_increasing_id`` AFTER ``sortWithinPartitions``:
-      the id's low 33 bits are the row's index within its partition, so
-      position needs no window and no further shuffle.
-
-    Differs from the ntile form only at shard boundaries (sampled vs
-    exact quantiles) — pinned by tests/test_quality.py, which checks the
-    permutation order and per-shard contiguity are identical."""
-    keyed = docs.withColumn(
-        "order_key",
-        F.md5(F.concat(F.lit(SHUFFLE_SEED), F.col("doc_id").cast("string"))),
-    )
-    ranged = keyed.repartitionByRange(n_shards, "order_key").sortWithinPartitions(
-        "order_key"
-    )
-    mid = F.monotonically_increasing_id()
-    return ranged.select(
-        "doc_id",
-        "source",
-        "order_key",
-        (F.spark_partition_id() + 1).alias("shard"),
-        # long, not int: a 100 TB shard can exceed 2^31 rows and the
-        # 33-bit partition-local index goes right up to 2^33
-        (mid.bitwiseAND(F.lit((1 << 33) - 1)) + 1).alias("pos"),
+    ).withColumn("bucket", F.substring("order_key", 1, 2))
+    rnk, n, shard = F.col("rnk"), F.col("n"), F.col("shard")
+    return (
+        exact_rank(keyed, "rnk", [F.col("order_key")], "bucket")
+        .crossJoin(F.broadcast(docs.agg(F.count(F.lit(1)).alias("n"))))
+        .withColumn("shard", ntile(rnk, n, N_SHARDS).cast("int"))
+        .select(
+            "doc_id",
+            "source",
+            "order_key",
+            "shard",
+            (rnk - ntile_start(shard, n, N_SHARDS)).cast("int").alias("pos"),
+        )
     )
 
 
@@ -177,93 +148,47 @@ def curriculum_order_scaled(docs: DataFrame) -> DataFrame:
 
     The oracle states both steps as data-sized global windows; this body
     computes the identical rows (pinned against the oracle by
-    tests/test_quality.py) with BOTH windows decomposed away:
+    tests/test_quality.py) with both ranks taken by ``topk.exact_rank``:
 
-    - the quartile assignment replaces ``ntile(4) OVER (ORDER BY quality
-      DESC, doc_id)`` — a single-partition sort of the whole corpus —
-      with the histogram-CDF rank decomposition of
-      ``zscore_by_source_scaled``: rank = (# docs with higher quality,
-      from a broadcast value-histogram running sum) + (row_number within
-      the tie group), then ntile's uneven-tile arithmetic as plain
-      column math from (rank, n). The only unpartitioned window runs
-      over the DISTINCT quality values (metadata-sized: one row per
-      distinct ratio, ≤ max token count² values), never over documents;
-      per-task work is bounded by the largest tie group.
-    - the in-band position replaces ``row_number() OVER (PARTITION BY
-      band ...)`` — four partitions, each a quarter of the corpus in one
-      task — with the same decomposition over a 2-hex-char prefix bucket
-      of the md5 shuffle key: position = (# docs in lexicographically
-      smaller buckets of this band, from a broadcast 4×256-row
-      histogram) + (row_number within (band, bucket)). The prefix is a
-      PREFIX of the order key, so (bucket, key) lexicographic equals key
-      order exactly — not an approximation — and md5 uniformity bounds
-      every task at ~n/1024 (at larger corpora, widen the prefix: 4 hex
-      chars → 256 k buckets).
+    - the quartile rank buckets on the quality value itself: the offset
+      window runs over the DISTINCT quality values, never over documents,
+      and per-task work is bounded by the largest tie group; ``ntile``
+      arithmetic on (rank, n) gives the band.
+    - the in-band position buckets on the 2-hex-char prefix of the md5
+      shuffle key within each band (a 4×256-row histogram), so no task
+      holds a quarter of the corpus.
     """
     toks = F.split(F.col("text"), " ")
     quality = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
+    # negated (exactly, in IEEE) so ascending buckets are descending
+    # quality; the one column serves as key and output, so both consumers
+    # of the rank read the same exchange
     scored = docs.select(
         "doc_id",
-        F.round(quality, 6).alias("quality"),
+        (-F.round(quality, 6)).alias("neg_quality"),
         F.md5(F.concat(F.lit(SHUFFLE_SEED), F.col("doc_id").cast("string"))).alias(
             "shuffle_key"
         ),
     )
-    hist = scored.groupBy("quality").agg(F.count(F.lit(1)).alias("cnt"))
-    w_cum = Window.orderBy(F.col("quality").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cum = hist.select(
-        "quality", F.coalesce(F.sum("cnt").over(w_cum), F.lit(0)).alias("below")
-    )
     n_total = scored.agg(F.count(F.lit(1)).alias("n"))
-    local = F.row_number().over(Window.partitionBy("quality").orderBy("doc_id"))
-    ranked = (
-        scored.withColumn("local_rn", local)
-        .join(F.broadcast(cum), "quality")
+    banded = (
+        exact_rank(scored, "rnk", [F.col("doc_id")], "neg_quality")
         .crossJoin(F.broadcast(n_total))
-        .withColumn("rnk", F.col("below") + F.col("local_rn"))
-    )
-    # ntile(4) over n rows: the first n%4 tiles hold ceil(n/4) rows
-    k = F.lit(4)
-    q, rem = (F.col("n") / k).cast("long"), F.col("n") % k
-    big = rem * (q + 1)
-    band = F.when(
-        F.col("rnk") <= big, ((F.col("rnk") - 1) / (q + 1)).cast("long")
-    ).otherwise(
-        # unreachable when q = 0 (then big = n); guard for ANSI's eager cast
-        rem + ((F.col("rnk") - 1 - big) / F.greatest(q, F.lit(1))).cast("long")
-    ) + 1
-    banded = ranked.select(
-        "doc_id",
-        "quality",
-        "shuffle_key",
-        F.substring("shuffle_key", 1, 2).alias("bucket"),
-        band.cast("int").alias("band"),
-    )
-    bh = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
-    w_b = (
-        Window.partitionBy("band")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bcum = bh.select(
-        "band",
-        "bucket",
-        F.coalesce(F.sum("cnt").over(w_b), F.lit(0)).alias("pbelow"),
-    )
-    plocal = F.row_number().over(
-        Window.partitionBy("band", "bucket").orderBy("shuffle_key")
-    )
-    return (
-        banded.withColumn("p_rn", plocal)
-        .join(F.broadcast(bcum), ["band", "bucket"])
         .select(
             "doc_id",
-            "quality",
-            "band",
-            (F.col("pbelow") + F.col("p_rn")).cast("int").alias("pos_in_band"),
+            (-F.col("neg_quality")).alias("quality"),
+            "shuffle_key",
+            F.substring("shuffle_key", 1, 2).alias("bucket"),
+            ntile(F.col("rnk"), F.col("n"), 4).cast("int").alias("band"),
         )
+    )
+    return exact_rank(
+        banded, "pos_in_band", [F.col("shuffle_key")], "bucket", by=["band"]
+    ).select(
+        "doc_id",
+        "quality",
+        "band",
+        F.col("pos_in_band").cast("int").alias("pos_in_band"),
     )
 
 
@@ -345,22 +270,13 @@ def token_budget_sample_scaled(
 
     The oracle states the running sum as one cumulative window per
     source, which sorts each source in ONE task (a straggler when one
-    source is half the corpus). Here it decomposes via DETERMINISTIC
-    hash-prefix bucketing (the two-pass ``flows._numbered_jobs`` shape,
-    minus its sampled range boundaries — h is already uniform in [0, 1e6),
-    so fixed-width buckets are balanced by construction and need no
-    persist to pin them):
-
-    1. bucket = h DIV (1e6 / _BUDGET_BUCKETS) — monotone in h, so bucket
-       order IS admission order; a giant source spans _BUDGET_BUCKETS
-       independent tasks instead of one.
-    2. per-(source, bucket) token tallies — a metadata-sized aggregate
-       (#sources × #buckets rows); each bucket's OFFSET (tokens owed to
-       earlier buckets of its source) is a running sum over that tiny
-       table, broadcast-joined back. No driver collect anywhere.
-    3. cum_tokens = offset + bucket-local cumulative sum over (h, doc_id);
-       every window task is bounded by source/#buckets, not by the
-       largest source.
+    source is half the corpus). Here ``topk.exact_rank`` takes the
+    running sum over a DETERMINISTIC hash-prefix bucket — h is already
+    uniform in [0, 1e6), so bucket = h DIV (1e6 / _BUDGET_BUCKETS) is
+    monotone in the admission order and balanced by construction: a
+    giant source spans _BUDGET_BUCKETS window tasks instead of one, and
+    the per-(source, bucket) token offsets are a metadata-sized
+    broadcast. No driver collect anywhere.
 
     Admission (cum ≤ budget) and the per-source fit report match the
     oracle row-for-row — pinned by tests/test_quality.py."""
@@ -376,26 +292,13 @@ def token_budget_sample_scaled(
             "n_tokens"
         ),
     ).withColumn("_bkt", F.floor(F.col("h") / width).cast("int"))
-    tallies = ranked.groupBy("source", "_bkt").agg(
-        F.sum("n_tokens").alias("_bkt_tokens")
-    )
-    w_off = (
-        Window.partitionBy("source")
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = tallies.select(
-        "source",
+    cum = exact_rank(
+        ranked,
+        "cum_tokens",
+        [F.col("h").asc(), F.col("doc_id").asc()],
         "_bkt",
-        F.coalesce(F.sum("_bkt_tokens").over(w_off), F.lit(0)).alias("_offset"),
-    )
-    w_local = (
-        Window.partitionBy("source", "_bkt")
-        .orderBy(F.col("h").asc(), F.col("doc_id").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = ranked.join(F.broadcast(offsets), ["source", "_bkt"]).withColumn(
-        "cum_tokens", F.col("_offset") + F.sum("n_tokens").over(w_local)
+        by=["source"],
+        value="n_tokens",
     )
     kept = cum.filter(F.col("cum_tokens") <= budget)
     fit = kept.groupBy("source").agg(
@@ -686,59 +589,25 @@ def zscore_by_source_scaled(docs: DataFrame) -> DataFrame:
     sort each source in ONE task — fine for many smallish domains, a
     straggler when one source is half the corpus. This body computes the
     identical rows (pinned against the oracle by tests/test_quality.py)
-    with no per-source global sort. Rank decomposes as
-
-        rank(row) = (# rows of this source with a smaller value)   [cum]
-                  + (row_number among ties, by doc_id)             [local]
-
-    - ``cum`` comes from a HISTOGRAM: groupBy(source, n_chars) counts —
-      the running sum over that is a window over sources × distinct
-      values (tiny: thousands of rows), never over documents.
-    - ``local`` is a window over (source, n_chars) — many SMALL
-      partitions, each one tie-group, so no task ever holds a whole
-      source. percent_rank = (rank−1)/(n−1) and ntile's uneven-tile
-      arithmetic are then plain column math from (rank, n).
-
-    The moment partitionBy(source) would straggle (one domain = half the
-    corpus), this shape keeps every task bounded by the largest TIE
-    GROUP instead of the largest SOURCE."""
-    hist = docs.groupBy("source", "n_chars").agg(F.count(F.lit(1)).alias("cnt"))
-    w_cum = (
-        Window.partitionBy("source")
-        .orderBy("n_chars")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = hist.select(
-        "source",
-        "n_chars",
-        F.coalesce(F.sum("cnt").over(w_cum), F.lit(0)).alias("below"),
-    )
+    with ``topk.exact_rank`` bucketed on the value itself: the offset is
+    a running sum over the (source, n_chars) histogram — sources ×
+    distinct values, never documents — and the row number runs within
+    one tie group. percent_rank = (rank−1)/(n−1) and ``ntile`` are then
+    column math from (rank, n), so every task is bounded by the largest
+    TIE GROUP instead of the largest SOURCE."""
     stats = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n"),
         F.avg("n_chars").alias("mu"),
         F.stddev_samp("n_chars").alias("sd"),
     )
-    local = F.row_number().over(
-        Window.partitionBy("source", "n_chars").orderBy("doc_id")
-    )
-    ranked = (
-        docs.select("doc_id", "source", "n_chars")
-        .withColumn("local_rn", local)
-        .join(F.broadcast(cum), ["source", "n_chars"])
-        .join(F.broadcast(stats), "source")
-        .withColumn("rnk", F.col("below") + F.col("local_rn"))
-    )
-    # ntile(k) over n rows: the first n%k tiles hold ceil(n/k) rows
-    k = F.lit(10)
-    q, rem = (F.col("n") / k).cast("long"), F.col("n") % k
-    big = rem * (q + 1)  # rows covered by the oversized tiles
-    tile = F.when(
-        F.col("rnk") <= big, ((F.col("rnk") - 1) / (q + 1)).cast("long")
-    ).otherwise(
-        # guard: this branch is unreachable when q = 0 (then big = n), but
-        # ANSI mode evaluates the cast eagerly enough to need a nonzero div
-        rem + ((F.col("rnk") - 1 - big) / F.greatest(q, F.lit(1))).cast("long")
-    ) + 1
+    ranked = exact_rank(
+        docs.select("doc_id", "source", "n_chars"),
+        "rnk",
+        [F.col("doc_id")],
+        "n_chars",
+        by=["source"],
+    ).join(F.broadcast(stats), "source")
+    tile = ntile(F.col("rnk"), F.col("n"), 10)
     return ranked.select(
         "doc_id",
         "source",

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..sources import load_table
 from .reconcile import crm_snapshot, store_snapshot
 from .sql_twins import QUERIES as SQL_TWINS
+from .topk import exact_rank, range_buckets
 
 # --------------------------------------------------------------------------
 # P — projections / filters (reference: etl/reconciliation.py:143-167,
@@ -389,14 +390,20 @@ def w5_batch_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch numbering (sync_daily_enhanced.py:329-383): slice the job list
     into batches of 100 → floor((row_number-1)/100) AS batch_id.
 
-    Scale note: a global row_number forces a single-partition sort at 100 TB
-    — for real pipelines we batch per partition-key instead; this global
-    variant matches the reference's driver-side slicing semantics."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.orderBy("o_orderkey")
-    return orders.select(
-        "o_orderkey",
-        F.floor((F.row_number().over(w) - 1) / 100).alias("batch_id"),
+    The global row_number is ``topk.exact_rank`` over equal-width buckets
+    of the exact [min, max] key range: a bucket histogram's prefix
+    offsets plus a row number within each bucket, so no task sorts the
+    whole table — the shape ``flows._numbered_jobs`` uses for the onboard
+    queue batches."""
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
+    ranked = exact_rank(
+        range_buckets(orders, "o_orderkey", "_bkt"),
+        "rnk",
+        [F.col("o_orderkey")],
+        "_bkt",
+    )
+    return ranked.select(
+        "o_orderkey", F.floor((F.col("rnk") - 1) / 100).alias("batch_id")
     )
 
 

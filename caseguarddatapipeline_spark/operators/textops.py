@@ -975,12 +975,11 @@ def e3_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntile is engine-exact; docs with < 2 tokens carry no bigrams and —
     exactly like the LM scorer — fall outside the ranked population.
 
-    Scale: ntile needs the per-source population in one task, the same
-    caveat e3_zscore_by_source documents; the skew-proof rewrite is the
-    histogram-CDF + bucketed-positions decomposition already coded in
-    e5_curriculum_order_scaled (quartiles there, terciles here — the
-    identical algebra), so the straggler-free form exists and this
-    entry keeps the literal CCNet shape."""
+    Scale: ntile needs the per-source population in one task. The
+    straggler-free form is ``topk.exact_rank`` bucketed on the score
+    within each source, then ``topk.ntile(rank, n, 3)`` — what
+    e3_zscore_by_source does for deciles and e5_curriculum_order for
+    quartiles; this entry keeps the literal CCNet shape."""
     scored = e3_ngram_lm_score(spark, sf_dir).select(
         "doc_id", "avg_logp_micro"
     )

@@ -40,9 +40,18 @@ implementation (it is the right shape on engines WITHOUT window group
 limits, and its identity test doubles as a correctness oracle for the
 window form under total orders); production code should use the window
 form, i.e. `topk_per_key_window`.
+
+`exact_rank` is the other ranking shape: an exact rank or running sum
+over a whole group with NO window the size of that group — a
+bucket-histogram prefix offset plus a row number within each bucket.
+Every exact global numbering in the engine (shard assignment, batch
+numbering, quantile bands, per-source budgets) goes through it;
+`ntile`/`ntile_start` turn its rank into tiles and back.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -155,6 +164,114 @@ def topk_per_key_window(
         df.withColumn(rank_col, F.row_number().over(w))
         .filter(F.col(rank_col) <= k)
     )
+
+
+def exact_rank(
+    df: DataFrame,
+    out: str,
+    order: list[Column],
+    bucket: str,
+    by: Sequence[str] = (),
+    value: str | None = None,
+) -> DataFrame:
+    """Exact 1-based rank (or, with ``value``, the running sum of that
+    column, current row included) over a total order within optional
+    ``by`` groups, with no window that holds a whole group in one task.
+
+    ``bucket`` names a non-null column that is MONOTONE in the order
+    (ascending: every row of a smaller bucket precedes every row of a
+    larger one); ``order`` totally orders the rows inside one
+    ``(by, bucket)`` group. Then
+
+        rank(row) = offset(by, bucket) + row_number within (by, bucket)
+
+    where the offsets are prefix sums over a ``(by, bucket)`` histogram
+    (metadata-sized: #groups × #buckets rows), taken by the one window
+    over that histogram and broadcast back. Every data-sized window task
+    is bounded by its bucket, not by its group — the partition-local
+    ranking merged through small summaries that REPOSE (ICDE 2021)
+    describes. Adds ``out`` to ``df``'s columns."""
+    from pyspark.sql.window import Window
+
+    keys = [*by, bucket]
+    w_local = Window.partitionBy(*keys).orderBy(*order)
+    if value is None:
+        local = F.row_number().over(w_local)
+        tally = F.count(F.lit(1))
+    else:
+        local = F.sum(value).over(
+            w_local.rowsBetween(Window.unboundedPreceding, 0)
+        )
+        tally = F.sum(value)
+    w_off = (
+        Window.partitionBy(*by)
+        .orderBy(bucket)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = (
+        df.groupBy(*keys)
+        .agg(tally.alias("_bucket_cnt"))
+        .select(
+            *keys,
+            F.coalesce(F.sum("_bucket_cnt").over(w_off), F.lit(0)).alias("_off"),
+        )
+    )
+    return (
+        df.withColumn("_local", local)
+        .join(F.broadcast(offsets), keys)
+        .withColumn(out, F.col("_off") + F.col("_local"))
+        .drop("_off", "_local")
+    )
+
+
+def range_buckets(
+    df: DataFrame, key: str, out: str, by: Sequence[str] = ()
+) -> DataFrame:
+    """Adds ``out``: ``key``'s position in its ``by`` group's exact
+    [min, max] range cut into defaultParallelism equal-width buckets — a
+    bucket column for ``exact_rank`` over a numeric key. The bounds are
+    exact aggregates, not samples, so every job that re-evaluates the
+    frame cuts identically. Double arithmetic, dividing before
+    multiplying: ``(key − lo) · n`` overflows int64 for sparse long keys,
+    while each double step is monotone, so the buckets stay monotone in
+    ``key``."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    bounds = df.groupBy(*by).agg(F.min(key).alias("_lo"), F.max(key).alias("_hi"))
+    joined = (
+        df.join(F.broadcast(bounds), list(by))
+        if by
+        else df.crossJoin(F.broadcast(bounds))
+    )
+
+    def dbl(c: str) -> Column:
+        return F.col(c).cast("double")
+
+    return joined.withColumn(
+        out,
+        F.floor((dbl(key) - dbl("_lo")) / (dbl("_hi") - dbl("_lo") + 1) * n).cast(
+            "int"
+        ),
+    ).drop("_lo", "_hi")
+
+
+def ntile(rank: Column, n: Column, k: int) -> Column:
+    """``ntile(k)`` of the row at 1-based ``rank`` among ``n`` rows, as
+    column math: the first n % k tiles hold ⌈n/k⌉ rows, the rest ⌊n/k⌋."""
+    q, rem = (n / F.lit(k)).cast("long"), n % F.lit(k)
+    big = rem * (q + 1)  # rows covered by the oversized tiles
+    return F.when(rank <= big, ((rank - 1) / (q + 1)).cast("long")).otherwise(
+        # unreachable when q = 0 (then big = n); the guard keeps ANSI's
+        # eager cast away from a division by zero
+        rem + ((rank - 1 - big) / F.greatest(q, F.lit(1))).cast("long")
+    ) + 1
+
+
+def ntile_start(tile: Column, n: Column, k: int) -> Column:
+    """Rows before ``tile`` under ``ntile(k)`` over ``n`` rows — the
+    inverse of ``ntile``: a row's position in its tile is
+    ``rank − ntile_start(tile)``."""
+    q, rem = (n / F.lit(k)).cast("long"), n % F.lit(k)
+    return (tile - 1) * q + F.least(tile - 1, rem)
 
 
 def w2_topk_agg_twin(spark, sf_dir: str):

@@ -68,6 +68,7 @@ from ..operators.quality import (
     MIN_MEAN_WLEN,
     MIN_WORDS,
 )
+from ..operators.topk import exact_rank, range_buckets
 from .neardup import (
     MIN_TOKENS,
     _check_index_ownership,
@@ -98,6 +99,29 @@ def _gopher_pass(n_words, mean_wlen, distinct_ratio):
         & (mean_wlen <= MAX_MEAN_WLEN)
         & (distinct_ratio >= MIN_DISTINCT_RATIO)
     )
+
+
+def _budget_level(quality: DataFrame, bucketed: bool) -> DataFrame:
+    """Adds ``level``: each source's running token total in doc_id order,
+    current document included. ``bucketed`` takes it through
+    ``topk.exact_rank`` over per-source doc_id-range buckets (no window
+    task holds a whole source); otherwise one cumulative window per
+    source. Both compute the identical column."""
+    if bucketed:
+        return exact_rank(
+            range_buckets(quality, "doc_id", "_bkt", by=["source"]),
+            "level",
+            [F.col("doc_id")],
+            "_bkt",
+            by=["source"],
+            value="n_tokens",
+        ).drop("_bkt")
+    w_full = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return quality.withColumn("level", F.sum("n_tokens").over(w_full))
 
 
 def _spent_by_source(sess, tally_dir: str, before_batch: int) -> DataFrame | None:
@@ -316,15 +340,10 @@ def run_assembly_stream(
                 # (partitionBy source, orderBy doc_id) runs ONE task per
                 # source — at production batch sizes (millions of rows,
                 # a handful of sources) that is exactly the straggler
-                # the batch side's token_budget_sample_scaled removes.
-                # Same two-pass decomposition here, with DETERMINISTIC
-                # per-source doc_id-range buckets (no sampling): bucket
-                # order is admission order within each source for ANY
-                # boundary placement, so offset + bucket-local cumsum
-                # equals the global cumsum and the admitted set is
-                # bucket-boundary-independent. Per-bucket tallies are
-                # metadata-sized (#sources x NB rows) and broadcast
-                # back; every window task is bounded by batch/NB.
+                # the batch side's token_budget_sample_scaled removes,
+                # so large batches take _budget_level's bucketed form
+                # (deterministic per-source doc_id-range buckets, no
+                # sampling; every window task bounded by batch/NB).
                 # Round 13: the decomposition is ADAPTIVE. A tiny-batch
                 # attribution drain measured the two-pass machinery (two
                 # aggs + two broadcasts + two windowed shuffles) at
@@ -332,11 +351,11 @@ def run_assembly_stream(
                 # a micro-batch never needs: below _BUCKETED_MIN_ROWS a
                 # single-task-per-source cumulative sort is sub-ms work,
                 # so the straight window wins outright. Both forms
-                # compute the identical level (the bucketed form's
-                # defining invariant), so which one ran is unobservable
-                # in the output. The row count is free: quality is
-                # persisted and every downstream consumer needs it
-                # materialized anyway. --
+                # compute the identical level (pinned by
+                # tests/test_stream_assembly.py), so which one ran is
+                # unobservable in the output. The row count is free:
+                # quality is persisted and every downstream consumer
+                # needs it materialized anyway. --
                 if spent_hot["upto"] == batch_id:
                     by_src = spent_hot["by_source"]
                     spent = (
@@ -356,63 +375,9 @@ def run_assembly_stream(
                     spent_hot["upto"] = batch_id
                 n_quality = quality.count()
                 _width_state["prev_rows"] = n_quality
-                if n_quality <= _BUCKETED_MIN_ROWS:
-                    w_full = (
-                        Window.partitionBy("source")
-                        .orderBy("doc_id")
-                        .rowsBetween(Window.unboundedPreceding, 0)
-                    )
-                    leveled = quality.withColumn(
-                        "level", F.sum("n_tokens").over(w_full)
-                    )
-                else:
-                    nb = sess.sparkContext.defaultParallelism
-                    bounds = quality.groupBy("source").agg(
-                        F.min("doc_id").alias("_lo"),
-                        F.max("doc_id").alias("_hi"),
-                    )
-                    # divide BEFORE multiplying (double math): doc_id is a
-                    # caller-supplied long, and (doc_id - lo) * nb overflows
-                    # int64 for snowflake-style sparse ids, silently breaking
-                    # the monotone-bucket invariant; (x/R) in [0,1) then *nb
-                    # is overflow-free and stays monotone (round-11 review)
-                    dbl = lambda c: F.col(c).cast("double")  # noqa: E731
-                    bucketed = quality.join(
-                        F.broadcast(bounds), "source"
-                    ).withColumn(
-                        "_bkt",
-                        F.floor(
-                            (dbl("doc_id") - dbl("_lo"))
-                            / (dbl("_hi") - dbl("_lo") + 1)
-                            * nb
-                        ).cast("int"),
-                    )
-                    tallies = bucketed.groupBy("source", "_bkt").agg(
-                        F.sum("n_tokens").alias("_bt")
-                    )
-                    w_off = (
-                        Window.partitionBy("source")
-                        .orderBy("_bkt")
-                        .rowsBetween(Window.unboundedPreceding, -1)
-                    )
-                    offsets = tallies.select(
-                        "source",
-                        "_bkt",
-                        F.coalesce(F.sum("_bt").over(w_off), F.lit(0)).alias(
-                            "_off"
-                        ),
-                    )
-                    w_local = (
-                        Window.partitionBy("source", "_bkt")
-                        .orderBy("doc_id")
-                        .rowsBetween(Window.unboundedPreceding, 0)
-                    )
-                    leveled = bucketed.join(
-                        F.broadcast(offsets), ["source", "_bkt"]
-                    ).withColumn(
-                        "level",
-                        F.col("_off") + F.sum("n_tokens").over(w_local),
-                    ).drop("_lo", "_hi", "_bkt", "_off")
+                leveled = _budget_level(
+                    quality, bucketed=n_quality > _BUCKETED_MIN_ROWS
+                )
                 if spent is not None:
                     leveled = leveled.join(
                         F.broadcast(spent), "source", "left"

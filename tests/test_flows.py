@@ -7,6 +7,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from caseguarddatapipeline_spark.flows import (
     onboard_tenant,
     process_case_backlog,
@@ -170,7 +172,6 @@ def test_distributed_onboard_enqueue_matches_collect_path(spark, tmp_path):
             ln for ln in fn_src.splitlines()
             if ".collect()" in ln
             and ".collect()[0]" not in ln  # 1-row scalar aggs are fine
-            and "tallies.collect()" not in ln  # ≤#partitions tally rows
         ]
         assert not collects, f"{fn.__name__} collects job rows: {collects}"
     assert src  # module parsed
@@ -215,38 +216,91 @@ def test_onboard_rerun_removes_stale_batches(spark, tmp_path):
     ]
 
 
-def test_numbered_jobs_matches_global_ordering_across_sizes(spark):
-    """The distributed numbering (range partition + per-partition offsets)
-    must equal the global collect-based slice numbering for awkward sizes:
-    empty, single row, fewer rows than partitions, batch boundaries landing
-    mid-partition, and ties in the order key."""
+def _ntile_reference(n: int, k: int) -> list[int]:
+    """ntile(k) over n rows by construction: tile sizes, then labels."""
+    q, rem = divmod(n, k)
+    return [t + 1 for t in range(k) for _ in range(q + 1 if t < rem else q)]
+
+
+@pytest.mark.parametrize(
+    "n_rows,k,case",
+    [
+        (0, 10, "flat"),
+        (1, 10, "flat"),
+        (7, 3, "flat"),  # batch boundaries mid-bucket
+        (257, 10, "flat"),  # 257 rows on 100 key values: ties in the key
+        (100, 100, "flat"),
+        (3, 8, "flat"),  # n < k: ntile's q = 0 branch
+        (50, 7, "one_bucket"),  # every key equal → max = min, one bucket
+        (257, 10, "by"),  # ranks restart per `by` group
+    ],
+)
+def test_exact_rank_edge_cases(spark, n_rows, k, case):
+    """``topk.exact_rank`` over ``range_buckets`` equals a Python sort of
+    the same rows — rank, running sum, ntile and position-in-tile — and
+    the onboard queue numbering built on it equals the collect-and-slice
+    batches, across empty, single-row, tie-heavy, single-bucket and
+    grouped inputs."""
     import pyspark.sql.functions as F
 
     from caseguarddatapipeline_spark.flows import _numbered_jobs
+    from caseguarddatapipeline_spark.operators.topk import (
+        exact_rank,
+        ntile,
+        ntile_start,
+        range_buckets,
+    )
 
-    for n_rows, batch_size in [(0, 10), (1, 10), (7, 3), (257, 10), (100, 100)]:
-        jobs = spark.range(n_rows).select(
-            # scrambled, duplicated key: two rows per id value when n>100
-            F.pmod(F.col("id") * 37, F.lit(max(n_rows, 1))).alias("job_id"),
-            F.col("id").alias("entity_id"),
-            F.lit("backfill").alias("change_type"),
-            F.lit(3).cast("int").alias("priority"),
-            F.lit(0).cast("int").alias("retry_count"),
-        )
-        numbered, total, cached = _numbered_jobs(jobs, batch_size, "job_id")
-        assert total == n_rows
-        # empty input caches nothing; otherwise the range partitioning is
-        # pinned so the tally and any later action share one materialization
-        assert (cached is None) == (n_rows == 0)
+    key = (
+        F.lit(5).cast("long")
+        if case == "one_bucket"
+        # scrambled key, repeated once n > 100
+        else F.pmod(F.col("id") * 37, F.lit(max(min(n_rows, 100), 1)))
+    )
+    by = ["grp"] if case == "by" else []
+    jobs = spark.range(n_rows).select(
+        key.alias("job_id"),
+        F.col("id").alias("entity_id"),
+        F.lit("backfill").alias("change_type"),
+        F.lit(3).cast("int").alias("priority"),
+        F.lit(0).cast("int").alias("retry_count"),
+        (F.col("id") % 3 if by else F.lit(0)).alias("grp"),
+    )
+    rows = [r.asDict() for r in jobs.collect()]
+
+    if not by:
+        numbered = _numbered_jobs(jobs, k)
         got = sorted(
             (r["job_id"], r["batch"]) for r in numbered.select("job_id", "batch").collect()
         )
-        if cached is not None:
-            cached.unpersist()
-        expected_keys = sorted(
-            r["job_id"] for r in jobs.select("job_id").collect()
+        keys = sorted(r["job_id"] for r in rows)
+        assert got == [(key_, i // k) for i, key_ in enumerate(keys)]
+
+    order = [F.col("job_id"), F.col("entity_id")]  # total: entity_id unique
+    bucketed = range_buckets(jobs, "job_id", "_bkt", by=by)
+    sizes = jobs.groupBy("grp").agg(F.count(F.lit(1)).alias("n"))
+    cum = exact_rank(bucketed, "cum", order, "_bkt", by=by, value="entity_id")
+    ranked = (
+        exact_rank(bucketed, "rnk", order, "_bkt", by=by)
+        .join(cum.select("entity_id", "cum"), "entity_id")
+        .join(sizes, "grp")
+        .withColumn("tile", ntile(F.col("rnk"), F.col("n"), k))
+        .withColumn("pos", F.col("rnk") - ntile_start(F.col("tile"), F.col("n"), k))
+    )
+    got = {
+        r["entity_id"]: (r["rnk"], r["cum"], r["tile"], r["pos"])
+        for r in ranked.collect()
+    }
+    expected = {}
+    for g in {r["grp"] for r in rows}:
+        members = sorted(
+            (r for r in rows if r["grp"] == g),
+            key=lambda r: (r["job_id"], r["entity_id"]),
         )
-        expected = [
-            (k, i // batch_size) for i, k in enumerate(expected_keys)
-        ]
-        assert got == expected, f"n={n_rows} batch={batch_size}"
+        tiles = _ntile_reference(len(members), k)
+        cum = 0
+        for i, r in enumerate(members):
+            cum += r["entity_id"]
+            pos = tiles[: i + 1].count(tiles[i])
+            expected[r["entity_id"]] = (i + 1, cum, tiles[i], pos)
+    assert got == expected, f"n={n_rows} k={k} case={case}"

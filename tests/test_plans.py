@@ -40,18 +40,78 @@ def test_headline_joins_force_no_corpus_broadcast(spark, sf_dir):
         assert analyzed.count("strategy=broadcast") == n_hints, f"{name}:\n{analyzed}"
 
 
-def test_curriculum_order_has_no_corpus_sized_window(spark, sf_dir):
-    # the catalog name runs the bucketed form: no window partitions the
-    # corpus by band alone, and no global ntile
+# Unpartitioned windows over METADATA-sized relations, each with the
+# reason the relation stays small at any corpus size. Any other Window
+# with an empty partition spec sorts its whole input in one task. The
+# offset window of topk.exact_rank (a running sum over its
+# `_bucket_cnt` histogram, #buckets rows) needs no entry.
+METADATA_WINDOWS = {
+    "f20_ratio_metrics": "share of total over the per-status aggregate "
+    "(one row per case status)",
+    "e2_index_stats": "corpus-wide totals over the per-cell occupancy "
+    "rows (one row per IVF cell)",
+    "e5_weighted_mixture": "weighted_mixture_plan's water-level search "
+    "over the per-source totals (one row per source)",
+    "e5_global_token_budget": "the one-statement fallback's sorted "
+    "per-source totals (one row per source)",
+    "e5_global_token_budget_sql": "same body as e5_global_token_budget",
+}
+
+# the global budget's fallback (its BNLJ and its totals windows) is taken
+# past _GLOBAL_BUDGET_MAX_SOURCES sources
+_FALLBACK_ONLY = {"e5_global_token_budget", "e5_global_token_budget_sql"}
+
+
+def _jlist(seq) -> list:
+    out, it = [], seq.iterator()
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _windows(plan):
+    """(partition spec as strings, window expressions) of every Window
+    node in an optimized plan, subquery plans included."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Window":
+            spec = [e.toString() for e in _jlist(node.partitionSpec())]
+            yield spec, node.windowExpressions().toString()
+        stack += _jlist(node.children()) + _jlist(node.subqueries())
+
+
+def test_no_corpus_sized_window(spark, sf_dir, monkeypatch):
+    # the 100 TB rule as a plan lint: no catalog name may plan a Window
+    # without a partition spec unless it is exact_rank's histogram-offset
+    # window or an allowlisted metadata-sized one; a stale entry fails
     import re
 
-    df = QUERIES["e5_curriculum_order"](spark, sf_dir)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", plan):
-        first = spec.split(",")[0].strip()
-        if first.startswith("band#"):
-            assert "bucket#" in spec, f"band-only window in plan: {spec}"
-    assert "ntile" not in plan
+    from caseguarddatapipeline_spark.operators import quality
+
+    helper = re.compile(r"sum\(_bucket_cnt#\d+L?\)")
+    offenders, live = {}, set()
+    for name, fn in QUERIES.items():
+        with monkeypatch.context() as m:
+            if name in _FALLBACK_ONLY:
+                m.setattr(quality, "_GLOBAL_BUDGET_MAX_SOURCES", 0)
+            plan = fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+        for spec, exprs in _windows(plan):
+            if helper.search(exprs):
+                continue
+            if not spec and name in METADATA_WINDOWS:
+                live.add(name)
+            elif not spec or (
+                # a curriculum window partitioned by band alone holds a
+                # quarter of the corpus in one task
+                name.startswith("e5_curriculum_order")
+                and len(spec) == 1
+                and re.fullmatch(r"band#\d+", spec[0])
+            ):
+                offenders.setdefault(name, []).append(exprs)
+    assert not offenders, f"corpus-sized windows: {offenders}"
+    stale = sorted(set(METADATA_WINDOWS) - live)
+    assert not stale, f"METADATA_WINDOWS entries that plan no such window: {stale}"
 
 
 def test_topk_no_global_sort(spark, sf_dir):
@@ -204,6 +264,10 @@ BNLJ_BOUNDED = {
     "as e2_sq8_recall)",
     "e3_ccnet_buckets": "the composed e3_ngram_lm_score's "
     "vocabulary-size scalar (1-row broadcast)",
+    "e5_global_shuffle": "corpus-count scalar (1-row broadcast) feeding "
+    "the ntile arithmetic; the rank window is bucketed",
+    "w5_batch_numbering": "o_orderkey [min, max] bounds row (1-row "
+    "broadcast) that cuts the rank buckets",
 }
 
 
@@ -231,13 +295,10 @@ def test_bnlj_allowlist_is_live(spark, sf_dir, monkeypatch):
     # stale: it would wave a future quadratic plan through unreviewed
     from caseguarddatapipeline_spark.operators import quality
 
-    # the global budget's BNLJ is in its one-statement fallback, taken
-    # past _GLOBAL_BUDGET_MAX_SOURCES sources
-    fallback_only = {"e5_global_token_budget", "e5_global_token_budget_sql"}
     stale = []
     for name in BNLJ_BOUNDED:
         with monkeypatch.context() as m:
-            if name in fallback_only:
+            if name in _FALLBACK_ONLY:
                 m.setattr(quality, "_GLOBAL_BUDGET_MAX_SOURCES", 0)
             plan = _plan(QUERIES[name](spark, sf_dir))
         if "BroadcastNestedLoopJoin" not in plan:

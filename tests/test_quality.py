@@ -4,6 +4,8 @@ SemDeDup-shape keep-set."""
 
 from __future__ import annotations
 
+import pytest
+
 from caseguarddatapipeline_spark.operators.dedup import e1_semantic_dedup
 from caseguarddatapipeline_spark.operators.quality import (
     N_SHARDS,
@@ -17,12 +19,13 @@ from caseguarddatapipeline_spark.operators.quality import (
 def _oracle_problems(sf_dir, df, oracle_name):
     """Differences between ``df`` and the DuckDB oracle ``oracle_name``
     over the same parquet files, compared the way tools/parity.py does."""
-    from caseguarddatapipeline_spark.operators.quality import ORACLES
+    from caseguarddatapipeline_spark.catalog import build_catalog
     from tools.parity import compare, oracle_connection
 
     got = df.toPandas()
     assert len(got) > 0
-    want = oracle_connection(sf_dir).execute(ORACLES[oracle_name]).fetchdf()
+    oracle = build_catalog()[1][oracle_name]
+    want = oracle_connection(sf_dir).execute(oracle).fetchdf()
     return compare(got, want)
 
 
@@ -157,46 +160,15 @@ def test_quality_classifier_bounds(spark, sf_dir):
     assert {r.accepted for r in rows} == {True, False}  # discriminates
 
 
-def test_global_shuffle_scaled_matches_ntile_form(spark, sf_dir):
-    """The repartitionByRange deployment form produces the same seeded
-    permutation as the oracle-checked ntile form: identical global order,
-    contiguous shards, correct in-shard positions — only the shard
-    boundary placement (sampled vs exact quantiles) may differ."""
-    from caseguarddatapipeline_spark.operators.quality import (
-        N_SHARDS,
-        e5_global_shuffle,
-        global_shuffle_scaled,
-    )
-    from caseguarddatapipeline_spark.sources import load_table
+@pytest.mark.parametrize("name", ["e5_global_shuffle", "w5_batch_numbering"])
+def test_exact_rank_bodies_match_oracle(spark, sf_dir, name):
+    """Both global numberings rank through topk.exact_rank (bucket
+    histogram + prefix offsets) and must equal their oracle's global
+    ntile / row_number row for row — shard boundaries included."""
+    from caseguarddatapipeline_spark.catalog import build_catalog
 
-    docs = load_table(spark, sf_dir, "documents")
-    scaled = global_shuffle_scaled(docs).collect()
-    again = global_shuffle_scaled(docs).collect()
-    assert sorted(map(tuple, scaled)) == sorted(map(tuple, again))  # deterministic
-
-    by_shard = {}
-    for r in scaled:
-        by_shard.setdefault(r.shard, []).append(r)
-    assert 1 < len(by_shard) <= N_SHARDS
-    # shards are contiguous, non-overlapping ranges of the order key
-    bounds = sorted(
-        (min(r.order_key for r in m), max(r.order_key for r in m), s)
-        for s, m in by_shard.items()
-    )
-    for (_, prev_hi, _), (nxt_lo, _, _) in zip(bounds, bounds[1:]):
-        assert prev_hi < nxt_lo
-    # in-shard positions are 1..n in order-key order, no window needed
-    for members in by_shard.values():
-        members.sort(key=lambda r: r.order_key)
-        assert [r.pos for r in members] == list(range(1, len(members) + 1))
-    # the GLOBAL permutation (order_key sequence) matches the ntile form
-    ntile_order = [
-        r.doc_id
-        for r in sorted(e5_global_shuffle(spark, sf_dir).collect(),
-                        key=lambda r: r.order_key)
-    ]
-    scaled_order = [r.doc_id for r in sorted(scaled, key=lambda r: r.order_key)]
-    assert ntile_order == scaled_order
+    queries, _ = build_catalog()
+    assert _oracle_problems(sf_dir, queries[name](spark, sf_dir), name) == []
 
 
 def test_zscore_scaled_matches_window_form(spark, sf_dir):

@@ -40,6 +40,26 @@ def _drain(spark, tmp_path, n_docs=400, budget=2_000, n_files=4):
     return work
 
 
+def test_budget_level_bucketed_matches_single_window(spark):
+    """The two budget-level forms (one cumulative window per source below
+    _BUCKETED_MIN_ROWS, exact_rank over doc_id-range buckets above it)
+    give the same ``level`` column on one frame: skewed sources, sparse
+    snowflake-style doc_ids and a single-row source."""
+    from caseguarddatapipeline_spark.streaming.assembly import _budget_level
+
+    rows = [(i * 7_919 + (1 << 52), i % 3, (i * 13) % 29 + 1) for i in range(300)]
+    rows.append((5, 9, 40))  # a source with one document
+    quality = spark.createDataFrame(rows, "doc_id long, source long, n_tokens long")
+
+    def level(bucketed):
+        out = _budget_level(quality, bucketed=bucketed)
+        return sorted(out.select("doc_id", "source", "level").collect())
+
+    single = level(False)
+    assert len(single) == len(rows)
+    assert level(True) == single
+
+
 def test_assembly_stream_invariants(spark, tmp_path):
     work = _drain(spark, tmp_path)
     corpus = spark.read.parquet(f"{work}/corpus")
