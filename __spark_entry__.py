@@ -19,7 +19,7 @@ if _REPO_ROOT not in sys.path:
 
 from caseguarddatapipeline_spark.catalog import build_catalog  # noqa: E402
 from caseguarddatapipeline_spark.operators.reconcile import (  # noqa: E402
-    reconciliation_summary,
+    a1_reconciliation_summary,
 )
 
 _QUERIES, _ORACLES = build_catalog()
@@ -27,7 +27,7 @@ _QUERIES, _ORACLES = build_catalog()
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return reconciliation_summary(spark, "/root/testdata/sf0.001")
+    return a1_reconciliation_summary(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

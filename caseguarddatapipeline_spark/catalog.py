@@ -1,10 +1,11 @@
 """Assembles the engine's query catalog: name → (spark fn, oracle SQL).
 
 The driver contract (``__spark_entry__.py``) exposes exactly this catalog.
-Modules register their QUERIES/ORACLES dicts here; a query without an oracle
-gets the driver's weaker rows-only check (reserved for genuinely
-non-SQL-expressible operators — hash-based near-dup candidates, pandas-UDF
-inference stubs, stateful streaming).
+Modules register their QUERIES/ORACLES dicts here, one name per function;
+a second catalog name for the same body lives only in ``ALIASES``. A query
+without an oracle gets the driver's weaker rows-only check (reserved for
+genuinely non-SQL-expressible operators — hash-based near-dup candidates,
+pandas-UDF inference stubs, stateful streaming).
 
 Ordering contract: the driver's CORRECTNESS record covers the first 50
 catalog entries in registration order — the "window". Round 12 replaced
@@ -27,17 +28,36 @@ exact evidence in pytest: ±rel-sd vs exact distinct by documented policy.
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ._window_state import LAST_GREEN
-from .operators import relational
-from .operators.reconcile import RECONCILIATION_SUMMARY_SQL, reconciliation_summary
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _WINDOW_SLOTS = 50
+
+# Catalog names served by another name's body: alias → canonical name. The
+# alias is the canonical name's function object, so the two cannot drift
+# apart. An alias inherits the canonical name's oracle unless its own
+# module registers a distinct text for it (q5, q18 and a1 do).
+ALIASES = {
+    "q1_pricing_summary_sql": "q1_pricing_summary",
+    "q3_shipping_priority_sql": "q3_shipping_priority",
+    "q5_regional_volume_sql": "q5_regional_volume",
+    "q18_large_orders_sql": "q18_large_orders",
+    "e3_bpe_encode_sql": "e3_bpe_encode",
+    "e5_global_token_budget_sql": "e5_global_token_budget",
+    "e3_zscore_by_source_scaled": "e3_zscore_by_source",
+    "e5_curriculum_order_scaled": "e5_curriculum_order",
+    "e5_token_budget_sample_scaled": "e5_token_budget_sample",
+    "e1_minhash_lsh_vectorized": "e1_minhash_lsh",
+    "e1_span_dedup_sql": "e1_span_dedup",
+    "e2_sq8_search_sql": "e2_sq8_search",
+    "a1_reconciliation_summary_sql": "a1_reconciliation_summary",
+}
 
 # The flagship plus every catalog entry ADDED this round (zero-debt
 # policy: new queries are driver-verified the round they ship); the
@@ -90,6 +110,10 @@ _PINNED = [
     # topk.exact_rank instead of a single-partition window
     "e5_global_shuffle",
     "w5_batch_numbering",
+    # one reconciliation body: both a1 names and the a19 quality gate now
+    # run the one SQL detail text
+    "a1_reconciliation_summary_sql",
+    "a19_reconciliation_quality",
 ]
 
 
@@ -111,16 +135,20 @@ def build_catalog() -> tuple[dict[str, QueryFn], dict[str, str]]:
     queries: dict[str, QueryFn] = {}
     oracles: dict[str, str] = {}
 
-    queries["a1_reconciliation_summary"] = reconciliation_summary
-    oracles["a1_reconciliation_summary"] = RECONCILIATION_SUMMARY_SQL
-
     for module in _registered_modules():
         for name, fn in module.QUERIES.items():
             assert name not in queries, f"duplicate query name {name}"
             queries[name] = fn
         for name, sql in getattr(module, "ORACLES", {}).items():
-            assert name in module.QUERIES, f"oracle without query: {name}"
+            owner = ALIASES.get(name, name)
+            assert owner in module.QUERIES, f"oracle without query: {name}"
             oracles[name] = sql
+    for alias, canonical in ALIASES.items():
+        assert canonical in queries, f"alias of a missing name: {alias}"
+        assert alias not in queries, f"duplicate query name {alias}"
+        queries[alias] = queries[canonical]
+        if canonical in oracles:
+            oracles.setdefault(alias, oracles[canonical])
 
     ordered: dict[str, QueryFn] = {}
     for name in _window(list(queries), oracles):
@@ -132,22 +160,19 @@ def build_catalog() -> tuple[dict[str, QueryFn], dict[str, str]]:
 
 
 def _registered_modules():
-    mods = [relational]
-    for modname in (
-        "scalar", "scalar2", "relational2", "relational3", "relational4",
-        "relational5", "relational6", "relational7", "relational8",
-        "relational9", "relational10", "sql_twins", "profiling", "timeseries",
-        "quality",
-        "skew", "sessions", "textops", "dedup", "curation", "similarity", "pq",
-        "vecindex", "layout", "topk",
-        "multimodal", "pdfops", "docxops", "xlsxops", "mailops", "rtfops",
-        "cfbops", "wordops", "biffops", "pptops", "archiveops",
-        "incremental", "inference", "rest_fetch", "canonical",
-        "soap_fetch",
-    ):
-        mod = __import__(
-            f"caseguarddatapipeline_spark.operators.{modname}",
-            fromlist=[modname],
+    return [
+        importlib.import_module(f"caseguarddatapipeline_spark.operators.{name}")
+        for name in (
+            "reconcile", "relational",
+            "scalar", "scalar2", "relational2", "relational3", "relational4",
+            "relational5", "relational6", "relational7", "relational8",
+            "relational9", "relational10", "profiling", "timeseries",
+            "quality",
+            "skew", "sessions", "textops", "dedup", "curation", "similarity",
+            "pq", "vecindex", "layout", "topk",
+            "multimodal", "pdfops", "docxops", "xlsxops", "mailops", "rtfops",
+            "cfbops", "wordops", "biffops", "pptops", "archiveops",
+            "incremental", "inference", "rest_fetch", "canonical",
+            "soap_fetch",
         )
-        mods.append(mod)
-    return mods
+    ]

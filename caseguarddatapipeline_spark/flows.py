@@ -26,7 +26,11 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators.reconcile import reconcile_fused
+from .operators.reconcile import (
+    CHANGE_RATE_MAX,
+    COUNT_DIVERGENCE_MAX,
+    reconcile_fused,
+)
 from .operators.topk import exact_rank, range_buckets
 from .sources.connectors import csv_case_scan
 from .streaming.jobs import JOB_SCHEMA, jobs_from_reconciliation, run_jobs_stream
@@ -250,9 +254,9 @@ def sync_tenant_daily(
     ``reconcile_fused`` subplan; nothing is recomputed per step."""
     detail = reconcile_fused(spark, sf_dir).cache()
     try:
-        # summary aggregated FROM the cached detail (not via
-        # reconciliation_summary, which would rebuild the plan and only
-        # reuse the cache if fragment-matching canonicalizes identically)
+        # one aggregate over the cached detail feeds both the summary and
+        # the quality gate: every gate count is a sum of per-change-type
+        # counts (a19_reconciliation_quality computes the same figures)
         summary = {
             r.change_type: {
                 "n_entities": r.n_entities,
@@ -265,23 +269,20 @@ def sync_tenant_daily(
             )
             .collect()
         }
-        agg = detail.agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.count(F.when(F.col("change_type") != "deactivated", 1)).alias("n_crm"),
-            F.count(F.when(F.col("change_type") != "new", 1)).alias("n_store"),
-            F.count(
-                F.when(
-                    F.col("change_type").isin("new", "deactivated", "update"), 1
-                )
-            ).alias("n_changes"),
-        ).collect()[0]
-        change_rate = agg.n_changes / agg.n_total if agg.n_total else 0.0
+        n = {k: v["n_entities"] for k, v in summary.items()}
+        n_total = sum(n.values())
+        n_crm = n_total - n.get("deactivated", 0)
+        n_store = n_total - n.get("new", 0)
+        n_changes = n_total - n.get("unchanged", 0)
+        change_rate = n_changes / n_total if n_total else 0.0
         divergence = (
-            abs(agg.n_crm - agg.n_store) / max(agg.n_crm, agg.n_store)
-            if max(agg.n_crm, agg.n_store)
+            abs(n_crm - n_store) / max(n_crm, n_store)
+            if max(n_crm, n_store)
             else 0.0
         )
-        quality_ok = change_rate <= 0.2 and divergence <= 0.1
+        quality_ok = (
+            change_rate <= CHANGE_RATE_MAX and divergence <= COUNT_DIVERGENCE_MAX
+        )
         report = {
             "summary": summary,
             "quality": {

@@ -576,8 +576,8 @@ def e1_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     every bit, so its fingerprint is 0 exactly as the empty-array fold
     produced). (2) The measured build/exec split was ~1.2 s of py4j
     expression construction per serving run (32 aggs + the fp sum built
-    node-by-node), so the query is served as ONE spark.sql parse — the
-    sql_twins pattern, identical algebra text-for-text."""
+    node-by-node), so the query is served as ONE spark.sql parse over
+    the scoped views, identical algebra text-for-text."""
     from ..sources.tables import scoped_views
 
     v = scoped_views(spark, sf_dir)
@@ -1613,7 +1613,6 @@ QUERIES = {
     "e1_dedup_stats": e1_dedup_stats,
     "e1_ngram_jaccard": e1_ngram_jaccard,
     "e1_minhash_lsh": e1_minhash_lsh,
-    "e1_minhash_lsh_vectorized": e1_minhash_lsh,
     "e1_simhash": e1_simhash,
     "e1_dedup_clusters": e1_dedup_clusters,
 }
@@ -1892,9 +1891,6 @@ ORACLES = {
         WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
     """,
 }
-
-# identical integer pipeline, different execution strategy → same oracle
-ORACLES["e1_minhash_lsh_vectorized"] = ORACLES["e1_minhash_lsh"]
 
 # Same 1-round quantizer the e2 search oracle pins (shared CTE chain), then:
 # top-2 cell multi-assignment by centroid cosine, same-cell candidate pairs,

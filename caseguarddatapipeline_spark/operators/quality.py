@@ -628,19 +628,14 @@ def e3_zscore_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return zscore_by_source_scaled(load_table(spark, sf_dir, "documents"))
 
 
-# Each ``_scaled`` name is the same function object as its base name:
-# one skew-proof body serves both, checked against the one oracle.
 QUERIES = {
     "e3_gopher_rules": e3_gopher_rules,
-    "e3_zscore_by_source_scaled": e3_zscore_by_source,
     "e3_text_normalize": e3_text_normalize,
     "e3_zscore_by_source": e3_zscore_by_source,
     "e5_global_shuffle": e5_global_shuffle,
     "e5_curriculum_order": e5_curriculum_order,
-    "e5_curriculum_order_scaled": e5_curriculum_order,
     "e5_weighted_sample": e5_weighted_sample,
     "e5_token_budget_sample": e5_token_budget_sample,
-    "e5_token_budget_sample_scaled": e5_token_budget_sample,
     "e5_global_token_budget": e5_global_token_budget,
     "e5_soft_dedup_sample": e5_soft_dedup_sample,
     "w11_gaps_islands": w11_gaps_islands,
@@ -809,11 +804,6 @@ ORACLES = {
         FROM keyed GROUP BY user_id, island_key
     """,
 }
-
-# one body, two catalog names → one oracle
-ORACLES["e3_zscore_by_source_scaled"] = ORACLES["e3_zscore_by_source"]
-ORACLES["e5_curriculum_order_scaled"] = ORACLES["e5_curriculum_order"]
-ORACLES["e5_token_budget_sample_scaled"] = ORACLES["e5_token_budget_sample"]
 
 
 def _soft_dedup_oracle() -> str:

@@ -21,8 +21,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..sources import load_table
+from ..sources.tables import PLAIN_VIEWS, scoped_views
 from .reconcile import crm_snapshot, store_snapshot
-from .sql_twins import QUERIES as SQL_TWINS
 from .topk import exact_rank, range_buckets
 
 # --------------------------------------------------------------------------
@@ -147,8 +147,6 @@ def j5_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round-13 optimization: the method-chain build cost ~34 ms of py4j
     hops per execution); same plan — part is under the auto-broadcast
     threshold, and the BROADCAST hint pins it."""
-    from ..sources.tables import scoped_views
-
     v = scoped_views(spark, sf_dir)
     return spark.sql(f"""
         SELECT /*+ BROADCAST(p) */ p_brand,
@@ -272,8 +270,6 @@ def a5_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-agg GROUP BY status,priority (dashboard.py:250-261):
     count/avg/max/min — partial+final hash agg, no extra shuffle beyond the
     group keys. One spark.sql parse (round-13 serving optimization)."""
-    from ..sources.tables import scoped_views
-
     v = scoped_views(spark, sf_dir)
     return spark.sql(f"""
         SELECT o_orderstatus, o_orderpriority,
@@ -290,8 +286,6 @@ def a6_hourly_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly throughput (dashboard.py:264-273): date_trunc('hour') GROUP
     BY hour × event_type. Hour emitted as a string for cross-engine-stable
     hashing of the ns-precision events clock."""
-    from ..sources.tables import scoped_views
-
     v = scoped_views(spark, sf_dir)  # views go through load_table (ns→µs)
     return spark.sql(f"""
         SELECT date_format(date_trunc('hour', ts),
@@ -372,8 +366,6 @@ def w1_recent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w2_recent_events_per_entity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-N history per case (embedder.py:122-130): latest 3 events per
     entity via a row_number window (one shuffle on the entity key)."""
-    from ..sources.tables import scoped_views
-
     v = scoped_views(spark, sf_dir)
     return spark.sql(f"""
         SELECT user_id, event_id, event_type, rn
@@ -439,6 +431,60 @@ def w7_priority_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --------------------------------------------------------------------------
+# Q — TPC-H headline shapes. Each is one ``spark.sql`` parse over the
+# scoped views: one parse/analyze round trip, ~10× cheaper plan
+# construction than a DataFrame method chain, which pays one py4j hop per
+# operator. Its oracle is the identical text over DuckDB's plain table
+# names, so the two engines cannot drift. Join strategy is Catalyst's
+# (dims broadcast by size estimate, facts shuffle once, top-k collapses
+# to TakeOrderedAndProject) — asserted in tests/test_plans.py.
+# --------------------------------------------------------------------------
+
+_Q1_SQL = """
+        SELECT l_returnflag, l_linestatus,
+               round(sum(l_quantity), 2) AS sum_qty,
+               round(sum(l_extendedprice), 2) AS sum_base_price,
+               round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+               round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
+               round(avg(l_quantity), 4) AS avg_qty,
+               round(avg(l_extendedprice), 4) AS avg_price,
+               round(avg(l_discount), 6) AS avg_disc,
+               count(*) AS count_order
+        FROM {lineitem}
+        WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
+        GROUP BY l_returnflag, l_linestatus
+    """
+
+_Q3_SQL = """
+        SELECT l_orderkey, o_orderpriority,
+               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        FROM {lineitem}
+        JOIN {orders} ON l_orderkey = o_orderkey
+        JOIN {customer} ON o_custkey = c_custkey
+        WHERE l_shipdate > TIMESTAMP '1997-06-01 00:00:00'
+          AND o_orderdate < TIMESTAMP '1997-06-01 00:00:00'
+          AND c_mktsegment = 'BUILDING'
+        GROUP BY l_orderkey, o_orderpriority
+        ORDER BY revenue DESC, l_orderkey ASC
+        LIMIT 10
+    """
+
+
+def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pricing summary per return flag × line status (TPC-H Q1 shape):
+    one filtered lineitem scan into a partial/final hash aggregate (also
+    served as q1_pricing_summary_sql)."""
+    return spark.sql(_Q1_SQL.format(**scoped_views(spark, sf_dir)))
+
+
+def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-10 unshipped orders by revenue for one market segment (TPC-H
+    Q3 shape): a three-way join, a two-key aggregate and a top-k (also
+    served as q3_shipping_priority_sql)."""
+    return spark.sql(_Q3_SQL.format(**scoped_views(spark, sf_dir)))
+
+
 QUERIES = {
     "p1_active_filter": p1_active_filter,
     "p4_document_admission": p4_document_admission,
@@ -464,9 +510,8 @@ QUERIES = {
     "w5_batch_numbering": w5_batch_numbering,
     "w5_batch_numbering_by_key": w5_batch_numbering_by_key,
     "w7_priority_bands": w7_priority_bands,
-    # one body per headline TPC-H shape: the SQL-surface twin's
-    "q1_pricing_summary": SQL_TWINS["q1_pricing_summary_sql"],
-    "q3_shipping_priority": SQL_TWINS["q3_shipping_priority_sql"],
+    "q1_pricing_summary": q1_pricing_summary,
+    "q3_shipping_priority": q3_shipping_priority,
 }
 
 ORACLES = {
@@ -642,31 +687,6 @@ ORACLES = {
                     ELSE 'low' END AS priority_band
         FROM orders
     """,
-    "q1_pricing_summary": """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_quantity), 2) AS sum_qty,
-               round(sum(l_extendedprice), 2) AS sum_base_price,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-               round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-               round(avg(l_quantity), 4) AS avg_qty,
-               round(avg(l_extendedprice), 4) AS avg_price,
-               round(avg(l_discount), 6) AS avg_disc,
-               count(*) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-        GROUP BY l_returnflag, l_linestatus
-    """,
-    "q3_shipping_priority": """
-        SELECT l_orderkey, o_orderpriority,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        WHERE l_shipdate > TIMESTAMP '1997-06-01 00:00:00'
-          AND o_orderdate < TIMESTAMP '1997-06-01 00:00:00'
-          AND c_mktsegment = 'BUILDING'
-        GROUP BY l_orderkey, o_orderpriority
-        ORDER BY revenue DESC, l_orderkey ASC
-        LIMIT 10
-    """,
+    "q1_pricing_summary": _Q1_SQL.format(**PLAIN_VIEWS),
+    "q3_shipping_priority": _Q3_SQL.format(**PLAIN_VIEWS),
 }

@@ -16,7 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import load_table
-from .reconcile import reconcile_fused
+from .reconcile import CHANGE_RATE_MAX, COUNT_DIVERGENCE_MAX, reconcile_fused
 
 
 def a18_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,9 +77,11 @@ def a19_reconciliation_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_changes",
         F.round(change_rate, 6).alias("change_rate"),
         F.round(divergence, 6).alias("count_divergence"),
-        (change_rate <= 0.2).alias("change_rate_ok"),
-        (divergence <= 0.1).alias("count_consistency_ok"),
-        ((change_rate <= 0.2) & (divergence <= 0.1)).alias("quality_ok"),
+        (change_rate <= CHANGE_RATE_MAX).alias("change_rate_ok"),
+        (divergence <= COUNT_DIVERGENCE_MAX).alias("count_consistency_ok"),
+        (
+            (change_rate <= CHANGE_RATE_MAX) & (divergence <= COUNT_DIVERGENCE_MAX)
+        ).alias("quality_ok"),
     )
 
 

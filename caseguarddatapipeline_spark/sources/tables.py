@@ -34,6 +34,10 @@ TABLES = [
     "embeddings",
 ]
 
+# What a one-text operator's oracle is formatted with: DuckDB reads the
+# plain table names where the Spark body reads ``scoped_views`` names.
+PLAIN_VIEWS = {name: name for name in TABLES}
+
 
 # Plan cache: re-loading the same table re-reads parquet footers and re-runs
 # analysis (~tens of ms per table per query); DataFrames are immutable plans

@@ -22,7 +22,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.reconcile import crm_snapshot, reconcile, store_snapshot
+from ..operators.reconcile import reconcile_fused
 from .jobs import jobs_from_reconciliation, run_jobs_stream
 
 
@@ -44,7 +44,7 @@ def scheduled_daily_sync(
     ckpt_dir = os.path.join(workdir, "checkpoint")
     os.makedirs(queue_dir, exist_ok=True)
 
-    detail = reconcile(crm_snapshot(spark, sf_dir), store_snapshot(spark, sf_dir))
+    detail = reconcile_fused(spark, sf_dir)
     jobs_from_reconciliation(detail).write.mode("append").json(queue_dir)
 
     run_jobs_stream(

@@ -84,6 +84,34 @@ def test_window_rotation_is_stalest_first():
         )
 
 
+def test_aliases_live_in_one_table():
+    """A second catalog name for one body is registered only in
+    ``catalog.ALIASES``: no operator module maps two names to one
+    function object or registers a function defined in another module."""
+    from caseguarddatapipeline_spark.catalog import _registered_modules
+
+    problems = []
+    for module in _registered_modules():
+        seen = {}
+        for name, fn in module.QUERIES.items():
+            if id(fn) in seen:
+                problems.append(f"{name} and {seen[id(fn)]} share one body")
+            seen[id(fn)] = name
+            if fn.__module__ != module.__name__:
+                problems.append(f"{module.__name__} registers {fn.__module__}.{name}")
+    assert not problems, problems
+
+
+def test_catalog_rejects_an_alias_of_a_missing_name(monkeypatch):
+    """An ``ALIASES`` entry whose canonical name is absent fails catalog
+    assembly, like a mistyped pin."""
+    from caseguarddatapipeline_spark import catalog
+
+    monkeypatch.setattr(catalog, "ALIASES", {**catalog.ALIASES, "x_alias": "no_such_query"})
+    with pytest.raises(AssertionError, match="alias of a missing name: x_alias"):
+        catalog.build_catalog()
+
+
 def test_window_rejects_a_pinned_name_missing_from_the_catalog(monkeypatch):
     """A mistyped ``_PINNED`` name fails catalog assembly instead of
     silently dropping out of the correctness window."""

@@ -90,6 +90,15 @@ def test_sync_tenant_daily_gates_and_enqueues(spark, sf_dir, tmp_path):
     q = report["quality"]
     assert 0.0 <= q["change_rate"] <= 1.0
     assert isinstance(q["quality_ok"], bool)
+    # the flow's gate and the a19 operator report the same figures
+    from caseguarddatapipeline_spark.operators.relational5 import (
+        a19_reconciliation_quality,
+    )
+
+    a19 = a19_reconciliation_quality(spark, sf_dir).collect()[0]
+    assert (q["change_rate"], q["count_divergence"], q["quality_ok"]) == (
+        a19.change_rate, a19.count_divergence, a19.quality_ok
+    )
     n_actionable = (
         report["summary"]["new"]["n_entities"]
         + report["summary"]["update"]["n_entities"]

@@ -114,18 +114,18 @@ def test_sql_twins_cross_sf_isolation(spark):
     assert small and big and big > small
 
 
-def test_sql_twin_matches_dataframe_twin(spark, sf_dir):
-    # the flagship keeps two bodies (entry() and its one-parse twin)
-    for sql_name, df_name in [
-        ("a1_reconciliation_summary_sql", "a1_reconciliation_summary"),
-    ]:
-        got = sorted(map(tuple, QUERIES[sql_name](spark, sf_dir).collect()))
-        want = sorted(map(tuple, QUERIES[df_name](spark, sf_dir).collect()))
-        assert got == want, sql_name
+def test_a1_body_matches_both_oracles(spark, sf_dir):
+    """The flagship has one body and two oracle texts (the CTE form and
+    the single-join form): the body must match each of them."""
+    from tests.test_quality import _oracle_problems
+
+    df = QUERIES["a1_reconciliation_summary"](spark, sf_dir)
+    for name in ("a1_reconciliation_summary", "a1_reconciliation_summary_sql"):
+        assert _oracle_problems(sf_dir, df, name) == [], name
 
 
 # Catalog names served by ONE body: each pair is the same function object,
-# so the two names cannot drift apart (each keeps its own oracle).
+# so the two names cannot drift apart (catalog.ALIASES registers the second).
 ALIAS_PAIRS = [
     ("q1_pricing_summary", "q1_pricing_summary_sql"),
     ("q3_shipping_priority", "q3_shipping_priority_sql"),
@@ -139,6 +139,7 @@ ALIAS_PAIRS = [
     ("e1_minhash_lsh", "e1_minhash_lsh_vectorized"),
     ("e1_span_dedup", "e1_span_dedup_sql"),
     ("e2_sq8_search", "e2_sq8_search_sql"),
+    ("a1_reconciliation_summary", "a1_reconciliation_summary_sql"),
 ]
 
 

@@ -5,11 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from caseguarddatapipeline_spark.operators.reconcile import (
-    crm_snapshot,
-    reconcile,
-    store_snapshot,
-)
+from caseguarddatapipeline_spark.operators.reconcile import reconcile_fused
 from caseguarddatapipeline_spark.streaming.jobs import (
     MAX_RETRIES,
     drain_queue,
@@ -19,7 +15,7 @@ from caseguarddatapipeline_spark.streaming.jobs import (
 
 
 def test_jobs_from_reconciliation(spark, sf_dir):
-    detail = reconcile(crm_snapshot(spark, sf_dir), store_snapshot(spark, sf_dir))
+    detail = reconcile_fused(spark, sf_dir)
     jobs = jobs_from_reconciliation(detail)
     rows = jobs.collect()
     assert len(rows) > 0
@@ -40,7 +36,7 @@ def test_process_batch_outcomes(spark):
 
 
 def test_drain_queue_end_to_end(spark, sf_dir, tmp_path):
-    detail = reconcile(crm_snapshot(spark, sf_dir), store_snapshot(spark, sf_dir))
+    detail = reconcile_fused(spark, sf_dir)
     jobs = jobs_from_reconciliation(detail)
     n_jobs = jobs.count()
     queue = str(tmp_path / "queue")

@@ -45,9 +45,6 @@ def main() -> int:
             src = f"{mod}.py"
         oracle = "sql" if name in oracles else "rows-only"
         summary = first_sentence(target.__doc__).replace("|", "\\|")
-        if not summary and mod == "sql_twins":
-            summary = ("single `spark.sql()` body — one query text shared "
-                       "verbatim with its DuckDB oracle")
         print(f"| `{name}` | {oracle} | {src} | {summary} |")
     return 0
 
