@@ -247,7 +247,7 @@ def compaction_plan(
     outputs) are exactly the writers that fragment at 100 TB — this is
     the OPTIMIZE/compact maintenance pass a lakehouse schedules against
     them (Delta OPTIMIZE / Hudi clustering analog, planned from a
-    manifest-sized listing). Pass ``files`` (a ``list_partition_files``
+    metadata-sized listing). Pass ``files`` (a ``list_partition_files``
     result) to reuse an existing listing — on object stores the recursive
     listing IS the expensive metadata call."""
     plan = []
@@ -291,8 +291,8 @@ def compact_partitions(
     first and long-lived readers can run at startup. A manifest commit
     removes the window entirely at the cost of double storage until
     retention — that path exists as ``sources/versioned.compact_snapshot``
-    (version pointer swap) and is the right trade on object stores,
-    where rename is a copy and non-atomic.
+    and is the right trade on object stores, where rename is a copy and
+    non-atomic.
     Untouched partitions keep their original files byte-for-byte; no data
     row crosses the driver. Idempotent: re-running on a compacted dataset
     is a no-op.
@@ -590,7 +590,7 @@ def recover_compaction(
     Caveats (documented, not solved here): on a filesystem whose directory
     rename is non-atomic (object stores), a partially-materialized live dir
     is indistinguishable from a completed swap — deploy on such stores only
-    behind a manifest-committing table format
+    behind a table format that commits by manifest
     (``sources/versioned.compact_snapshot``). Lease freshness compares the
     checker's clock against the storage system's mtime clock, so
     cross-host skew effectively widens or narrows the lease by the skew —

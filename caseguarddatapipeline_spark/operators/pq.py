@@ -184,7 +184,7 @@ def _pq_store_dir(sf_dir: str) -> str:
     from ..sources.stores import fingerprint_store_dir
 
     return fingerprint_store_dir(
-        sf_dir, "embeddings.parquet", "caseguard_pqindex", layout_version=2
+        sf_dir, "embeddings.parquet", "caseguard_pqindex", layout_version=3
     )
 
 
@@ -210,8 +210,8 @@ def publish_pq_index(
     spark: SparkSession, sf_dir: str, base_dir: str | None = None
 ) -> tuple[str, int]:
     """Train the per-subspace codebooks, ENCODE the corpus, and publish
-    both as ONE immutable versioned snapshot: rows of (kind, vec_id, m,
-    cell, c_sub) with kind ∈ {codebook, code, rcodebook, rcode} — the
+    both as ONE version of a lake-table store (one manifest commit):
+    rows of (kind, vec_id, m, cell, c_sub) with kind ∈ {codebook, code, rcodebook, rcode} — the
     raw-vector codebooks/codes AND their residual (by_residual=true)
     twins, trained on (vector − coarse centroid). Unlike the IVF store
     (k×dim metadata), the CODES relations are the compressed corpus
@@ -268,13 +268,11 @@ def _load_pq_index(
     by_residual twins (rcodebook/rcode kinds). Parquet round-trips
     doubles bit-exactly, so the 6dp-rounded codebooks the oracle
     recomputes in SQL match the persisted ones."""
-    import os
-
-    from ..sources.versioned import read_version
+    from ..sources.versioned import has_version, read_version
     from ..sources.stores import memo_snapshot as _memo_snapshot
 
     base = _pq_store_dir(sf_dir)
-    if not os.path.exists(os.path.join(base, "_LATEST")):
+    if not has_version(base):
         publish_pq_index(spark, sf_dir, base)
     # memo holds the lazy snapshot FRAME per (session, store, version) —
     # a republish bumps the version and misses; the snapshot files stay

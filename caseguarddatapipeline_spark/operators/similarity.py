@@ -573,7 +573,7 @@ def _index_store_dir(sf_dir: str) -> str:
     from ..sources.stores import fingerprint_store_dir
 
     return fingerprint_store_dir(
-        sf_dir, "embeddings.parquet", "caseguard_annindex", layout_version=1
+        sf_dir, "embeddings.parquet", "caseguard_annindex", layout_version=2
     )
 
 
@@ -581,11 +581,12 @@ def publish_ivf_index(
     spark: SparkSession, sf_dir: str, base_dir: str | None = None
 ) -> tuple[str, int]:
     """Build the IVF coarse quantizer (seeds + one and two exact Lloyd
-    rounds) and PUBLISH it as an immutable versioned snapshot
-    (``sources/versioned.write_version``): rows of (kind, cell, vec) with
-    kind ∈ {seed, round1, round2}. This is how an ANN index survives
-    across jobs and sessions — searches read the snapshot (time-travel
-    and compaction come free from the version store), and rebuilding
+    rounds) and PUBLISH it as the next version of a lake-table store
+    (``sources/versioned.write_version``, one manifest commit): rows of
+    (kind, cell, vec) with kind ∈ {seed, round1, round2}. This is how an
+    ANN index survives across jobs and sessions — searches read the
+    committed version (time-travel and compaction come free from the
+    store), and rebuilding
     after a corpus refresh is just publishing the next version; readers
     mid-search keep their pinned files. Returns (base_dir, version id).
     Mirrors the reference's external vector index
@@ -630,12 +631,10 @@ def _load_ivf_index(
     of truth (parquet round-trips doubles bit-exactly, so the 6dp-rounded
     quantizer the oracle recomputes in SQL matches the persisted one);
     the version-keyed memo only spares the per-plan-build re-read."""
-    import os
-
-    from ..sources.versioned import read_version
+    from ..sources.versioned import has_version, read_version
 
     base = _index_store_dir(sf_dir)
-    if not os.path.exists(os.path.join(base, "_LATEST")):
+    if not has_version(base):
         publish_ivf_index(spark, sf_dir, base)
 
     def _load(v: int) -> dict[str, list[list[float]]]:

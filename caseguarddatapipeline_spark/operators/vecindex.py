@@ -9,9 +9,9 @@ partitioned by ``cell``, the materialized form of the claim every IVF
 docstring makes: *at 100 TB, cell persists as a partition column and the
 probe join becomes partition pruning*.
 
-Three lifecycle verbs, all through ``sources/versioned`` (immutable
-snapshots + atomic latest-pointer swap, so readers mid-search keep their
-pinned files and time travel is free):
+Three lifecycle verbs, all through ``sources/versioned`` (write-once
+files + manifest commits, so readers mid-search keep their pinned files
+and time travel is free):
 
 - ``publish_ivf_postings``: assign every corpus vector to its nearest
   round-1 centroid (the persisted quantizer from
@@ -19,10 +19,9 @@ pinned files and time travel is free):
 - ``ivf_postings_upsert``: the Pinecone verb — assign NEW/CHANGED vectors
   with the persisted quantizer (no retrain, matching production IVF
   serving; retraining is a quantizer republish + postings rebuild),
-  last-writer-wins on vec_id, publish the merged postings as the next
-  version. Copy-on-write like Delta MERGE; with a manifest-bearing table
-  format the rewrite narrows to the touched cell partitions.
-- ``ivf_postings_delete``: anti-join the ids out, publish the next version.
+  last-writer-wins on vec_id, and commit only the touched cells as the
+  next version (untouched cells' files are carried forward).
+- ``ivf_postings_delete``: drop the ids, committing only their cells.
 
 ``s12_postings_search`` is the oracle-backed query face: multi-probe top-3
 served FROM the snapshot. Probe cells are k-sized index metadata, so they
@@ -38,12 +37,16 @@ searching the snapshot equals searching the base table).
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import load_table
+from ..sources.versioned import (
+    has_version,
+    read_latest,
+    replace_partitions,
+    write_version,
+)
 from .similarity import (
     _COSINE_DESC,
     _IVF1_NPROBE,
@@ -63,7 +66,7 @@ def _postings_store_dir(sf_dir: str) -> str:
     from ..sources.stores import fingerprint_store_dir
 
     return fingerprint_store_dir(
-        sf_dir, "embeddings.parquet", "caseguard_annpostings", layout_version=1
+        sf_dir, "embeddings.parquet", "caseguard_annpostings", layout_version=2
     )
 
 
@@ -80,8 +83,6 @@ def publish_ivf_postings(
     it as a cell-partitioned versioned snapshot. One map-only corpus pass
     (broadcast-literal centroids, no shuffle of vectors) + the write.
     Returns (base_dir, version id)."""
-    from ..sources.versioned import write_version
-
     _, cents = _ivf1_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     base = base_dir or _postings_store_dir(sf_dir)
@@ -90,9 +91,37 @@ def publish_ivf_postings(
 
 def _ensure_postings(spark: SparkSession, sf_dir: str, base_dir: str | None) -> str:
     base = base_dir or _postings_store_dir(sf_dir)
-    if not os.path.exists(os.path.join(base, "_LATEST")):
+    if not has_version(base):
         publish_ivf_postings(spark, sf_dir, base)
     return base
+
+
+def _replace_cells(
+    spark: SparkSession, base: str, ids: DataFrame, fresh: DataFrame
+) -> int:
+    """Drop ``ids`` from the postings, add the ``fresh`` postings, and
+    commit only the touched cells: the cells the fresh vectors land in
+    plus the dropped ids' current home cells (a replaced embedding can
+    migrate cells, and a deleted id leaves its cell). The touched set is
+    passed EXPLICITLY — a cell the batch empties writes no files, and
+    without the declaration its old files would be carried forward with
+    the stale posting in them. Bounded metadata: <= 2x batch cells."""
+    current = read_latest(spark, base)
+    cells = (
+        current.join(ids, "vec_id", "left_semi")
+        .select("cell")
+        .unionByName(fresh.select("cell"))
+    )
+    touched = {int(r["cell"]) for r in cells.distinct().collect()}
+    rows = (
+        current.filter(F.col("cell").isin(sorted(touched)))
+        .select("vec_id", "emb", F.col("cell").cast("int").alias("cell"))
+        .join(ids, "vec_id", "left_anti")
+        .unionByName(fresh)
+    )
+    return replace_partitions(
+        rows, base, ["cell"], touched={(f"cell={c}",) for c in touched}
+    )
 
 
 def ivf_postings_upsert(
@@ -112,109 +141,22 @@ def ivf_postings_upsert(
     exactly how serving-path IVF upserts work; drift is handled by
     republishing the quantizer and rebuilding (``publish_ivf_postings``).
 
-    Scale note (round 11): the versioned store commits whole snapshots,
-    so THIS implementation rewrites O(corpus) per batch — fine for the
-    sandbox store, wrong at 100 TB. The O(touched cells) form is
-    ``ivf_postings_upsert_partitioned`` below (ManifestTableFormat
-    ``replace_partitions`` — Delta/Iceberg analog: ``replaceWhere`` /
-    INSERT OVERWRITE partitions), pinned row-identical to this one by
-    tests/test_vecindex_partitioned.py.
+    The commit rewrites only the touched cells; every other cell's files
+    are carried forward by reference (``replace_partitions`` — Delta
+    ``replaceWhere``), so a batch costs O(touched cells), not O(corpus):
+    FAISS ``add()`` over a lake table.
 
-    Writer discipline: the version store makes CONCURRENT upserts safe
-    (both snapshots land, the pointer stays monotone) but not
-    transactional — a racing writer that read the same base loses the
-    other's batch (read-modify-write, same as non-conflict-checked
-    MERGEs). One writer per store is the contract; the streaming face
-    (streaming/vecingest.py) enforces it with its ownership marker, and
-    a table format with conflict detection (Delta/Iceberg) upgrades this
-    seam in place."""
-    from ..sources.versioned import read_latest, write_version
-
+    Writer discipline: the store makes CONCURRENT commits safe (both
+    versions land, latest only moves forward) but not transactional — a
+    racing writer that read the same base loses the other's batch
+    (read-modify-write, same as non-conflict-checked MERGEs). One writer
+    per store is the contract; the streaming face (streaming/vecingest.py)
+    enforces it with its ownership marker, and a table format with
+    conflict detection (Delta/Iceberg) upgrades this seam in place."""
     base = _ensure_postings(spark, sf_dir, base_dir)
     _, cents = _ivf1_index(spark, sf_dir)
     fresh = _assign(vectors, cents)
-    merged = (
-        read_latest(spark, base)
-        .join(fresh.select("vec_id"), "vec_id", "left_anti")
-        .unionByName(fresh)
-    )
-    return base, write_version(merged, base, partition_by=["cell"])
-
-
-def publish_ivf_postings_partitioned(
-    spark: SparkSession, sf_dir: str, base_dir: str
-) -> int:
-    """Full-corpus postings build over ``ManifestTableFormat`` — the
-    store whose commits can later be PARTIAL (``replace_partitions``).
-    Same assignment algebra as ``publish_ivf_postings``."""
-    from ..sources.tableformat import ManifestTableFormat
-
-    _, cents = _ivf1_index(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return ManifestTableFormat(base_dir).write(
-        _assign(emb, cents), partition_by=["cell"]
-    )
-
-
-def ivf_postings_upsert_partitioned(
-    spark: SparkSession,
-    sf_dir: str,
-    vectors: DataFrame,
-    base_dir: str,
-) -> int:
-    """The O(touched cells) form of ``ivf_postings_upsert`` (round 11):
-    identical merge semantics — new ids inserted, existing ids replaced,
-    quantizer not retrained — but committed through
-    ``ManifestTableFormat.replace_partitions``, so only the cells the
-    batch's vectors land in are rewritten; every other cell's files are
-    carried forward by reference in the new manifest. At 100 TB a batch
-    touches ~|batch| cells out of k, so the commit cost is bounded by
-    the batch, not the corpus (this is FAISS ``add()`` over a lake
-    table / Delta ``replaceWhere``). Twin-identity with the O(corpus)
-    versioned-store form is pinned by tests/test_vecindex_partitioned.py
-    — same inputs, byte-identical logical table.
-
-    One subtlety the twin test also covers: a REPLACED id may move
-    cells (its new embedding lands elsewhere), so the touched set must
-    include the id's OLD cell too or a stale posting would survive —
-    handled by probing the current table for the batch ids' home cells
-    and folding those into the replaced partition set."""
-    from ..sources.tableformat import ManifestTableFormat
-
-    fmt = ManifestTableFormat(base_dir)
-    _, cents = _ivf1_index(spark, sf_dir)
-    fresh = _assign(vectors, cents)
-    current = fmt.read_latest(spark)
-    # touched = cells the new vectors land in + the batch ids' current
-    # home cells (an updated embedding can migrate cells; its old
-    # posting must be rewritten away). Bounded metadata: <= 2x batch.
-    touched = {
-        int(r["cell"])
-        for r in fresh.select("cell").distinct().collect()
-    } | {
-        int(r["cell"])
-        for r in current.join(
-            fresh.select("vec_id"), "vec_id", "left_semi"
-        )
-        .select("cell")
-        .distinct()
-        .collect()
-    }
-    replaced = (
-        current.filter(F.col("cell").isin(sorted(touched)))
-        .select("vec_id", "emb", F.col("cell").cast("int").alias("cell"))
-        .join(fresh.select("vec_id"), "vec_id", "left_anti")
-        .unionByName(fresh)
-    )
-    # the touched set is passed EXPLICITLY: a migrated id can leave its
-    # old cell empty, and an empty partition writes no files — without
-    # the declaration the old cell's files would be carried forward and
-    # the stale posting would survive (round-11 review finding)
-    return fmt.replace_partitions(
-        replaced,
-        partition_by=["cell"],
-        touched={(f"cell={c}",) for c in touched},
-    )
+    return base, _replace_cells(spark, base, fresh.select("vec_id"), fresh)
 
 
 def ivf_postings_delete(
@@ -223,14 +165,12 @@ def ivf_postings_delete(
     vec_ids: list[int],
     base_dir: str | None = None,
 ) -> tuple[str, int]:
-    """Delete ids from the postings store as a new immutable version."""
-    from ..sources.versioned import read_latest, write_version
-
+    """Delete ids from the postings store as a new immutable version that
+    rewrites only the deleted ids' cells."""
     base = _ensure_postings(spark, sf_dir, base_dir)
-    kept = read_latest(spark, base).filter(
-        ~F.col("vec_id").isin([int(i) for i in vec_ids])
-    )
-    return base, write_version(kept, base, partition_by=["cell"])
+    ids = spark.createDataFrame([(int(i),) for i in vec_ids], "vec_id long")
+    none = spark.createDataFrame([], "vec_id long, emb array<double>, cell int")
+    return base, _replace_cells(spark, base, ids, none)
 
 
 def s12_postings_search(
@@ -245,8 +185,6 @@ def s12_postings_search(
     exact 4dp cosine and a per-query rank. Row-identical to running the
     same assign/probe algebra inline on the base table (pytest pin), so
     the DuckDB oracle below recomputes it from `embeddings` directly."""
-    from ..sources.versioned import read_latest
-
     base = _ensure_postings(spark, sf_dir, base_dir)
     _, cents = _ivf1_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")

@@ -94,11 +94,11 @@ def fingerprint_store_dir(
     return os.path.join(store_root(), store_name, tag)
 
 
-# Memo over PERSISTED versioned snapshots, keyed by (session, store dir,
-# latest version id): the disk snapshot stays the source of truth — a
-# republish bumps the version and misses the memo, so no in-process state
-# survives a republish — but repeated plan builds in a parity sweep stop
-# re-reading + re-collecting the identical snapshot per query. Shared by
+# Memo over PERSISTED store versions, keyed by (session, store dir, latest
+# committed version id): the committed files stay the source of truth — a
+# republish commits a higher version and misses the memo, so no in-process
+# state survives a republish — but repeated plan builds in a parity sweep
+# stop re-reading + re-collecting the identical version per query. Shared by
 # every store reader (IVF quantizer, PQ codebooks) so the invalidation
 # rule cannot diverge between them.
 _SNAPSHOT_MEMO: dict[tuple[str, str, int], object] = {}

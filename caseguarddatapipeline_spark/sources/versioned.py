@@ -1,264 +1,224 @@
-"""Minimal versioned table store: immutable snapshot directories plus an
-atomically-swapped latest pointer — time travel, safe concurrent reads,
-and retention, without a table-format dependency.
+"""The engine's one lake-table store: write-once data directories plus
+numbered manifests — time travel, safe concurrent reads and writes,
+O(touched partitions) commits and retention, without a table-format
+dependency.
 
-Layout:  base_dir/v=N/   (immutable parquet snapshot per version)
-         base_dir/_LATEST (one-line pointer file, written tmp+rename)
+Layout:  base_dir/data/w<uuid>/...        one writer-unique dir per write
+         base_dir/manifests/manifest-N.json   {version, partition_by, files}
 
-Semantics a lake needs and plain ``mode("overwrite")`` lacks:
-- WRITER never mutates data a reader might hold open: each write is a
-  NEW directory; the pointer swap is a single rename (atomic on POSIX
-  and object-store-manifest equivalents), so a concurrent
-  ``read_latest`` sees wholly old or wholly new — never a mix.
-- TIME TRAVEL: ``read_version`` pins any retained snapshot (the input
-  a reproducible training run records is a (base_dir, version) pair).
-- RETENTION: ``vacuum`` deletes all but the newest K snapshots, never
-  the pointed-to one.
+- COMMIT is one manifest: the leaf parquet files a version reads, listed
+  explicitly (data-dir-relative), so a half-written or abandoned data dir
+  is invisible by construction. The manifest is written in full to a
+  uniquely named temp file and hard-linked to ``manifest-N.json``;
+  ``link`` fails with EEXIST instead of replacing, so two writers that
+  pick the same N both land — the loser lists again and takes the next N.
+- LATEST is the highest committed manifest, so it only moves forward;
+  there is no pointer to guard.
+- TIME TRAVEL: ``read_version`` pins any retained version (the input a
+  reproducible run records is a (base_dir, version) pair). Diffing two
+  versions is ``operators.contracts.snapshot_diff(read_version(a),
+  read_version(b))``.
+- PARTIAL COMMITS: ``replace_partitions`` writes new files for the
+  replaced partitions only and carries every other partition's files
+  forward by reference (Delta ``replaceWhere`` / Iceberg overwrite-by-
+  partition) — what keeps the postings upsert at O(touched cells).
+- RETENTION: ``vacuum`` drops all but the newest ``keep`` manifests, then
+  the files no surviving manifest carries; data nobody committed is swept
+  only once cold, because it may belong to an in-flight writer.
 
-This is deliberately the 20-line core of what Delta/Iceberg provide —
-where those are available, swap them in; the call sites keep the same
-shape (write → version id, read by version). Diffing two versions is
-``operators.contracts.snapshot_diff(read_version(a), read_version(b))``.
-
-The exit ramp is ``sources/tableformat.py`` (round 9): a ``TableFormat``
-interface with this store as the sandbox-default implementation and a
-Delta adapter mapping every verb (write/read_version/merge/vacuum) onto
-the open format — the contract suite in tests/test_tableformat.py runs
-any registered adapter through identical assertions.
+Delta Lake maps verb for verb (MIGRATION.md): ``write_version`` is an
+append/overwrite commit, ``read_version`` is ``versionAsOf``,
+``replace_partitions`` is ``replaceWhere``, ``vacuum`` is VACUUM RETAIN.
 """
 
 from __future__ import annotations
 
+import json
+import math
 import os
 import re
+import shutil
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-_PTR = "_LATEST"
+_COMMIT_TRIES = 64  # bound: pathological publisher storms error out
 
 
-def _versions(base_dir: str) -> list[int]:
-    if not os.path.isdir(base_dir):
-        return []
+def _manifest_dir(base_dir: str) -> str:
+    return os.path.join(base_dir, "manifests")
+
+
+def _data_dir(base_dir: str) -> str:
+    return os.path.join(base_dir, "data")
+
+
+def _manifests(base_dir: str) -> dict[int, str]:
+    mdir = _manifest_dir(base_dir)
+    if not os.path.isdir(mdir):
+        return {}
+    return {
+        int(m.group(1)): os.path.join(mdir, f)
+        for f in os.listdir(mdir)
+        if (m := re.fullmatch(r"manifest-(\d+)\.json", f))
+    }
+
+
+def _read_manifest(base_dir: str, version: int) -> dict:
+    path = _manifests(base_dir).get(version)
+    if path is None:
+        raise FileNotFoundError(f"version {version} not retained in {base_dir}")
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def _partition_key(relpath: str) -> tuple[str, ...]:
+    """The k=v directory segments of a data-dir-relative file path — the
+    partition identity shared across versions (the writer dir and the
+    file name are write-local)."""
+    return tuple(p for p in relpath.split("/")[1:-1] if "=" in p)
+
+
+def has_version(base_dir: str) -> bool:
+    """True once the store holds at least one committed version."""
+    return bool(_manifests(base_dir))
+
+
+def latest_version(base_dir: str) -> int:
+    ms = _manifests(base_dir)
+    if not ms:
+        raise FileNotFoundError(f"no committed version in {base_dir}")
+    return max(ms)
+
+
+def _write_data(
+    df: DataFrame, base_dir: str, partition_by: list[str] | None
+) -> list[str]:
+    """Write ``df`` into a fresh writer-unique data dir (no dot or
+    underscore prefix: Spark hides such paths) and return its leaf
+    parquet files, data-dir-relative. Nothing is visible until a manifest
+    lists them."""
+    wdir = os.path.join(_data_dir(base_dir), f"w{uuid.uuid4().hex}")
+    writer = df.write.mode("errorifexists")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(wdir)
+    if not os.path.exists(os.path.join(wdir, "_SUCCESS")):
+        raise IOError(f"snapshot write did not commit: {wdir}")
     return sorted(
-        int(m.group(1))
-        for d in os.listdir(base_dir)
-        if (m := re.fullmatch(r"v=(\d+)", d))
+        os.path.relpath(os.path.join(root, f), _data_dir(base_dir))
+        for root, _, fs in os.walk(wdir)
+        for f in fs
+        if f.endswith(".parquet")
     )
+
+
+def _commit(base_dir: str, partition_by: list[str] | None, files: list[str]) -> int:
+    """Publish ``files`` as the next version and return its id. Every
+    listed file must still exist: a vacuum that swept this writer's data
+    (a writer stalled past ``orphan_age_s``) fails the commit loudly
+    instead of committing a version that points at deleted files."""
+    missing = [
+        f for f in files if not os.path.exists(os.path.join(_data_dir(base_dir), f))
+    ]
+    if missing:
+        raise RuntimeError(
+            f"refusing to commit: {len(missing)} referenced data file(s) "
+            f"vanished before commit (first: {missing[0]}) — a concurrent "
+            "vacuum likely swept the in-flight write; re-run the write"
+        )
+    mdir = _manifest_dir(base_dir)
+    os.makedirs(mdir, exist_ok=True)
+    tmp = os.path.join(mdir, f".pending-{uuid.uuid4().hex}")
+    try:
+        for _ in range(_COMMIT_TRIES):
+            ms = _manifests(base_dir)
+            n = max(ms) + 1 if ms else 0
+            with open(tmp, "w") as fh:
+                json.dump(
+                    {
+                        "version": n,
+                        "partition_by": list(partition_by or []),
+                        "files": files,
+                    },
+                    fh,
+                )
+            try:
+                os.link(tmp, os.path.join(mdir, f"manifest-{n}.json"))
+                return n
+            except FileExistsError:
+                continue  # another writer committed N first: list again
+        raise IOError(f"could not claim a version slot in {base_dir}")
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def write_version(
     df: DataFrame, base_dir: str, partition_by: list[str] | None = None
 ) -> int:
-    """Write ``df`` as the next immutable snapshot and swap the pointer.
-    Returns the new version id.
-
-    ``partition_by`` lays the snapshot out as hive-style partition
-    directories (e.g. ``v=N/cell=3/``) so readers that filter on the
-    partition column get static partition PRUNING at the scan — the
-    versioned-store face of "the probe join becomes partition pruning".
-    Note ``compact_snapshot`` only bin-packs flat snapshots (it lists
-    top-level files) and is a safe no-op on partitioned ones.
-
-    The snapshot is staged in a dot-prefixed temp directory (named by
-    pid+monotonic time, so concurrent writers never share staging) and
-    renamed into place only after the write committed (_SUCCESS marker
-    present), so a crash mid-write leaves an invisible ``.staging-*``
-    dir — never a half-populated ``v=N`` that readers or ``vacuum``
-    would mistake for a real version.
-
-    Concurrent publishers are SAFE, not just crash-safe: two writers can
-    race to the same next version id, and directory rename onto an
-    existing non-empty ``v=N`` fails — the loser re-lists versions and
-    retries the rename under the next free id instead of erroring, so
-    both snapshots land. The pointer swap is MONOTONE (``_swap_pointer``):
-    racing publishers serialize on a tiny lock file, each writes its own
-    uniquely-named temp, and a slow loser can never regress the pointer
-    below a later-published version — it ends on the newest id."""
-    import time
-
-    os.makedirs(base_dir, exist_ok=True)
-    staging = os.path.join(
-        base_dir, f".staging-{os.getpid()}-{time.monotonic_ns()}"
-    )
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    if not os.path.exists(os.path.join(staging, "_SUCCESS")):
-        raise IOError(f"snapshot write did not commit: {staging}")
-    for _ in range(64):  # bound: pathological publisher storms error out
-        vs = _versions(base_dir)
-        n = (vs[-1] + 1) if vs else 0
-        target = os.path.join(base_dir, f"v={n}")
-        try:
-            os.rename(staging, target)
-            break
-        except OSError:
-            if not os.path.exists(target):  # a real failure, not the race
-                raise
-            continue  # another writer claimed v=N: retry under the next id
-    else:
-        raise IOError(f"could not claim a version slot in {base_dir}")
-    _swap_pointer(base_dir, n)
-    return n
+    """Write ``df`` as the next version (a full snapshot) and return its
+    id. ``partition_by`` lays the files out as hive-style partition dirs
+    (``cell=3/``), so readers that filter on the partition column get
+    static partition PRUNING at the scan — the store face of "the probe
+    join becomes partition pruning"."""
+    return _commit(base_dir, partition_by, _write_data(df, base_dir, partition_by))
 
 
-_LOCK_STALE_SECONDS = 30.0
+def replace_partitions(
+    df: DataFrame,
+    base_dir: str,
+    partition_by: list[str],
+    touched: set[tuple[str, ...]] | None = None,
+) -> int:
+    """Commit a version whose manifest lists NEW files for exactly the
+    replaced partitions and carries the latest version's files forward
+    for every other partition — no untouched byte is rewritten. Requires
+    a committed table with the same partition spec.
 
-
-def _swap_pointer(base_dir: str, n: int) -> None:
-    """Advance ``_LATEST`` to ``n`` iff ``n`` is newer than what it holds.
-
-    Readers stay lock-free (they see the pointer only through the atomic
-    ``os.replace``); WRITERS serialize on an ``O_CREAT|O_EXCL`` lock file
-    so the read-compare-swap is not interleaved. Two guarantees plain
-    tmp+rename lacked: (1) each writer's temp file is uniquely named, so
-    racing publishers never clobber or unlink each other's in-flight temp;
-    (2) the pointer is MONOTONE — a slow writer that claimed an older
-    version id cannot overwrite the pointer of a later-published one.
-
-    Stale-lock recovery is RENAME-STEAL, not unlink: a crashed holder's
-    lock (older than ``_LOCK_STALE_SECONDS``) is renamed aside before
-    deletion, and rename is atomic, so exactly ONE of N waiters reclaims
-    it — a bare unlink lets two waiters pass the staleness check, each
-    delete a lock (the second deleting the first's FRESH lock), and both
-    enter the critical section, which can regress the pointer. Release is
-    the SAME atomic-claim trick: each holder writes a unique token into
-    its lock, renames the lock path to a holder-unique name (atomic — it
-    either claims its own lock or a successor's, never a torn state), and
-    unlinks the claim only if the token inside is its own; a foreign token
-    is restored via link(2), which cannot clobber a newer lock. A plain
-    read-token-then-unlink release left a window where a stale-stolen
-    holder deleted its successor's fresh lock."""
-    import time
-
-    ptr = os.path.join(base_dir, _PTR)
-    lock = ptr + ".lock"
-    token = f"{os.getpid()}-{time.monotonic_ns()}"
-    deadline = time.monotonic() + 2 * _LOCK_STALE_SECONDS
-    # Age out forensic ``.rel-*`` orphans left by the lock-restore race
-    # below: each pathological double-overstay leaves one behind, and
-    # nothing else ever deletes them. An orphan older than 4x the stale
-    # window is guaranteed dead — the successor whose claimed lock it
-    # preserves can hold the section at most 1x the window before being
-    # stale-stolen itself, so after 4x no live holder references it.
-    try:
-        prefix = os.path.basename(lock) + ".rel-"
-        for name in os.listdir(base_dir):
-            if not name.startswith(prefix):
-                continue
-            orphan = os.path.join(base_dir, name)
-            try:
-                if time.time() - os.path.getmtime(orphan) > 4 * _LOCK_STALE_SECONDS:
-                    os.unlink(orphan)
-            except OSError:
-                pass  # another waiter swept it, or it vanished: fine
-    except OSError:
-        pass  # listing failed (base_dir racing a teardown): skip the sweep
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, token.encode())
-            os.close(fd)
-            break
-        except FileExistsError:
-            try:  # holder crashed mid-swap: age the lock out
-                if time.time() - os.path.getmtime(lock) > _LOCK_STALE_SECONDS:
-                    # atomic steal: only ONE waiter's rename succeeds
-                    stolen = f"{lock}.stale-{os.getpid()}-{time.monotonic_ns()}"
-                    try:
-                        os.rename(lock, stolen)
-                        os.unlink(stolen)
-                    except OSError:
-                        pass  # another waiter stole it first: retry create
-                    continue
-            except FileNotFoundError:
-                continue  # holder released between the two calls: retry now
-            if time.monotonic() > deadline:
-                raise IOError(f"pointer lock wedged in {base_dir}: {lock}")
-            time.sleep(0.01)
-    try:
-        cur = -1
-        try:
-            with open(ptr) as fh:
-                cur = int(fh.read().strip())
-        except (FileNotFoundError, ValueError):
-            pass
-        if n > cur:
-            tmp = f"{ptr}.tmp-{os.getpid()}-{time.monotonic_ns()}"
-            with open(tmp, "w") as fh:
-                fh.write(str(n))
-            os.replace(tmp, ptr)  # atomic for readers; lock orders writers
-    finally:
-        # Release by ATOMIC claim, not check-then-unlink: rename the lock
-        # path to a holder-unique name first (only one process can win the
-        # rename), THEN inspect the claimed file's token. The old scheme
-        # read the token in place and unlinked the lock path afterwards —
-        # a holder stalled past the stale window could pass the check,
-        # lose the lock to a steal, and unlink the successor's FRESH lock
-        # created in the microseconds between its check and its unlink.
-        rel = f"{lock}.rel-{token}"
-        try:
-            os.rename(lock, rel)
-        except OSError:
-            rel = None  # lock already aged out and stolen: nothing to do
-        if rel is not None:
-            try:
-                with open(rel) as fh:
-                    mine = fh.read() == token
-            except OSError:
-                mine = False
-            if mine:
-                os.unlink(rel)
-            else:
-                # We claimed a SUCCESSOR's live lock (ours was stale-stolen
-                # while we were in the critical section). Put it back with
-                # link(2), which is atomic and fails EEXIST rather than
-                # clobbering a third waiter's lock created in the window.
-                # RESIDUAL WINDOW (unfixable with rename+link alone):
-                # between our rename-claim and this restore, the lock path
-                # is briefly absent, so a third waiter's O_CREAT|O_EXCL
-                # acquire can succeed — then the link fails EEXIST while
-                # the successor still believes it holds the section. Only
-                # reachable after a holder overstays the 30s stale window
-                # TWICE over (ours stale-stolen AND the claim/restore gap
-                # hit); pointer monotonicity plus the n > cur guard bound
-                # the damage to "no regression, possible duplicate
-                # publish attempt of the same version". We make the
-                # anomaly OBSERVABLE instead of silent: the successor's
-                # claimed file stays in place under its .rel- name (its
-                # own release will rename-miss and no-op; the orphan is
-                # forensic evidence) and a warning fires.
-                try:
-                    os.link(rel, lock)
-                except OSError:
-                    import warnings
-
-                    warnings.warn(
-                        f"versioned-store lock restore raced at {lock}: a "
-                        f"third waiter acquired during release; successor's "
-                        f"claimed lock preserved at {rel} for inspection",
-                        RuntimeWarning,
-                        stacklevel=2,
-                    )
-                else:
-                    try:
-                        os.unlink(rel)
-                    except OSError:
-                        pass
-
-
-def latest_version(base_dir: str) -> int:
-    with open(os.path.join(base_dir, _PTR)) as fh:
-        return int(fh.read().strip())
+    ``touched`` is the set of replaced partition identities as
+    ``("col=value", ...)`` tuples. Default: the partitions ``df`` wrote —
+    WRONG whenever a replaced partition ends up EMPTY (an empty frame
+    writes no files, so the old files would be carried forward instead
+    of dropped). Callers that can empty a partition pass it explicitly."""
+    prev = _read_manifest(base_dir, latest_version(base_dir))
+    if prev["partition_by"] != list(partition_by):
+        raise ValueError(
+            f"partition spec mismatch: table is partitioned by "
+            f"{prev['partition_by']}, replace asked {list(partition_by)}"
+        )
+    fresh = _write_data(df, base_dir, partition_by)
+    written = {_partition_key(f) for f in fresh}
+    if touched is None:
+        touched = written
+    elif not written <= touched:
+        raise ValueError(
+            f"df wrote partitions outside the declared touched set: "
+            f"{sorted(written - touched)}"
+        )
+    carried = [f for f in prev["files"] if _partition_key(f) not in touched]
+    return _commit(base_dir, partition_by, sorted(carried + fresh))
 
 
 def read_version(spark: SparkSession, base_dir: str, version: int) -> DataFrame:
-    path = os.path.join(base_dir, f"v={version}")
-    if not os.path.isdir(path):
-        raise FileNotFoundError(f"version {version} not retained in {base_dir}")
-    return spark.read.parquet(path)
+    # After replace_partitions a manifest lists files from SEVERAL writer
+    # dirs; each group reads with its own basePath (recovering the k=v
+    # partition columns) and the groups union. Partition filters push
+    # into every branch, so the scan still prunes.
+    groups: dict[str, list[str]] = {}
+    for f in _read_manifest(base_dir, version)["files"]:
+        groups.setdefault(f.split("/", 1)[0], []).append(f)
+    if not groups:
+        raise FileNotFoundError(f"version {version} in {base_dir} lists no files")
+    data = _data_dir(base_dir)
+    out = None
+    for wdir, files in sorted(groups.items()):
+        part = spark.read.option("basePath", os.path.join(data, wdir)).parquet(
+            *(os.path.join(data, f) for f in files)
+        )
+        out = part if out is None else out.unionByName(part)
+    return out
 
 
 def read_latest(spark: SparkSession, base_dir: str) -> DataFrame:
@@ -268,49 +228,91 @@ def read_latest(spark: SparkSession, base_dir: str) -> DataFrame:
 def compact_snapshot(
     spark: SparkSession, base_dir: str, target_bytes: int = 128 << 20
 ) -> int:
-    """Small-file compaction through the version pointer — the
-    ZERO-ABSENCE-WINDOW path the directory-swap compaction
-    (operators/layout.compact_partitions) documents as the table-format
-    upgrade: the latest snapshot is rewritten into ~``target_bytes``
-    files as a NEW version, and the atomic pointer swap publishes it —
-    readers hold wholly-old or wholly-new, no partition is ever briefly
-    missing, a crash leaves only an invisible staging dir, and the old
-    files live until ``vacuum`` retires them (which is also what makes
-    this costlier: 2× storage until retention, where the directory swap
-    reclaims space immediately). Returns the new version id; no-op
-    (returns the current id) when the snapshot is already a single
-    target-sized file set."""
-    import math
-
+    """Small-file compaction as a new version — the ZERO-ABSENCE-WINDOW
+    path the directory-swap compaction (operators/layout.
+    compact_partitions) documents as the table-format upgrade: the latest
+    version is rewritten into ~``target_bytes`` files (one per partition
+    at most, for a partitioned table) under the same partition spec, and
+    the manifest commit publishes it — readers hold wholly-old or
+    wholly-new, a crash leaves only an uncommitted data dir, and the old
+    files live until ``vacuum`` retires them (2× storage until
+    retention, where the directory swap reclaims space immediately).
+    Returns the new version id; a no-op (returns the current id) when
+    the version is already compact."""
     v = latest_version(base_dir)
-    vdir = os.path.join(base_dir, f"v={v}")
-    files = [
-        os.path.join(vdir, f)
-        for f in os.listdir(vdir)
-        if f.endswith(".parquet") or f.startswith("part-")
-    ]
-    total = sum(os.path.getsize(f) for f in files if os.path.isfile(f))
+    doc = _read_manifest(base_dir, v)
+    files = [os.path.join(_data_dir(base_dir), f) for f in doc["files"]]
+    total = sum(os.path.getsize(f) for f in files)
     n_target = max(1, math.ceil(total / target_bytes))
-    if len(files) <= n_target:
+    n_parts = len({_partition_key(f) for f in doc["files"]})
+    if len(files) <= max(n_target, n_parts):
         return v
-    return write_version(read_version(spark, base_dir, v).repartition(n_target), base_dir)
+    cols = doc["partition_by"]
+    df = read_version(spark, base_dir, v).repartition(n_target, *cols)
+    return write_version(df, base_dir, partition_by=cols)
 
 
-def vacuum(base_dir: str, keep: int = 2) -> list[int]:
-    """Drop all but the newest ``keep`` snapshots (the pointed-to version
-    is always retained). Returns the removed version ids.
+def _newest_mtime(path: str) -> float:
+    """Most recent mtime anywhere under ``path`` — an in-flight write
+    keeps touching files, so this stays fresh until the writer finishes
+    or dies. A path that vanished mid-walk reads as maximally fresh, so
+    the sweep skips it instead of aborting."""
+    try:
+        newest = os.path.getmtime(path)
+    except OSError:
+        return float("inf")
+    for root, dirs, fs in os.walk(path):
+        for name in dirs + fs:
+            try:
+                newest = max(newest, os.path.getmtime(os.path.join(root, name)))
+            except OSError:
+                continue
+    return newest
 
-    Retention contract (same as Delta VACUUM): the pointer swap protects
-    concurrent ``read_latest`` RESOLUTION, but a lazily-built DataFrame
-    pinned to an old version keeps referencing its files — run vacuum
-    with a ``keep`` horizon longer than any job still reading an old
-    snapshot, exactly as you would choose a VACUUM retention period."""
-    import shutil
 
-    keep = max(1, keep)
-    vs = _versions(base_dir)
-    current = latest_version(base_dir)
-    removable = [v for v in vs[:-keep] if v != current] if len(vs) > keep else []
-    for v in removable:
-        shutil.rmtree(os.path.join(base_dir, f"v={v}"))
-    return removable
+def vacuum(base_dir: str, keep: int = 2, orphan_age_s: float = 86400.0) -> list[int]:
+    """Drop all but the newest ``keep`` manifests (the latest always
+    survives), then every file no surviving manifest carries. Returns
+    the dropped version ids.
+
+    A data dir that NO manifest lists is either crash debris or a slow
+    writer still in flight — which is indistinguishable by listing — so
+    it is only swept once cold (newest mtime older than ``orphan_age_s``,
+    default 24 h, far above any write duration); the commit-time
+    existence check backstops a writer stalled past that. Temp manifests
+    left by a crash between write and link go by the same age rule.
+
+    Retention contract (same as Delta VACUUM): a lazily-built DataFrame
+    pinned to an old version keeps referencing its files — choose
+    ``keep`` longer than any job still reading an old version."""
+    ms = _manifests(base_dir)
+    if not ms:
+        return []
+    keep, order = max(1, keep), sorted(ms)
+    survivors, dropped = order[-keep:], order[:-keep]
+    referenced = {f for v in survivors for f in _read_manifest(base_dir, v)["files"]}
+    retired = {f for v in dropped for f in _read_manifest(base_dir, v)["files"]}
+    for v in dropped:  # manifests first: readers lose the reference
+        os.remove(ms[v])
+    now = time.time()
+    mdir = _manifest_dir(base_dir)
+    for name in os.listdir(mdir):
+        path = os.path.join(mdir, name)
+        if name.startswith(".pending-") and now - _newest_mtime(path) > orphan_age_s:
+            os.remove(path)
+    data = _data_dir(base_dir)
+    live_dirs = {f.split("/", 1)[0] for f in referenced}
+    retired_dirs = {f.split("/", 1)[0] for f in retired}
+    for d in os.listdir(data) if os.path.isdir(data) else []:
+        path = os.path.join(data, d)
+        if d in retired_dirs:
+            # committed once: drop whatever no survivor still carries
+            for root, _, fs in os.walk(path, topdown=False):
+                for name in fs:
+                    if os.path.relpath(os.path.join(root, name), data) not in referenced:
+                        os.remove(os.path.join(root, name))
+                if not os.listdir(root):
+                    os.rmdir(root)
+        elif d not in live_dirs and now - _newest_mtime(path) > orphan_age_s:
+            shutil.rmtree(path, ignore_errors=True)
+    return dropped

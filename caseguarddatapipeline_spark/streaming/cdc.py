@@ -19,20 +19,17 @@ NULL entity_id or NULL version (malformed changelog lines under the
 permissive JSON reader) are dropped before the merge — contract failures,
 not data.
 
-State commits through the versioned snapshot store (sources/versioned):
-each batch writes a NEW immutable ``v=N`` directory and atomically swaps
-the ``_LATEST`` pointer — a crash at ANY point leaves the previous state
-readable (the old rmtree-then-rename swap had a window where the live dir
-was gone). Old snapshots vacuum down to a small retention window per
-batch. At scale the state table is bucketed on entity_id so the per-batch
+State commits through the versioned lake-table store (sources/versioned):
+each batch writes NEW immutable files and publishes them with one manifest
+commit — a crash at ANY point leaves the previous state readable (the old
+rmtree-then-rename swap had a window where the live dir was gone). Old
+versions vacuum down to a small retention window per batch. At scale the state table is bucketed on entity_id so the per-batch
 merge join co-locates, and the snapshot commit becomes a table-format
 metadata commit (Delta/Iceberg); the transformation here is the
 engine-agnostic core.
 """
 
 from __future__ import annotations
-
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -43,7 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..sources.versioned import read_latest, vacuum, write_version
+from ..sources.versioned import has_version, read_latest, vacuum, write_version
 
 CDC_SCHEMA = StructType(
     [
@@ -110,7 +107,7 @@ def materialized(state: DataFrame) -> DataFrame:
 
 
 def _read_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    if os.path.exists(os.path.join(state_dir, "_LATEST")):
+    if has_version(state_dir):
         return read_latest(spark, state_dir)
     return spark.createDataFrame([], STATE_DDL)
 
@@ -130,7 +127,7 @@ def run_cdc_stream(
 ):
     """Consume the JSON changelog directory until drained (availableNow)
     and maintain the materialized state at ``state_dir`` as versioned
-    snapshots (crash-safe pointer commit, bounded retention)."""
+    snapshots (crash-safe manifest commit, bounded retention)."""
     stream = (
         spark.readStream.schema(CDC_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))

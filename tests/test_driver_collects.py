@@ -35,8 +35,8 @@ ALLOWED = {
     "quantizer snapshot's seed/round1/round2 centroid rows",
     ("operators/similarity.py", "_ivf_candidates_arrow"): "the 5 queries "
     "(the fixed query set)",
-    ("operators/vecindex.py", "ivf_postings_upsert_partitioned"): "k cells: "
-    "distinct cells the batch touches",
+    ("operators/vecindex.py", "_replace_cells"): "k cells: distinct cells "
+    "the batch touches",
     ("operators/vecindex.py", "s12_postings_search"): "the 5 queries × "
     "nprobe probe cells",
     ("streaming/assembly.py", "run_assembly_stream.handle_batch"): "sources: "

@@ -82,7 +82,27 @@ def test_onboard_then_drain_backlog(spark, tmp_path):
     assert not any(f.startswith("batch_id=") for f in os.listdir(dlq))
 
 
-def test_sync_tenant_daily_gates_and_enqueues(spark, sf_dir, tmp_path):
+def _open_gate(monkeypatch):
+    """Open the daily sync's quality gate: every fixture scale closes it
+    (the synthesized store tags most entities ``deactivated``), so the
+    enqueue path only runs with the thresholds raised to 1.0."""
+    import caseguarddatapipeline_spark.flows as flows_mod
+
+    monkeypatch.setattr(flows_mod, "CHANGE_RATE_MAX", 1.0)
+    monkeypatch.setattr(flows_mod, "COUNT_DIVERGENCE_MAX", 1.0)
+
+
+def _sync_watermark(spark, sf_dir):
+    """The queue file's watermark, recomputed from the detail rows."""
+    from caseguarddatapipeline_spark.operators.reconcile import reconcile_fused
+
+    return max(
+        (r.crm_serialno or 0)
+        for r in reconcile_fused(spark, sf_dir).select("crm_serialno").collect()
+    )
+
+
+def test_sync_tenant_daily_gates_and_enqueues(spark, sf_dir, tmp_path, monkeypatch):
     queue = str(tmp_path / "queue")
     report = sync_tenant_daily(spark, sf_dir, queue)
     assert report["final_status"] == "completed"
@@ -99,25 +119,30 @@ def test_sync_tenant_daily_gates_and_enqueues(spark, sf_dir, tmp_path):
     assert (q["change_rate"], q["count_divergence"], q["quality_ok"]) == (
         a19.change_rate, a19.count_divergence, a19.quality_ok
     )
+    # closed gate: nothing is enqueued
+    assert not q["quality_ok"]
+    assert report["jobs_queued"] == 0 and "queue_file" not in report
+
+    # open gate: the same sync enqueues every actionable change
+    _open_gate(monkeypatch)
+    report = sync_tenant_daily(spark, sf_dir, queue)
+    assert report["quality"]["quality_ok"]
     n_actionable = (
         report["summary"]["new"]["n_entities"]
         + report["summary"]["update"]["n_entities"]
     )
-    if q["quality_ok"]:
-        # filename carries the watermark so the file-stream source sees a
-        # NEW path whenever the sync advances (fixed names are never
-        # re-read by Spark's file source)
-        qfile = report["queue_file"]
-        assert qfile.startswith("sync-wm") and qfile.endswith(".json")
-        jobs = [json.loads(line) for line in open(os.path.join(queue, qfile))]
-        assert report["jobs_queued"] == len(jobs) == n_actionable
-        assert {j["change_type"] for j in jobs} <= {"new", "update"}
-        # new cases outrank updates in the queue
-        assert all(
-            j["priority"] == (1 if j["change_type"] == "new" else 2) for j in jobs
-        )
-    else:
-        assert report["jobs_queued"] == 0
+    # filename carries the watermark so the file-stream source sees a
+    # NEW path whenever the sync advances (fixed names are never
+    # re-read by Spark's file source)
+    qfile = report["queue_file"]
+    assert qfile == f"sync-wm{_sync_watermark(spark, sf_dir):012d}.json"
+    jobs = [json.loads(line) for line in open(os.path.join(queue, qfile))]
+    assert report["jobs_queued"] == len(jobs) == n_actionable > 0
+    assert {j["change_type"] for j in jobs} == {"new", "update"}
+    # new cases outrank updates in the queue
+    assert all(
+        j["priority"] == (1 if j["change_type"] == "new" else 2) for j in jobs
+    )
 
 
 def _collect_path_bytes(jobs_df, batch_size, order_cols):
@@ -186,16 +211,22 @@ def test_distributed_onboard_enqueue_matches_collect_path(spark, tmp_path):
     assert src  # module parsed
 
 
-def test_distributed_sync_enqueue_matches_collect_path(spark, sf_dir, tmp_path):
+def test_distributed_sync_enqueue_matches_collect_path(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """Sync queue file: one executor task streams the sorted rows; bytes
     must equal the old collect path's (priority, job_id)-ordered dump."""
     from caseguarddatapipeline_spark.operators.reconcile import reconcile_fused
     from caseguarddatapipeline_spark.streaming.jobs import jobs_from_reconciliation
 
+    _open_gate(monkeypatch)
     queue = str(tmp_path / "queue")
     report = sync_tenant_daily(spark, sf_dir, queue)
-    if not report["quality"]["quality_ok"]:
-        return  # gate closed at this sf — nothing enqueued by either path
+    assert report["quality"]["quality_ok"]
+    assert report["queue_file"] == (
+        f"sync-wm{_sync_watermark(spark, sf_dir):012d}.json"
+    )
+    assert os.listdir(queue) == [report["queue_file"]]  # staging removed
     qfile = os.path.join(queue, report["queue_file"])
     jobs = jobs_from_reconciliation(reconcile_fused(spark, sf_dir))
     rows = [r.asDict() for r in jobs.orderBy("priority", "job_id").collect()]
@@ -204,7 +235,7 @@ def test_distributed_sync_enqueue_matches_collect_path(spark, sf_dir, tmp_path):
     ).encode()
     with open(qfile, "rb") as fh:
         assert fh.read() == expected
-    assert report["jobs_queued"] == len(rows)
+    assert report["jobs_queued"] == len(rows) > 0
 
 
 def test_onboard_rerun_removes_stale_batches(spark, tmp_path):

@@ -129,5 +129,9 @@ def test_cdc_stream_materializes_and_replays_idempotently(spark, tmp_path):
     assert _state_rows(spark, state_dir) == {1: (11, 2), 3: (30, 1)}
 
     # state history is versioned snapshots with bounded retention
-    versions = [d for d in os.listdir(state_dir) if d.startswith("v=")]
+    from caseguarddatapipeline_spark.sources import versioned as V
+
+    versions = sorted(V._manifests(state_dir))
     assert 1 <= len(versions) <= 3
+    # each full-snapshot version owns one data dir; vacuum removed the rest
+    assert len(os.listdir(V._data_dir(state_dir))) == len(versions)

@@ -1,5 +1,5 @@
 """Streaming vector-index ingestion (streaming/vecingest.py): per-batch
-versioned upsert into the postings store, deterministic in-batch
+touched-cells upsert into the postings store, deterministic in-batch
 last-writer-wins, replay idempotence, and the store-ownership gate."""
 
 from __future__ import annotations
@@ -75,6 +75,25 @@ def test_stream_upserts_versioned_batches(spark, sf_dir, tmp_path):
     v_before = latest_version(base)
     run_vector_upsert_stream(spark, sf_dir, inp, ck, base_dir=base)
     assert latest_version(base) == v_before
+
+
+def test_stream_batch_commits_only_touched_cells(spark, sf_dir, tmp_path):
+    """Each micro-batch commits only the cells its vectors touch: the new
+    version carries every other cell's files from the published index."""
+    from caseguarddatapipeline_spark.sources import versioned as V
+
+    inp, ck = str(tmp_path / "in"), str(tmp_path / "ck")
+    base = str(tmp_path / "posts")
+    os.makedirs(inp)
+    _, v0 = publish_ivf_postings(spark, sf_dir, base)
+    dim = _dim(spark, sf_dir)
+    _write_batch(inp, 1, [(900001, [0.3] * dim, 1), (900002, [-0.2] * dim, 1)])
+    run_vector_upsert_stream(spark, sf_dir, inp, ck, base_dir=base)
+    before = V._read_manifest(base, v0)["files"]
+    after = V._read_manifest(base, latest_version(base))["files"]
+    fresh = set(after) - set(before)
+    assert 1 <= len({V._partition_key(f) for f in fresh}) <= 2
+    assert set(after) & set(before), "the batch rewrote the whole corpus"
 
 
 def test_fresh_checkpoint_against_used_store_fails(spark, sf_dir, tmp_path):

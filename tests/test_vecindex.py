@@ -1,5 +1,5 @@
 """Materialized IVF postings store (operators/vecindex.py): lifecycle
-semantics (publish / upsert / delete through the versioned store), search
+semantics (publish / upsert / delete through the lake-table store), search
 parity with the inline algebra, and the partition-pruning plan claim."""
 
 from __future__ import annotations
@@ -38,11 +38,15 @@ def test_publish_layout_and_content(spark, sf_dir, store):
     base, v0 = store
     assert v0 == 0
     # hive-style cell partitions on disk — the 100 TB layout, literally
-    vdir = f"{base}/v=0"
     import os
 
-    cells = [d for d in os.listdir(vdir) if d.startswith("cell=")]
-    assert len(cells) > 1
+    from caseguarddatapipeline_spark.sources import versioned as V
+
+    doc = V._read_manifest(base, v0)
+    assert doc["partition_by"] == ["cell"]
+    cells = {V._partition_key(f) for f in doc["files"]}
+    assert len(cells) > 1 and all(c[0].startswith("cell=") for c in cells)
+    assert all(os.path.isfile(os.path.join(V._data_dir(base), f)) for f in doc["files"])
     # snapshot content == assigning the corpus inline with the persisted
     # quantizer (parquet round-trips the doubles bit-exactly)
     _, cents = _ivf1_index(spark, sf_dir)
@@ -112,3 +116,22 @@ def test_delete_publishes_next_version(spark, sf_dir, store):
     # deleted ids disappear from search results too
     got = s12_postings_search(spark, sf_dir, base_dir=base)
     assert got.filter(F.col("vec_id").isin([0, 1])).count() == 0
+
+
+def test_delete_commits_only_touched_cells(spark, sf_dir, store):
+    """A delete rewrites only the deleted ids' home cells; every other
+    cell's files are carried forward from the previous version."""
+    from caseguarddatapipeline_spark.sources import versioned as V
+
+    base, v0 = store
+    homes = {
+        r["cell"]
+        for r in read_latest(spark, base).filter(F.col("vec_id").isin([0, 1])).collect()
+    }
+    _, v1 = ivf_postings_delete(spark, sf_dir, [0, 1], base_dir=base)
+    before = V._read_manifest(base, v0)["files"]
+    after = V._read_manifest(base, v1)["files"]
+    untouched = [f for f in before if V._partition_key(f) not in {(f"cell={c}",) for c in homes}]
+    assert untouched and set(untouched) <= set(after)
+    rewritten = {V._partition_key(f) for f in set(after) - set(before)}
+    assert rewritten <= {(f"cell={c}",) for c in homes}

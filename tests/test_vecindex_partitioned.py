@@ -1,7 +1,7 @@
-"""O(touched cells) postings upsert (round 11): the ManifestTableFormat
-``replace_partitions`` path must be LOGICALLY IDENTICAL to the
-O(corpus) versioned-store upsert — same inputs, same final table — while
-physically rewriting only the touched cells' files. Also covers the
+"""O(touched cells) postings upsert: ``ivf_postings_upsert`` must equal an
+independent reference — ``_assign`` over (the corpus minus the batch ids)
+∪ the batch — while physically rewriting only the touched cells' files
+and carrying every other cell's files forward. Also covers the
 cell-migration subtlety: replacing an id whose new embedding lands in a
 DIFFERENT cell must delete the old posting."""
 
@@ -9,16 +9,14 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from caseguarddatapipeline_spark.operators.similarity import _ivf1_index
 from caseguarddatapipeline_spark.operators.vecindex import (
+    _assign,
     ivf_postings_upsert,
-    ivf_postings_upsert_partitioned,
     publish_ivf_postings,
-    publish_ivf_postings_partitioned,
 )
 from caseguarddatapipeline_spark.sources import load_table
-from caseguarddatapipeline_spark.sources.tableformat import (
-    ManifestTableFormat,
-)
+from caseguarddatapipeline_spark.sources import versioned as V
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -42,17 +40,23 @@ def _batch(spark, base_emb, vec_ids, shift):
     )
 
 
+def _apply(corpus, batch):
+    """The reference merge: the corpus minus the batch ids, plus the batch."""
+    return corpus.join(batch.select("vec_id"), "vec_id", "left_anti").unionByName(
+        batch
+    )
+
+
 def test_partitioned_upsert_is_twin_identical_and_partial(spark, tmp_path):
-    emb = load_table(spark, SF_DIR, "embeddings")
+    emb = load_table(spark, SF_DIR, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    _, cents = _ivf1_index(spark, SF_DIR)
     new_ids = emb.agg(F.max("vec_id")).collect()[0][0] + 1
 
-    # store A: O(corpus) versioned form; store B: O(touched cells)
-    a_dir = str(tmp_path / "a")
-    b_dir = str(tmp_path / "b")
-    publish_ivf_postings(spark, SF_DIR, a_dir)
-    v0 = publish_ivf_postings_partitioned(spark, SF_DIR, b_dir)
-    fmt = ManifestTableFormat(b_dir)
-    files_v0 = set(fmt._read_manifest(v0)["files"])
+    base = str(tmp_path / "b")
+    _, v0 = publish_ivf_postings(spark, SF_DIR, base)
+    files_v0 = set(V._read_manifest(base, v0)["files"])
 
     # batch: 3 replaced ids (embeddings shifted -> possible migration)
     # + 2 brand-new ids
@@ -61,81 +65,74 @@ def test_partitioned_upsert_is_twin_identical_and_partial(spark, tmp_path):
         (F.col("vec_id") + new_ids).alias("vec_id"), "embedding"
     )
     batch = replaced.unionByName(brand_new)
+    _, v1 = ivf_postings_upsert(spark, SF_DIR, batch, base)
 
-    ivf_postings_upsert(spark, SF_DIR, batch, a_dir)
-    v1 = ivf_postings_upsert_partitioned(spark, SF_DIR, batch, b_dir)
-
-    from caseguarddatapipeline_spark.sources.versioned import read_latest
-
-    t_a = _table(read_latest(spark, a_dir))
-    t_b = _table(fmt.read_latest(spark))
-    assert t_a == t_b, "partitioned upsert diverged from the O(corpus) twin"
+    corpus1 = _apply(emb, batch)
+    t_b = _table(V.read_latest(spark, base))
+    assert t_b == _table(_assign(corpus1, cents)), (
+        "upsert diverged from the from-scratch assignment of the merged corpus"
+    )
     # each upserted id appears exactly once (the migrated ids' OLD cell
     # postings are gone)
     ids = [r[0] for r in t_b]
     assert len(ids) == len(set(ids))
 
     # physically partial: the new manifest CARRIES files from v0
-    m1 = fmt._read_manifest(v1)
+    m1 = V._read_manifest(base, v1)
     carried = set(m1["files"]) & files_v0
     fresh = set(m1["files"]) - files_v0
     assert carried, "no files carried — the commit rewrote the corpus"
-    assert fresh and all(f.startswith(f"v{v1}/") for f in fresh)
+    assert fresh and len({f.split("/")[0] for f in fresh}) == 1
     # the carried cells are exactly the untouched ones
-    touched_cells = {
-        f.split("/cell=")[1].split("/")[0] for f in fresh
-    }
+    touched_cells = {V._partition_key(f) for f in fresh}
     for f in carried:
-        assert f.split("/cell=")[1].split("/")[0] not in touched_cells
+        assert V._partition_key(f) not in touched_cells
 
     # a second batch composes (the store stays consistent version over
     # version)
     batch2 = _batch(spark, emb, [5], shift=-0.3)
-    ivf_postings_upsert(spark, SF_DIR, batch2, a_dir)
-    ivf_postings_upsert_partitioned(spark, SF_DIR, batch2, b_dir)
-    assert _table(read_latest(spark, a_dir)) == _table(fmt.read_latest(spark))
+    ivf_postings_upsert(spark, SF_DIR, batch2, base)
+    assert _table(V.read_latest(spark, base)) == _table(
+        _assign(_apply(corpus1, batch2), cents)
+    )
 
 
 def test_migration_out_of_singleton_cell_leaves_no_stale_posting(
     spark, tmp_path
 ):
-    """Round-11 review finding: when a replaced id MIGRATES out of a cell
-    that then becomes EMPTY, the empty partition writes no files — so the
-    touched set must be declared explicitly or the old cell's files get
-    carried forward and the stale posting survives. Construct a store
-    where vec_id 999 is the ONLY member of its (stale) home cell, then
-    re-embed it so it lands in its true cell."""
-    from caseguarddatapipeline_spark.operators.similarity import _ivf1_index
-    from caseguarddatapipeline_spark.operators.vecindex import _assign
-
+    """When a replaced id MIGRATES out of a cell that then becomes EMPTY,
+    the empty partition writes no files — so the touched set must be
+    declared explicitly or the old cell's files get carried forward and
+    the stale posting survives. Construct a store where vec_id 999 is the
+    ONLY member of its (stale) home cell, then re-embed it so it lands in
+    its true cell."""
     emb = load_table(spark, SF_DIR, "embeddings")
     _, cents = _ivf1_index(spark, SF_DIR)
     v0 = emb.filter(F.col("vec_id") == 0).select("vec_id", "embedding")
     true_cell = int(_assign(v0, cents).collect()[0]["cell"])
     stale_cell = (true_cell + 1) % len(cents)
 
-    b_dir = str(tmp_path / "b")
-    fmt = ManifestTableFormat(b_dir)
+    base = str(tmp_path / "b")
     v0_emb = [float(x) for x in v0.collect()[0]["embedding"]]
     # initial table: 999 alone in the stale cell + one anchor row in the
     # true cell so both partitions exist
-    fmt.write(
+    V.write_version(
         spark.createDataFrame(
             [(999, v0_emb, stale_cell), (7, v0_emb, true_cell)],
             "vec_id long, emb array<double>, cell int",
         ),
+        base,
         partition_by=["cell"],
     )
-    v1 = ivf_postings_upsert_partitioned(
-        spark, SF_DIR, v0.select(F.lit(999).alias("vec_id"), "embedding"),
-        b_dir,
+    _, v1 = ivf_postings_upsert(
+        spark, SF_DIR, v0.select(F.lit(999).alias("vec_id"), "embedding"), base
     )
     rows = {
-        (int(r.vec_id), int(r.cell)) for r in fmt.read_latest(spark).collect()
+        (int(r.vec_id), int(r.cell)) for r in V.read_latest(spark, base).collect()
     }
     assert rows == {(999, true_cell), (7, true_cell)}, (
         "stale posting survived the cell migration"
     )
     assert not any(
-        f"/cell={stale_cell}/" in f for f in fmt._read_manifest(v1)["files"]
+        f"/cell={stale_cell}/" in f for f in V._read_manifest(base, v1)["files"]
     )

@@ -1,5 +1,6 @@
-"""Versioned table store: immutable snapshots, atomic pointer, time
-travel, retention, and diffing between versions."""
+"""The lake-table store (sources/versioned.py): manifest commits, time
+travel, retention, compaction, commit races, diffing between versions,
+and the rule that no other package module knows the store's layout."""
 
 from __future__ import annotations
 
@@ -19,6 +20,19 @@ from caseguarddatapipeline_spark.sources.versioned import (
     vacuum,
     write_version,
 )
+
+
+def _data_files(base):
+    """Every parquet file under the store's data dir, data-dir-relative."""
+    from caseguarddatapipeline_spark.sources import versioned as V
+
+    data = V._data_dir(base)
+    return {
+        os.path.relpath(os.path.join(root, f), data)
+        for root, _, fs in os.walk(data)
+        for f in fs
+        if f.endswith(".parquet")
+    }
 
 
 def _df(spark, n, bump=0.0):
@@ -53,7 +67,13 @@ def test_vacuum_retains_newest_and_pointer(spark, tmp_path):
         write_version(_df(spark, 5 + i), base)
     removed = vacuum(base, keep=2)
     assert removed == [0, 1]
-    assert sorted(os.listdir(base)) == ["_LATEST", "v=2", "v=3"]
+    # exactly versions 2 and 3 remain, and nothing they do not carry
+    from caseguarddatapipeline_spark.sources import versioned as V
+
+    assert sorted(V._manifests(base)) == [2, 3]
+    assert _data_files(base) == {
+        f for v in (2, 3) for f in V._read_manifest(base, v)["files"]
+    }
     assert read_latest(spark, base).count() == 8
     with pytest.raises(FileNotFoundError):
         read_version(spark, base, 0)
@@ -81,10 +101,10 @@ def test_compact_snapshot_zero_window(spark, tmp_path):
 
     v1 = compact_snapshot(spark, base, target_bytes=64 << 20)
     assert v1 == v0 + 1 and latest_version(base) == v1
-    n_files = len(
-        [f for f in os.listdir(f"{base}/v={v1}") if f.startswith("part-")]
-    )
-    assert n_files == 1
+    from caseguarddatapipeline_spark.sources import versioned as V
+
+    assert len(V._read_manifest(base, v0)["files"]) == 32
+    assert len(V._read_manifest(base, v1)["files"]) == 1
     assert sorted(map(tuple, read_latest(spark, base).collect())) == sorted(
         map(tuple, read_version(spark, base, v0).collect())
     )
@@ -92,178 +112,178 @@ def test_compact_snapshot_zero_window(spark, tmp_path):
     assert compact_snapshot(spark, base, target_bytes=64 << 20) == v1
     # retention reclaims the fragmented version
     assert vacuum(base, keep=1) == [v0]
-    assert not os.path.isdir(f"{base}/v={v0}")
+    assert _data_files(base) == set(V._read_manifest(base, v1)["files"])
+
+
+def test_compact_snapshot_keeps_partition_spec(spark, tmp_path):
+    """Compacting a partitioned version keeps the manifest's partition
+    spec: one file per partition at most, the same rows, pruning intact."""
+    from caseguarddatapipeline_spark.sources import versioned as V
+
+    base = str(tmp_path / "table")
+    df = spark.range(400).selectExpr("id", "CAST(id % 4 AS INT) AS cell")
+    v0 = write_version(df.repartition(8), base, partition_by=["cell"])
+    assert len(V._read_manifest(base, v0)["files"]) == 32  # 8 tasks x 4 cells
+    v1 = V.compact_snapshot(spark, base, target_bytes=64 << 20)
+    doc = V._read_manifest(base, v1)
+    assert doc["partition_by"] == ["cell"] and len(doc["files"]) == 4
+    assert sorted(map(tuple, read_latest(spark, base).collect())) == sorted(
+        map(tuple, read_version(spark, base, v0).collect())
+    )
+    assert V.compact_snapshot(spark, base, target_bytes=64 << 20) == v1
+    got = read_latest(spark, base).filter(F.col("cell") == 2)
+    assert got.count() == 100
+    assert "PartitionFilters: [" in got._jdf.queryExecution().executedPlan().toString()
 
 
 def test_concurrent_writers_both_land(spark, tmp_path, monkeypatch):
-    """Two publishers racing to the same version id: the loser's rename
-    onto the claimed v=N must retry under the next free id — both
-    snapshots land, distinct ids, pointer valid. The race is simulated
-    deterministically by injecting a conflicting v=N directory between
-    the loser's version listing and its rename."""
-    import os as _os
-
+    """Two publishers racing to the same version id: a rival commits
+    ``manifest-1.json`` between the loser's listing and its link. The
+    link must fail rather than replace the rival's manifest, and the
+    loser must list again and land under the next id — both writes
+    land, as versions 0, 1 and 2."""
     from caseguarddatapipeline_spark.sources import versioned as V
 
     base = str(tmp_path / "store")
-    df = spark.range(10).toDF("id")
-    v0 = V.write_version(df, base)
-    assert v0 == 0
+    assert V.write_version(spark.range(10).toDF("id"), base) == 0
+    rival_files = V._write_data(spark.range(3).toDF("id"), base, None)
 
-    real_rename = _os.rename
+    real_link = V.os.link
     injected = {"done": False}
 
-    def racing_rename(src, dst):
-        # first rename attempt of the next write: conjure the rival
-        # writer's v=1 just before the rename lands
-        if not injected["done"] and dst.endswith("v=1"):
+    def racing_link(src, dst):
+        # first link attempt of the next write: the rival commits v1 first
+        if not injected["done"] and dst.endswith("manifest-1.json"):
             injected["done"] = True
-            _os.makedirs(dst)
-            open(_os.path.join(dst, "part-rival.parquet"), "wb").close()
-            open(_os.path.join(dst, "_SUCCESS"), "wb").close()
-        return real_rename(src, dst)
+            assert V._commit(base, None, rival_files) == 1
+        return real_link(src, dst)
 
-    monkeypatch.setattr(V.os, "rename", racing_rename)
+    monkeypatch.setattr(V.os, "link", racing_link)
     v2 = V.write_version(spark.range(5).toDF("id"), base)
     assert injected["done"]
-    assert v2 == 2  # retried past the rival's v=1
+    assert v2 == 2  # retried past the rival's v1
+    assert sorted(V._manifests(base)) == [0, 1, 2]
     assert V.latest_version(base) == 2
-    assert V.read_version(spark, base, 2).count() == 5
-    assert sorted(V._versions(base)) == [0, 1, 2]
+    counts = [V.read_version(spark, base, v).count() for v in (0, 1, 2)]
+    assert counts == [10, 3, 5]  # the rival's commit was not replaced
+    # no temp manifest left behind by either writer
+    assert [f for f in os.listdir(V._manifest_dir(base)) if f.startswith(".")] == []
 
 
-def test_pointer_is_monotone_against_slow_loser(spark, tmp_path):
-    """A slow writer that claimed an OLDER version id cannot regress the
-    pointer after a newer version published: _swap_pointer only advances.
-    (Before the lock + compare, interleaved pointer writes could end on
-    the earlier version, serving a stale snapshot indefinitely.)"""
+def test_pointer_is_monotone_against_slow_loser(spark, tmp_path, monkeypatch):
+    """Latest never regresses: a slow writer that listed the manifests
+    before two newer versions committed cannot publish under its stale
+    id, and the latest version only ever moves forward."""
     from caseguarddatapipeline_spark.sources import versioned as V
 
     base = str(tmp_path / "store")
-    V.write_version(spark.range(3).toDF("id"), base)   # v=0
-    V.write_version(spark.range(7).toDF("id"), base)   # v=1, pointer -> 1
-    assert V.latest_version(base) == 1
-    # the slow loser's pointer write arrives last, carrying its old id
-    V._swap_pointer(base, 0)
-    assert V.latest_version(base) == 1  # monotone: no regression
-    V._swap_pointer(base, 2)  # and a newer id still advances
+    V.write_version(spark.range(3).toDF("id"), base)  # v0
+    files = V._write_data(spark.range(9).toDF("id"), base, None)  # slow loser
+    real_manifests = V._manifests
+    stale = dict(real_manifests(base))  # its listing: only v0
+    V.write_version(spark.range(7).toDF("id"), base)  # v1
+    V.write_version(spark.range(8).toDF("id"), base)  # v2
     assert V.latest_version(base) == 2
 
+    calls = []
 
-def test_pointer_lock_ages_out_after_crashed_holder(tmp_path):
-    """A lock file left by a crashed publisher must not wedge the store:
-    _swap_pointer ages it out after _LOCK_STALE_SECONDS and proceeds."""
-    import os as _os
-    import time as _time
+    def stale_then_real(b):
+        calls.append(b)
+        return stale if len(calls) == 1 else real_manifests(b)
 
-    from caseguarddatapipeline_spark.sources import versioned as V
-
-    base = str(tmp_path / "store")
-    _os.makedirs(base)
-    lock = _os.path.join(base, f"{V._PTR}.lock")
-    open(lock, "w").close()
-    stale = _time.time() - V._LOCK_STALE_SECONDS - 5
-    _os.utime(lock, (stale, stale))
-    V._swap_pointer(base, 0)
-    assert V.latest_version(base) == 0
-    assert not _os.path.exists(lock)
+    monkeypatch.setattr(V, "_manifests", stale_then_real)
+    v = V._commit(base, None, files)
+    monkeypatch.undo()
+    assert v == 3  # EEXIST on manifest-1, listed again, landed past v2
+    assert V.latest_version(base) == 3
+    assert [V.read_version(spark, base, n).count() for n in range(4)] == [3, 7, 8, 9]
 
 
-def test_stale_lock_steal_is_exclusive(tmp_path):
-    """Stale-lock recovery is rename-steal: N concurrent waiters racing a
-    crashed holder's lock all complete, the pointer lands on the max
-    version, and no stray lock or steal-residue files remain — the bare
-    unlink scheme let two waiters both 'age out' the same lock, the second
-    deleting the first's FRESH lock and admitting two writers at once."""
-    import os as _os
+def test_thread_commits_all_land(spark, tmp_path):
+    """Writers racing in one process (threads share a pid) each commit
+    under their own temp manifest: with more threads than cores and a
+    short switch interval, every commit lands under a distinct version
+    and reads back its own rows — a lost commit breaks the count."""
+    import sys
     import threading
-    import time as _time
 
     from caseguarddatapipeline_spark.sources import versioned as V
 
+    n = 2 * (os.cpu_count() or 4)
     base = str(tmp_path / "store")
-    _os.makedirs(base)
-    lock = _os.path.join(base, f"{V._PTR}.lock")
-    open(lock, "w").close()
-    stale = _time.time() - V._LOCK_STALE_SECONDS - 5
-    _os.utime(lock, (stale, stale))
+    writes = [V._write_data(spark.range(i + 1).toDF("id"), base, None) for i in range(n)]
+    got, errs = {}, []
 
-    errs = []
-
-    def swap(n):
+    def commit(i):
         try:
-            V._swap_pointer(base, n)
+            got[i] = V._commit(base, None, writes[i])
         except Exception as e:  # pragma: no cover - the assertion target
             errs.append(e)
 
-    threads = [threading.Thread(target=swap, args=(n,)) for n in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    threads = [threading.Thread(target=commit, args=(i,)) for i in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
     assert not errs
-    assert V.latest_version(base) == 7
-    leftovers = [f for f in _os.listdir(base) if f.startswith(V._PTR + ".")]
-    assert leftovers == [], leftovers
+    assert sorted(got.values()) == list(range(n))
+    for i, v in got.items():
+        assert V.read_version(spark, base, v).count() == i + 1
 
 
-def test_release_never_unlinks_successor_lock(tmp_path, monkeypatch):
-    """Token-checked release: a holder whose lock was stolen mid-swap
-    (aged out and re-taken by a waiter) must NOT unlink the successor's
-    lock on its way out — the unconditional unlink cascaded steals."""
-    import os as _os
+def test_empty_store_has_no_version(tmp_path):
+    from caseguarddatapipeline_spark.sources import versioned as V
+
+    base = str(tmp_path / "none")
+    assert not V.has_version(base)
+    with pytest.raises(FileNotFoundError):
+        V.latest_version(base)
+    assert V.vacuum(base) == []
+
+
+def test_vacuum_removes_cold_temp_manifests(spark, tmp_path):
+    """A crash between the temp manifest write and its link leaves a
+    temp file that no reader sees; vacuum removes it once cold and keeps
+    a fresh one (a commit in flight)."""
+    import time
 
     from caseguarddatapipeline_spark.sources import versioned as V
 
     base = str(tmp_path / "store")
-    _os.makedirs(base)
-    lock = _os.path.join(base, f"{V._PTR}.lock")
-    ptr = _os.path.join(base, V._PTR)
-    real_replace = _os.replace
-
-    def steal_during_swap(src, dst):
-        real_replace(src, dst)
-        if dst == ptr:  # simulate a waiter stealing the lock mid-swap
-            with open(lock, "w") as fh:
-                fh.write("successor-token")
-
-    monkeypatch.setattr(V.os, "replace", steal_during_swap)
-    V._swap_pointer(base, 3)
-    monkeypatch.undo()
-    assert V.latest_version(base) == 3
-    # the stolen holder's release saw a foreign token and RESTORED the
-    # successor's lock (atomic rename-claim + link-back, not
-    # check-then-unlink), leaving no claim residue behind
-    assert _os.path.exists(lock)
-    with open(lock) as fh:
-        assert fh.read() == "successor-token"
-    residue = [
-        f
-        for f in _os.listdir(base)
-        if f.startswith(V._PTR + ".") and f != V._PTR + ".lock"
-    ]
-    assert residue == [], residue
-
-
-def test_rel_orphan_aged_out_on_acquire(tmp_path, monkeypatch):
-    """Forensic ``.rel-*`` orphans (lock-restore race evidence) must not
-    accumulate forever: acquisition sweeps orphans older than 4x the
-    stale window, while a FRESH orphan (a successor possibly still in
-    its critical section) is preserved."""
-    import os as _os
-    import time as _time
-
-    from caseguarddatapipeline_spark.sources import versioned as V
-
-    base = str(tmp_path / "store")
-    _os.makedirs(base)
-    old = _os.path.join(base, f"{V._PTR}.lock.rel-12345-999")
-    fresh = _os.path.join(base, f"{V._PTR}.lock.rel-12345-1000")
-    for p in (old, fresh):
+    V.write_version(spark.range(3).toDF("id"), base)
+    mdir = V._manifest_dir(base)
+    cold, fresh = (os.path.join(mdir, f".pending-{n}") for n in ("cold", "fresh"))
+    for p in (cold, fresh):
         with open(p, "w") as fh:
-            fh.write("orphan-token")
-    stale_age = _time.time() - 5 * V._LOCK_STALE_SECONDS
-    _os.utime(old, (stale_age, stale_age))
-    V._swap_pointer(base, 1)
-    assert not _os.path.exists(old), "aged orphan should be swept"
-    assert _os.path.exists(fresh), "fresh orphan must be preserved"
+            fh.write("{}")
+    old = time.time() - 7200
+    os.utime(cold, (old, old))
+    assert V.latest_version(base) == 0
+    V.vacuum(base, keep=1, orphan_age_s=3600)
+    assert not os.path.exists(cold) and os.path.exists(fresh)
+
+
+def test_only_the_store_module_names_its_layout():
+    """One module knows the store's on-disk layout: any other package
+    file that names it (the pointer file, the manifest dir or the
+    manifest file names) bypasses the store API and breaks the day the
+    layout changes. Callers ask ``has_version``/``latest_version``."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "caseguarddatapipeline_spark"
+    tokens = ("_LATEST", "manifests", "manifest-")
+    hits = [
+        f"{p.relative_to(pkg)}:{n}: {tok}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p.relative_to(pkg).as_posix() != "sources/versioned.py"
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        for tok in tokens
+        if tok in line
+    ]
+    assert hits == [], hits

@@ -373,8 +373,8 @@ def _vecingest_drain(spark, n_vecs: int = 50_000, n_files: int = 8):
     ingestion (streaming/vecingest.run_vector_upsert_stream): every
     micro-batch is deduped to one record per vec_id, assigned to its IVF
     cell with the persisted sf0.1 quantizer, and published as the next
-    cell-partitioned postings version (copy-on-write merge — the snapshot
-    grows across batches, so later batches rewrite more). Throughput =
+    cell-partitioned postings version (only the touched cells are
+    rewritten; the rest are carried forward by the manifest). Throughput =
     vectors/s end-to-end through dedupe + assignment + merge + publish."""
     from caseguarddatapipeline_spark.operators.vecindex import (
         publish_ivf_postings,
