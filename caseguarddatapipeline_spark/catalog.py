@@ -114,6 +114,19 @@ _PINNED = [
     # run the one SQL detail text
     "a1_reconciliation_summary_sql",
     "a19_reconciliation_quality",
+    # one document-extraction stage: each name below now routes its bytes
+    # through docparse (text_stage, or dispatch_stage over PARSERS)
+    "u3_binary_dispatch",
+    "e4_pdf_text",
+    "e4_docx_text",
+    "e4_pptx_text",
+    "e4_xlsx_cells",
+    "e4_eml_text",
+    "e4_msg_text",
+    "e4_doc_text",
+    "e4_xls_cells",
+    "e4_ppt_text",
+    "e4_rtf_text",
 ]
 
 

@@ -19,8 +19,8 @@ and a complete nested DOCX (an OOXML ZIP *inside* the outer ZIP, the
 nested-container case real correspondence bundles hit). ``expand_zip``
 walks the outer central directory, inflates each member, and routes it
 through the matching byte-real parser by extension — the same
-extension dispatch ``u3_binary_dispatch`` applies to loose files,
-proving the member path composes with every parser in the repo.
+``docparse.PARSERS`` table ``u3_binary_dispatch`` applies to loose
+files, so the member path composes with every parser in the repo.
 
 Round-trip is exact (each member's extracted text is a substring
 formula of the generating text), so ``e4_zip_expand`` pins the whole
@@ -45,8 +45,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .docxops import _zip, _zip_member, build_docx, extract_docx_text, zip_manifest
-from .rtfops import build_rtf, extract_rtf
+from .docparse import PARSERS
+from .docxops import _zip, _zip_member, build_docx, zip_manifest
+from .rtfops import build_rtf
 
 
 class ArchiveParseError(ValueError):
@@ -70,7 +71,8 @@ def build_case_bundle(text: str) -> bytes:
 
 def expand_zip(data: bytes) -> list[dict[str, object]]:
     """Central-directory walk → per-member inflate → per-extension
-    byte-real parse. Returns one dict per member, in archive order:
+    byte-real parse (plain ``txt``, or any ``docparse.PARSERS`` format).
+    Returns one dict per member, in archive order:
     {"member_name", "member_format", "member_text"}."""
     out: list[dict[str, object]] = []
     for name, _method, _usize in zip_manifest(data):
@@ -78,10 +80,8 @@ def expand_zip(data: bytes) -> list[dict[str, object]]:
         ext = name.rsplit(".", 1)[-1].lower() if "." in name else ""
         if ext == "txt":
             text = raw.decode("utf-8")
-        elif ext == "rtf":
-            text = str(extract_rtf(raw)["text"])
-        elif ext == "docx":
-            text = str(extract_docx_text(raw)["text"])
+        elif ext in PARSERS:
+            text = str(PARSERS[ext].extract(raw)["text"])
         else:
             raise ArchiveParseError(f"no parser for archive member {name!r}")
         out.append(
@@ -133,7 +133,7 @@ def e4_zip_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-DOCX walk (OOXML ZIP inside the outer ZIP). The member
     texts are the generating document's thirds, so the entire fan-out
     is pinned exactly by substring arithmetic."""
-    from .multimodal import _fixture_docs
+    from .docparse import _fixture_docs
 
     docs = _fixture_docs(spark, sf_dir, "doc_*.zip")
     return docs.mapInPandas(_zip_expand_kernel, schema=ZIP_EXPAND_SCHEMA)

@@ -24,8 +24,9 @@ scan (LABELSST / NUMBER / RK) → row-major values.
 
 Round-trip is exact, so ``e4_xls_cells`` pins the recovered words,
 the shared-string dedup count, and the NUMBER column's sum against
-the documents table. Scale: one file = one binaryFile row = one
-Arrow-batched kernel call, partition-local, no shuffle.
+the documents table. Scale: a ``docparse.PARSERS`` entry run by
+``docparse.text_stage`` — one file = one binaryFile row = one parser
+call, partition-local, no shuffle.
 """
 
 from __future__ import annotations
@@ -34,7 +35,6 @@ import struct
 from collections.abc import Iterator
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     DoubleType,
@@ -239,29 +239,6 @@ XLS_SCHEMA = StructType(
 )
 
 
-def _xls_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        parsed = [extract_xls(bytes(b)) for b in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_cells": pd.Series(
-                    [p["n_cells"] for p in parsed], dtype="int32"
-                ),
-                "n_shared": pd.Series(
-                    [p["n_shared"] for p in parsed], dtype="int32"
-                ),
-                "sheet_text": [p["text"] for p in parsed],
-                "sum_numbers": pd.Series(
-                    [p["sum_numbers"] for p in parsed], dtype="float64"
-                ),
-                "n_chars": pd.Series(
-                    [len(p["text"]) for p in parsed], dtype="int64"
-                ),
-            }
-        )
-
-
 def e4_xls_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BYTE-REAL Excel 97 extraction over genuine on-disk compound
     files (fixture ids 352-383): CFB walk → Workbook BIFF records →
@@ -270,10 +247,10 @@ def e4_xls_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly (n_cells = word count, n_shared = distinct words — the
     dedup property the SST exists for), and column B's NUMBER doubles
     (the 1-based row index) pin sum_numbers = n(n+1)/2."""
-    from .multimodal import _fixture_docs
+    from .docparse import _fixture_docs, text_stage
 
     docs = _fixture_docs(spark, sf_dir, "doc_*.xls")
-    return docs.mapInPandas(_xls_kernel, schema=XLS_SCHEMA)
+    return text_stage(docs, extract_xls, XLS_SCHEMA, "sheet_text")
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

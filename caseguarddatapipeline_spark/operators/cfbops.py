@@ -20,17 +20,16 @@ lists the directory (the .doc/.xls container-inspection step: those
 formats' INNER streams — WordDocument piece tables, Workbook BIFF —
 remain the documented parser boundary; the container is now real).
 
-Scale: one file = one binaryFile row = one Arrow-batched kernel call.
+Scale: ``extract_msg`` is a ``docparse.PARSERS`` entry run by
+``docparse.text_stage`` — one file = one binaryFile row = one parser
+call.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 from typing import Callable
 
-import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
@@ -351,24 +350,6 @@ MSG_SCHEMA = StructType(
 )
 
 
-def _msg_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        parsed = [extract_msg(bytes(b)) for b in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "subject": [p["subject"] for p in parsed],
-                "n_streams": pd.Series(
-                    [p["n_streams"] for p in parsed], dtype="int32"
-                ),
-                "body_text": [p["text"] for p in parsed],
-                "n_chars": pd.Series(
-                    [len(p["text"]) for p in parsed], dtype="int64"
-                ),
-            }
-        )
-
-
 def e4_msg_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BYTE-REAL Outlook-MSG extraction over genuine on-disk compound
     files (fixture ids 288-319): OLE2 header → DIFAT → FAT → directory
@@ -376,10 +357,10 @@ def e4_msg_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     one Arrow-batched stage. Subject and body round-trip exactly; the
     .msg class completes the reference's correspondence pair
     (format_config.py:44-53 medium priority)."""
-    from .multimodal import _fixture_docs
+    from .docparse import _fixture_docs, text_stage
 
     docs = _fixture_docs(spark, sf_dir, "doc_*.msg")
-    return docs.mapInPandas(_msg_kernel, schema=MSG_SCHEMA)
+    return text_stage(docs, extract_msg, MSG_SCHEMA, "body_text")
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

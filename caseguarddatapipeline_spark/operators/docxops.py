@@ -19,8 +19,9 @@ paragraph scan with entity unescaping. Round-trip is exact, so the
 the documents table (the PDF treatment, pdfops.py, applied to the
 second high-priority format).
 
-Scale: identical to the PDF path — one file = one binaryFile row = one
-Arrow-batched kernel call, partition-local, no shuffle.
+Scale: identical to the PDF path — both parsers are
+``docparse.PARSERS`` entries run by ``docparse.text_stage``: one file =
+one binaryFile row = one parser call, partition-local, no shuffle.
 """
 
 from __future__ import annotations
@@ -32,7 +33,6 @@ from collections.abc import Iterator
 from typing import Callable
 
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
@@ -252,28 +252,6 @@ DOCX_TEXT_SCHEMA = StructType(
 )
 
 
-def _docx_text_kernel(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        parsed = [extract_docx_text(bytes(b)) for b in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_paragraphs": pd.Series(
-                    [p["n_paragraphs"] for p in parsed], dtype="int32"
-                ),
-                "n_runs": pd.Series(
-                    [p["n_runs"] for p in parsed], dtype="int32"
-                ),
-                "docx_text": [p["text"] for p in parsed],
-                "n_chars": pd.Series(
-                    [len(p["text"]) for p in parsed], dtype="int64"
-                ),
-            }
-        )
-
-
 def e4_docx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BYTE-REAL DOCX text extraction over genuine on-disk .docx files
     (fixture ids 96-127: complete ZIP archives with deflate entries,
@@ -282,10 +260,10 @@ def e4_docx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas stage. Extraction round-trips the generating document
     text, so the oracle is exact. Reference parity: .doc/.docx share
     PDF's high-priority class (docproc/format_config.py:44-48)."""
-    from .multimodal import _fixture_docs
+    from .docparse import _fixture_docs, text_stage
 
     docs = _fixture_docs(spark, sf_dir, "doc_*.docx")
-    return docs.mapInPandas(_docx_text_kernel, schema=DOCX_TEXT_SCHEMA)
+    return text_stage(docs, extract_docx_text, DOCX_TEXT_SCHEMA, "docx_text")
 
 
 # ---------------------------------------------------------------------------
@@ -395,28 +373,6 @@ def extract_pptx_text(data: bytes) -> dict[str, object]:
     }
 
 
-def _pptx_text_kernel(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        parsed = [extract_pptx_text(bytes(b)) for b in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_paragraphs": pd.Series(
-                    [p["n_paragraphs"] for p in parsed], dtype="int32"
-                ),
-                "n_runs": pd.Series(
-                    [p["n_runs"] for p in parsed], dtype="int32"
-                ),
-                "slide_text": [p["text"] for p in parsed],
-                "n_chars": pd.Series(
-                    [len(p["text"]) for p in parsed], dtype="int64"
-                ),
-            }
-        )
-
-
 PPTX_TEXT_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -433,10 +389,10 @@ def e4_pptx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fixture ids 192-223): ZIP walk → slide part → DrawingML a:t/a:p
     run scan. Same exactness contract as e4_docx_text; .ppt/.pptx is
     the reference's 'low' priority class (format_config.py:44-53)."""
-    from .multimodal import _fixture_docs
+    from .docparse import _fixture_docs, text_stage
 
     docs = _fixture_docs(spark, sf_dir, "doc_*.pptx")
-    return docs.mapInPandas(_pptx_text_kernel, schema=PPTX_TEXT_SCHEMA)
+    return text_stage(docs, extract_pptx_text, PPTX_TEXT_SCHEMA, "slide_text")
 
 
 def zip_manifest(data: bytes) -> list[tuple[str, int, int]]:
@@ -507,7 +463,7 @@ def e4_zip_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     deflate, and every uncompressed size is a closed formula of the
     document text (word/document.xml = 233 + the XML-escaped text
     length; the two metadata parts are constants)."""
-    from .multimodal import _fixture_docs
+    from .docparse import _fixture_docs
 
     docs = _fixture_docs(spark, sf_dir, "doc_*.docx")
     return docs.mapInPandas(_zip_manifest_kernel, schema=ZIP_MANIFEST_SCHEMA)

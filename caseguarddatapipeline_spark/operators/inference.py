@@ -15,21 +15,25 @@ The default models are DETERMINISTIC stubs (the tested path, per SURVEY.md
 §7 risk 6): a rule-based insight extractor and a hash-based embedder. The
 ``model_fn`` seam is where a real client drops in; everything around it
 (batching, schema, rate limiting) is production code.
+
+Document text extraction (U3) dispatches by format through
+``docparse.dispatch_stage``: ``u3_format_dispatch`` over four vectorized
+text decoders, ``u3_binary_dispatch`` over the ten byte-real container
+parsers of ``docparse.PARSERS``.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
-    FloatType,
     LongType,
     StringType,
     StructField,
@@ -215,19 +219,31 @@ def u3_text_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(make_text_extractor(), schema=EXTRACT_SCHEMA)
 
 
-# Per-format decode dispatch (U3 breadth): format → (admission/priority
-# class, extractor name, decode fn over a pandas Series of unicode
-# text). Priority classes follow P4's admission config
-# (docproc/format_config.py:44-53 processing_priority: pdf/doc high,
-# eml/msg/txt medium; formats outside the config fall back to low); the
-# decode bodies here are deterministic string arithmetic over TEXT
-# payloads so this dispatch pipeline keeps a pure-SQL twin — the
-# REAL-BYTES form of the same fan-out is u3_binary_dispatch below,
-# whose pdf/docx branches run the in-repo container parsers
-# (operators/pdfops.py, operators/docxops.py) instead of the
-# LlamaParse call format_config.py:147-230 makes.
-_U3_DISPATCH: dict[str, tuple[str, str, object]] = {
-    "ACROBAT-PDF": (
+class _TextDecoder(NamedTuple):
+    """A format of ``u3_format_dispatch``: its priority class, extractor
+    name and a vectorized decode over a Series of unicode texts."""
+
+    priority: str
+    extractor: str
+    decode: Callable[[pd.Series], pd.Series]
+
+    def texts(self, payloads: pd.Series) -> pd.Series:
+        return self.decode(
+            payloads.map(lambda b: bytes(b).decode("utf-8", errors="replace"))
+        )
+
+
+# Per-format decode dispatch (U3 breadth): format → decoder. Priority
+# classes follow P4's admission config (docproc/format_config.py:44-53
+# processing_priority: pdf/doc high, eml/msg/txt medium; formats outside
+# the config fall back to low); the decode bodies here are deterministic
+# string arithmetic over TEXT payloads so this dispatch pipeline keeps a
+# pure-SQL twin — the REAL-BYTES form of the same fan-out is
+# u3_binary_dispatch below, which runs docparse.PARSERS (the in-repo
+# container parsers) instead of the LlamaParse call format_config.py:
+# 147-230 makes.
+_U3_DISPATCH: dict[str, _TextDecoder] = {
+    "ACROBAT-PDF": _TextDecoder(
         "high",
         "pdf_markdown",
         lambda texts: texts.str.split(" ").map(
@@ -236,13 +252,13 @@ _U3_DISPATCH: dict[str, tuple[str, str, object]] = {
             )
         ),
     ),
-    "TEXT": ("medium", "plain", lambda texts: texts),
-    "HTML": (
+    "TEXT": _TextDecoder("medium", "plain", lambda texts: texts),
+    "HTML": _TextDecoder(
         "low",
         "html_strip",
         lambda texts: "[html] " + texts.str.replace(r"<[^>]*>", "", regex=True),
     ),
-    "EMAIL-MSG": (
+    "EMAIL-MSG": _TextDecoder(
         "medium",
         "msg_preview",
         lambda texts: "[msg] " + texts.str.slice(0, 500),
@@ -267,6 +283,8 @@ def u3_format_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas stage groups each Arrow batch by format and runs that
     format's decode fn vectorized over the group — one dispatch per
     (batch, format), not per row. Full SQL oracle across all 4 formats."""
+    from .docparse import dispatch_stage
+
     fmts = list(_U3_DISPATCH)
     fmt_arr = F.array(*[F.lit(f) for f in fmts])
     docs = load_table(spark, sf_dir, "documents").select(
@@ -276,110 +294,33 @@ def u3_format_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.encode(F.col("text"), "utf-8").alias("payload"),
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = pdf["payload"].map(
-                lambda b: bytes(b).decode("utf-8", errors="replace")
-            )
-            out = []
-            for fmt, idx in pdf.groupby("doc_format").groups.items():
-                cls, name, fn = _U3_DISPATCH[fmt]
-                extracted = fn(texts.loc[idx])
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": pdf["doc_id"].loc[idx],
-                            "doc_format": fmt,
-                            "priority_class": cls,
-                            "extractor": name,
-                            "extracted_text": extracted,
-                            "n_chars_out": extracted.str.len().astype("int64"),
-                        }
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(
-                columns=[f.name for f in U3_DISPATCH_SCHEMA.fields]
-            )
-
-    return docs.mapInPandas(extract, schema=U3_DISPATCH_SCHEMA)
+    return dispatch_stage(docs, _U3_DISPATCH, U3_DISPATCH_SCHEMA)
 
 
 def u3_binary_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U3 dispatch over REAL BYTES, widened in round 13 from pdf/docx
-    to the reference's FULL admitted text-bearing container matrix:
-    scan the fixture's genuine on-disk files, dispatch each Arrow batch
-    by extension exactly like ``u3_format_dispatch`` dispatches by
-    format code, and run the REAL in-repo parser per group — PDF xref/
+    """U3 dispatch over REAL BYTES across the reference's FULL admitted
+    text-bearing container matrix: scan the fixture's genuine on-disk
+    files, dispatch each Arrow batch by extension exactly like
+    ``u3_format_dispatch`` dispatches by format code, and run the REAL
+    in-repo parser per group (``docparse.PARSERS``) — PDF xref/
     FlateDecode, OOXML (word/spreadsheet/presentation) ZIP walks, RFC
     5322 mail, the RTF tokenizer, and the OLE2 family (MSG property
-    streams, Word 97 piece table, BIFF8 cell records). Every parser
-    recovers the generating document text verbatim, so the whole
-    dispatch pipeline keeps an exact SQL oracle while every byte it
-    touches is a real container. Reference parity: this IS
-    docproc/format_config.py:147-230's dispatch — the same nine
-    admitted extensions, priority classes from :44-53 (pdf/doc high,
-    eml/msg medium, spreadsheet/presentation/rtf low) — with the
-    LlamaParse call replaced by in-repo parsers.
+    streams, Word 97 piece table, Excel 97 BIFF8 cell records,
+    PowerPoint 97 record tree). Every parser recovers the generating
+    document text verbatim, so the whole dispatch pipeline keeps an
+    exact SQL oracle while every byte it touches is a real container.
+    Reference parity: this IS docproc/format_config.py:147-230's
+    dispatch — the same ten admitted extensions, priority classes from
+    :44-53 (pdf/doc/docx high, eml/msg medium, spreadsheet/presentation/
+    rtf low) — with the LlamaParse call replaced by in-repo parsers.
     Scale: one file = one row = one kernel call; the per-batch groupby
     dispatches once per (batch, extension), not per row."""
-    from .biffops import extract_xls
-    from .cfbops import extract_msg
-    from .docxops import extract_docx_text, extract_pptx_text
-    from .mailops import extract_eml
-    from .multimodal import _fixture_docs
-    from .pdfops import extract_pdf_text
-    from .pptops import extract_ppt
-    from .rtfops import extract_rtf
-    from .wordops import extract_doc
-    from .xlsxops import extract_xlsx
+    from .docparse import PARSERS, _fixture_docs, dispatch_stage
 
     files = _fixture_docs(
         spark, sf_dir, "doc_*.{pdf,docx,xlsx,pptx,eml,rtf,msg,doc,xls,ppt}"
-    ).select(
-        "doc_id",
-        F.element_at(F.split(F.input_file_name(), r"\."), -1).alias("ext"),
-        "payload",
-    )
-
-    _PARSERS = {
-        "pdf": ("high", "pdf_xref_flate", extract_pdf_text),
-        "doc": ("high", "doc_fib_pieces", extract_doc),
-        "docx": ("high", "docx_zip_ooxml", extract_docx_text),
-        "eml": ("medium", "eml_rfc5322", extract_eml),
-        "msg": ("medium", "msg_cfb_props", extract_msg),
-        "xlsx": ("low", "xlsx_zip_sst", extract_xlsx),
-        "xls": ("low", "xls_biff8_sst", extract_xls),
-        "pptx": ("low", "pptx_drawingml", extract_pptx_text),
-        "ppt": ("low", "ppt_record_tree", extract_ppt),
-        "rtf": ("low", "rtf_tokenizer", extract_rtf),
-    }
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for ext, idx in pdf.groupby("ext").groups.items():
-                cls, name, fn = _PARSERS[ext]
-                texts = pdf["payload"].loc[idx].map(
-                    lambda b: str(fn(bytes(b))["text"])
-                )
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": pdf["doc_id"].loc[idx],
-                            "doc_format": ext,
-                            "priority_class": cls,
-                            "extractor": name,
-                            "extracted_text": texts,
-                            "n_chars_out": texts.str.len().astype("int64"),
-                        }
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(
-                columns=[f.name for f in U3_DISPATCH_SCHEMA.fields]
-            )
-
-    return files.mapInPandas(extract, schema=U3_DISPATCH_SCHEMA)
+    ).withColumnRenamed("ext", "doc_format")
+    return dispatch_stage(files, PARSERS, U3_DISPATCH_SCHEMA)
 
 
 def u5_urgency_score(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,19 +12,17 @@ Content-Transfer-Encoding (quoted-printable, base64, 7bit/8bit).
 Round-trip is exact, so ``e4_eml_text`` pins every recovered body
 character and the subject against the documents table.
 
-Scale: identical to the other document tiers — one file = one
-binaryFile row = one Arrow-batched kernel call, no shuffle.
+Scale: identical to the other document tiers — a ``docparse.PARSERS``
+entry run by ``docparse.text_stage``: one file = one binaryFile row =
+one parser call, no shuffle.
 """
 
 from __future__ import annotations
 
 import base64
 import re
-from collections.abc import Iterator
 from typing import Callable
 
-import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
@@ -177,25 +175,6 @@ EML_SCHEMA = StructType(
 )
 
 
-def _eml_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        parsed = [extract_eml(bytes(b)) for b in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "subject": [p["subject"] for p in parsed],
-                "n_headers": pd.Series(
-                    [p["n_headers"] for p in parsed], dtype="int32"
-                ),
-                "encoding": [p["encoding"] for p in parsed],
-                "body_text": [p["text"] for p in parsed],
-                "n_chars": pd.Series(
-                    [len(p["text"]) for p in parsed], dtype="int64"
-                ),
-            }
-        )
-
-
 def e4_eml_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BYTE-REAL EML extraction over genuine on-disk .eml files
     (fixture ids 224-255: real RFC 5322 messages, quoted-printable
@@ -204,10 +183,10 @@ def e4_eml_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips the document text and the subject is 'case document
     <id>', so the oracle is exact — the reference's correspondence
     class (.eml/.msg medium priority, format_config.py:44-53)."""
-    from .multimodal import _fixture_docs
+    from .docparse import _fixture_docs, text_stage
 
     docs = _fixture_docs(spark, sf_dir, "doc_*.eml")
-    return docs.mapInPandas(_eml_kernel, schema=EML_SCHEMA)
+    return text_stage(docs, extract_eml, EML_SCHEMA, "body_text")
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

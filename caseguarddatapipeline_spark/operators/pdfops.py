@@ -24,12 +24,14 @@ state (the PNG fixture's round-10 trick); the property tests
 additionally run real ``zlib.compress`` streams through the same
 parser to prove the inflate path is not framing-specific.
 
-Scale: one PDF = one binaryFile row = one kernel call inside one
-Arrow-batched ``mapInPandas`` stage — partition-local, no shuffle
-before or after decode, so at 100 TB the stage scales with input
-splits exactly like the PNG/WAV kernels (multimodal.py). Parsing is
-pure CPython byte arithmetic; a real deployment swaps the kernel body
-for a C-backed parser behind the same (payload → text) seam.
+Scale: ``extract_pdf_text`` is the ``pdf`` entry of
+``docparse.PARSERS``, and ``e4_pdf_text`` runs it through
+``docparse.text_stage``: one PDF = one binaryFile row = one parser call
+inside one Arrow-batched ``mapInPandas`` stage — partition-local, no
+shuffle before or after decode, so at 100 TB the stage scales with
+input splits exactly like the PNG/WAV kernels (multimodal.py). Parsing
+is pure CPython byte arithmetic; a real deployment swaps the parser for
+a C-backed one behind the same (payload → text) seam.
 """
 
 from __future__ import annotations
@@ -37,11 +39,8 @@ from __future__ import annotations
 import re
 import struct
 import zlib
-from collections.abc import Iterator
 from typing import Callable
 
-import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
@@ -745,31 +744,6 @@ PDF_TEXT_SCHEMA = StructType(
 )
 
 
-def _pdf_text_kernel(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        parsed = [extract_pdf_text(bytes(b)) for b in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_pages": pd.Series(
-                    [p["n_pages"] for p in parsed], dtype="int32"
-                ),
-                "n_objects": pd.Series(
-                    [p["n_objects"] for p in parsed], dtype="int32"
-                ),
-                "n_text_ops": pd.Series(
-                    [p["n_text_ops"] for p in parsed], dtype="int32"
-                ),
-                "pdf_text": [p["text"] for p in parsed],
-                "n_chars": pd.Series(
-                    [len(p["text"]) for p in parsed], dtype="int64"
-                ),
-            }
-        )
-
-
 def e4_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BYTE-REAL PDF text extraction over genuine on-disk PDF files:
     binaryFile scan of the fixture's ``doc_*.pdf`` (complete PDFs —
@@ -781,10 +755,10 @@ def e4_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PDF class is the reference's high-priority document path
     (docproc/format_config.py:44-48, 147-230); Spark-first the decode
     is partition-local with no shuffle (one file = one row)."""
-    from .multimodal import _fixture_docs
+    from .docparse import _fixture_docs, text_stage
 
     docs = _fixture_docs(spark, sf_dir, "doc_*.pdf")
-    return docs.mapInPandas(_pdf_text_kernel, schema=PDF_TEXT_SCHEMA)
+    return text_stage(docs, extract_pdf_text, PDF_TEXT_SCHEMA, "pdf_text")
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

@@ -25,18 +25,16 @@ tree recursively — container recursion by recVer, bounds-checked
 lengths — and concatenates the text atoms in document order.
 
 Round-trip is exact, so ``e4_ppt_text`` pins the recovered text and
-the atom structure against the documents table. Scale: one file = one
-binaryFile row = one Arrow-batched kernel call, partition-local, no
-shuffle.
+the atom structure against the documents table. Scale: a
+``docparse.PARSERS`` entry run by ``docparse.text_stage`` — one file =
+one binaryFile row = one parser call, partition-local, no shuffle.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
@@ -213,26 +211,6 @@ PPT_SCHEMA = StructType(
 )
 
 
-def _ppt_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        parsed = [extract_ppt(bytes(b)) for b in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_atoms": pd.Series(
-                    [p["n_atoms"] for p in parsed], dtype="int32"
-                ),
-                "n_unicode": pd.Series(
-                    [p["n_unicode"] for p in parsed], dtype="int32"
-                ),
-                "slide_text": [p["text"] for p in parsed],
-                "n_chars": pd.Series(
-                    [len(p["text"]) for p in parsed], dtype="int64"
-                ),
-            }
-        )
-
-
 def e4_ppt_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BYTE-REAL PowerPoint 97 extraction over genuine on-disk compound
     files (fixture ids 384-415): CFB walk → Current User token →
@@ -242,10 +220,10 @@ def e4_ppt_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(n_chars/120) for the fixture's 120-char atoms, n_unicode =
     every odd atom (the fixture alternates storage, ASCII text never
     forces a flip)."""
-    from .multimodal import _fixture_docs
+    from .docparse import _fixture_docs, text_stage
 
     docs = _fixture_docs(spark, sf_dir, "doc_*.ppt")
-    return docs.mapInPandas(_ppt_kernel, schema=PPT_SCHEMA)
+    return text_stage(docs, extract_ppt, PPT_SCHEMA, "slide_text")
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

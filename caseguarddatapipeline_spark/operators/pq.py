@@ -184,7 +184,7 @@ def _pq_store_dir(sf_dir: str) -> str:
     from ..sources.stores import fingerprint_store_dir
 
     return fingerprint_store_dir(
-        sf_dir, "embeddings.parquet", "caseguard_pqindex", layout_version=3
+        sf_dir, "embeddings.parquet", "caseguard_pqindex", layout_version=4
     )
 
 

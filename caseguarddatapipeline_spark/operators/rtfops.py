@@ -11,17 +11,16 @@ stack, control words with optional numeric parameters and the
 delimiting-space rule, destination skipping (``\\*`` and the known
 header destinations), ``\\uN`` Unicode escapes with fallback-character
 consumption (``\\ucN``). Round-trip is exact, so ``e4_rtf_text`` pins
-every recovered character against the documents table.
+every recovered character against the documents table. Scale: a
+``docparse.PARSERS`` entry run by ``docparse.text_stage`` — one file =
+one binaryFile row = one parser call, no shuffle.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from typing import Callable
 
-import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
@@ -171,26 +170,6 @@ RTF_SCHEMA = StructType(
 )
 
 
-def _rtf_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        parsed = [extract_rtf(bytes(b)) for b in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_groups": pd.Series(
-                    [p["n_groups"] for p in parsed], dtype="int32"
-                ),
-                "n_controls": pd.Series(
-                    [p["n_controls"] for p in parsed], dtype="int32"
-                ),
-                "rtf_text": [p["text"] for p in parsed],
-                "n_chars": pd.Series(
-                    [len(p["text"]) for p in parsed], dtype="int64"
-                ),
-            }
-        )
-
-
 def e4_rtf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BYTE-REAL RTF extraction over genuine on-disk .rtf files
     (fixture ids 256-287): group-stack tokenizer with destination
@@ -198,10 +177,10 @@ def e4_rtf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-ASCII corpus text, so extraction returns it verbatim; the
     structural counts (3 groups: root, fonttbl, font entry) pin the
     tokenizer's group handling."""
-    from .multimodal import _fixture_docs
+    from .docparse import _fixture_docs, text_stage
 
     docs = _fixture_docs(spark, sf_dir, "doc_*.rtf")
-    return docs.mapInPandas(_rtf_kernel, schema=RTF_SCHEMA)
+    return text_stage(docs, extract_rtf, RTF_SCHEMA, "rtf_text")
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

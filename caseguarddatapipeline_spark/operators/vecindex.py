@@ -66,7 +66,7 @@ def _postings_store_dir(sf_dir: str) -> str:
     from ..sources.stores import fingerprint_store_dir
 
     return fingerprint_store_dir(
-        sf_dir, "embeddings.parquet", "caseguard_annpostings", layout_version=2
+        sf_dir, "embeddings.parquet", "caseguard_annpostings", layout_version=3
     )
 
 

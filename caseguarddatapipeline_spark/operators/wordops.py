@@ -24,18 +24,16 @@ it the way antiword/wvWare must: FIB → table-stream choice
 clamped to ccpText (main-document characters only, per FibRgLw97).
 
 Round-trip is exact, so ``e4_doc_text`` pins the recovered text and
-the piece structure against the documents table. Scale: one file = one
-binaryFile row = one Arrow-batched kernel call, partition-local, no
-shuffle.
+the piece structure against the documents table. Scale: a
+``docparse.PARSERS`` entry run by ``docparse.text_stage`` — one file =
+one binaryFile row = one parser call, partition-local, no shuffle.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
@@ -203,26 +201,6 @@ DOC_SCHEMA = StructType(
 )
 
 
-def _doc_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        parsed = [extract_doc(bytes(b)) for b in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_pieces": pd.Series(
-                    [p["n_pieces"] for p in parsed], dtype="int32"
-                ),
-                "n_unicode": pd.Series(
-                    [p["n_unicode"] for p in parsed], dtype="int32"
-                ),
-                "body_text": [p["text"] for p in parsed],
-                "n_chars": pd.Series(
-                    [len(p["text"]) for p in parsed], dtype="int64"
-                ),
-            }
-        )
-
-
 def e4_doc_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BYTE-REAL Word 97 extraction over genuine on-disk compound files
     (fixture ids 320-351): CFB walk → FIB → 1Table CLX → piece table →
@@ -232,10 +210,10 @@ def e4_doc_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     pieces (the +1 is the final paragraph mark), n_unicode = every odd
     piece (the fixture alternates storage, ASCII text never forces a
     flip)."""
-    from .multimodal import _fixture_docs
+    from .docparse import _fixture_docs, text_stage
 
     docs = _fixture_docs(spark, sf_dir, "doc_*.doc")
-    return docs.mapInPandas(_doc_kernel, schema=DOC_SCHEMA)
+    return text_stage(docs, extract_doc, DOC_SCHEMA, "body_text")
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

@@ -17,18 +17,15 @@ CPython's zipfile validates the archives in the tests).
 
 Round-trip is exact, so ``e4_xlsx_cells`` pins every recovered word
 against the documents table. Scale: identical to the PDF/DOCX path —
-one file = one binaryFile row = one Arrow-batched kernel call,
-partition-local, no shuffle.
+a ``docparse.PARSERS`` entry run by ``docparse.text_stage``: one file =
+one binaryFile row = one parser call, partition-local, no shuffle.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from typing import Callable
 
-import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
@@ -184,26 +181,6 @@ XLSX_SCHEMA = StructType(
 )
 
 
-def _xlsx_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        parsed = [extract_xlsx(bytes(b)) for b in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_cells": pd.Series(
-                    [p["n_cells"] for p in parsed], dtype="int32"
-                ),
-                "n_shared": pd.Series(
-                    [p["n_shared"] for p in parsed], dtype="int32"
-                ),
-                "sheet_text": [p["text"] for p in parsed],
-                "n_chars": pd.Series(
-                    [len(p["text"]) for p in parsed], dtype="int64"
-                ),
-            }
-        )
-
-
 def e4_xlsx_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BYTE-REAL XLSX extraction over genuine on-disk workbooks
     (fixture ids 128-159): ZIP walk → shared-string table → sheet cell
@@ -212,10 +189,10 @@ def e4_xlsx_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovered sequence is pinned exactly: n_cells = the word count,
     n_shared = the DISTINCT word count (the dedup property shared
     strings exist for), sheet_text = the document text verbatim."""
-    from .multimodal import _fixture_docs
+    from .docparse import _fixture_docs, text_stage
 
     docs = _fixture_docs(spark, sf_dir, "doc_*.xlsx")
-    return docs.mapInPandas(_xlsx_kernel, schema=XLSX_SCHEMA)
+    return text_stage(docs, extract_xlsx, XLSX_SCHEMA, "sheet_text")
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

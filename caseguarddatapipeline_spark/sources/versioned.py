@@ -3,7 +3,7 @@ numbered manifests — time travel, safe concurrent reads and writes,
 O(touched partitions) commits and retention, without a table-format
 dependency.
 
-Layout:  base_dir/data/w<uuid>/...        one writer-unique dir per write
+Layout:  base_dir/data/writer=w<uuid>/...  one writer-unique dir per write
          base_dir/manifests/manifest-N.json   {version, partition_by, files}
 
 - COMMIT is one manifest: the leaf parquet files a version reads, listed
@@ -44,6 +44,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 _COMMIT_TRIES = 64  # bound: pathological publisher storms error out
+# Writer dirs are named ``writer=w<hex>``: one basePath over data/ then
+# discovers every writer dir as a partition value, so a version reads as
+# ONE scan however many writers its files come from.
+_WRITER = "writer"
 
 
 def _manifest_dir(base_dir: str) -> str:
@@ -99,7 +103,9 @@ def _write_data(
     underscore prefix: Spark hides such paths) and return its leaf
     parquet files, data-dir-relative. Nothing is visible until a manifest
     lists them."""
-    wdir = os.path.join(_data_dir(base_dir), f"w{uuid.uuid4().hex}")
+    if _WRITER in df.columns:
+        raise ValueError(f"column {_WRITER!r} is reserved by the store layout")
+    wdir = os.path.join(_data_dir(base_dir), f"{_WRITER}=w{uuid.uuid4().hex}")
     writer = df.write.mode("errorifexists")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -202,23 +208,18 @@ def replace_partitions(
 
 
 def read_version(spark: SparkSession, base_dir: str, version: int) -> DataFrame:
-    # After replace_partitions a manifest lists files from SEVERAL writer
-    # dirs; each group reads with its own basePath (recovering the k=v
-    # partition columns) and the groups union. Partition filters push
-    # into every branch, so the scan still prunes.
-    groups: dict[str, list[str]] = {}
-    for f in _read_manifest(base_dir, version)["files"]:
-        groups.setdefault(f.split("/", 1)[0], []).append(f)
-    if not groups:
+    """One scan over the files ``version`` lists, with the k=v partition
+    columns recovered (so partition filters still prune) and the writer
+    column dropped."""
+    files = _read_manifest(base_dir, version)["files"]
+    if not files:
         raise FileNotFoundError(f"version {version} in {base_dir} lists no files")
     data = _data_dir(base_dir)
-    out = None
-    for wdir, files in sorted(groups.items()):
-        part = spark.read.option("basePath", os.path.join(data, wdir)).parquet(
-            *(os.path.join(data, f) for f in files)
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
+    return (
+        spark.read.option("basePath", data)
+        .parquet(*(os.path.join(data, f) for f in files))
+        .drop(_WRITER)
+    )
 
 
 def read_latest(spark: SparkSession, base_dir: str) -> DataFrame:

@@ -1,6 +1,6 @@
-"""Streaming multimodal ingestion (round 11 — the E4 x streaming cell):
-drain a DIRECTORY OF RASTER FILES through the byte-real decode +
-patchification kernel as one Structured Streaming query.
+"""Streaming file ingestion (round 11 — the E4 x streaming cell): drain
+a DIRECTORY OF RASTER OR DOCUMENT FILES through the byte-real decode
+kernels as one Structured Streaming query.
 
 The reference ingests binary documents one SOAP fetch at a time and
 pushes each through its format handlers (soap_downloader.py:101-161,
@@ -8,10 +8,12 @@ docproc/format_config.py:147-230). Spark-first, arriving files ARE the
 stream: ``readStream.format("binaryFile")`` lists new files per
 micro-batch (the same source the batch-side ``e4_binaryfile_scan``
 uses, streaming face), ``maxFilesPerTrigger`` is the rate limit, and
-each micro-batch runs the production ``_pixel_tiles_kernel``
-(multimodal.py — full PNG/BMP/PPM/baseline-JPEG pixel decode,
-per-32x32-tile stats)
-with the tile rows landing in the batch's OWN ``ingest_batch=N``
+each micro-batch goes through ``docparse.file_docs`` (doc_id from the
+``doc_<id>.<ext>`` file name, failing loudly on any other name) into
+either the production ``_pixel_tiles_kernel`` (multimodal.py — full
+PNG/BMP/PPM/baseline-JPEG pixel decode, per-32x32-tile stats) or the
+by-extension ``docparse.dispatch_stage`` over the ten byte-real document
+parsers. Output rows land in the batch's OWN ``ingest_batch=N``
 partition directory: replay-exact exactly like the assembly sinks — a
 replayed batch overwrites its own directory byte-for-byte.
 
@@ -28,9 +30,10 @@ from __future__ import annotations
 
 import os
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..operators.docparse import PARSERS, dispatch_stage, file_docs
 from ..operators.multimodal import _pixel_tiles_kernel
 
 TILE_SCHEMA = (
@@ -42,29 +45,8 @@ TILE_SCHEMA = (
 def raster_tiles_from_files(files: DataFrame) -> DataFrame:
     """binaryFile rows (path, content, ...) → per-tile stats through the
     byte-real decode kernel. Shared by the stream below and any batch
-    caller; doc_id recovers from the file name (the fixture's
-    ``doc_<id>.<ext>`` convention, multimodal._fixture_docs)."""
-    extracted = F.regexp_extract(F.col("path"), r"doc_(\d+)\.", 1)
-    docs = files.select(
-        # a glob-matching file OUTSIDE the naming convention would get a
-        # silently-NULL doc_id (regexp_extract returns '' -> null cast),
-        # collapsing identities in the output — fail loudly instead
-        # (round-11 review)
-        F.when(
-            extracted == "",
-            F.raise_error(
-                F.concat(
-                    F.lit("raster ingest: file name does not carry a "
-                          "doc_<id> identity: "),
-                    F.col("path"),
-                )
-            ),
-        )
-        .otherwise(extracted.cast("long"))
-        .alias("doc_id"),
-        F.col("content").alias("payload"),
-    )
-    return docs.mapInPandas(_pixel_tiles_kernel, TILE_SCHEMA)
+    caller; doc_id comes from the file name (``docparse.file_docs``)."""
+    return file_docs(files).mapInPandas(_pixel_tiles_kernel, TILE_SCHEMA)
 
 
 def _run_file_ingest(
@@ -155,65 +137,23 @@ def run_raster_ingest(
     )
 
 
-DOC_TEXT_SCHEMA = (
-    "doc_id long, doc_format string, extracted_text string, n_chars long"
+DOC_TEXT_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("doc_format", StringType()),
+        StructField("extracted_text", StringType()),
+        StructField("n_chars", LongType()),
+    ]
 )
 
 
 def doc_text_from_files(files: DataFrame) -> DataFrame:
     """binaryFile rows → extracted text through the REAL document
-    parsers (pdfops xref/FlateDecode walk, docxops ZIP/OOXML walk),
-    dispatched per Arrow batch by extension — the streaming face of
-    ``u3_binary_dispatch``. doc_id recovers from the ``doc_<id>.<ext>``
-    naming convention like the raster twin."""
-    import pandas as pd
-
-    from ..operators.docxops import extract_docx_text
-    from ..operators.pdfops import extract_pdf_text
-
-    extracted = F.regexp_extract(F.col("path"), r"doc_(\d+)\.", 1)
-    ext = F.element_at(F.split(F.col("path"), r"\."), -1)
-    docs = files.select(
-        F.when(
-            extracted == "",
-            F.raise_error(
-                F.concat(
-                    F.lit("document ingest: file name does not carry a "
-                          "doc_<id> identity: "),
-                    F.col("path"),
-                )
-            ),
-        )
-        .otherwise(extracted.cast("long"))
-        .alias("doc_id"),
-        ext.alias("ext"),
-        F.col("content").alias("payload"),
-    )
-    parsers = {"pdf": extract_pdf_text, "docx": extract_docx_text}
-
-    def kernel(batches):
-        for pdf in batches:
-            out = []
-            for e, idx in pdf.groupby("ext").groups.items():
-                fn = parsers[e]
-                texts = pdf["payload"].loc[idx].map(
-                    lambda b: str(fn(bytes(b))["text"])
-                )
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": pdf["doc_id"].loc[idx],
-                            "doc_format": e,
-                            "extracted_text": texts,
-                            "n_chars": texts.str.len().astype("int64"),
-                        }
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(
-                columns=["doc_id", "doc_format", "extracted_text", "n_chars"]
-            )
-
-    return docs.mapInPandas(kernel, DOC_TEXT_SCHEMA)
+    parsers, dispatched per Arrow batch by extension over
+    ``docparse.PARSERS`` — the streaming face of ``u3_binary_dispatch``.
+    doc_id comes from the file name like the raster twin."""
+    docs = file_docs(files).withColumnRenamed("ext", "doc_format")
+    return dispatch_stage(docs, PARSERS, DOC_TEXT_SCHEMA)
 
 
 def run_document_ingest(

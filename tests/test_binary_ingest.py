@@ -157,3 +157,27 @@ def test_document_ingest_extracts_real_text_and_restarts(spark, tmp_path):
     # replay-exact: a third drain with nothing new adds nothing
     run_document_ingest(spark, in_dir, out_dir, ckpt)
     assert spark.read.parquet(out_dir).count() == len(first) + len(late)
+
+
+def test_both_ingest_streams_fail_loudly_on_unnamed_file(spark, tmp_path):
+    """A file outside the ``doc_<id>.<ext>`` naming convention must fail
+    the micro-batch, never land with a NULL doc_id — in the raster
+    stream and in the document stream alike."""
+    import pytest
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from caseguarddatapipeline_spark.streaming.binaryingest import (
+        run_document_ingest,
+    )
+
+    fixture = _binaryfile_fixture_dir(spark, SF_DIR)
+    for run, ext in ((run_raster_ingest, "ppm"), (run_document_ingest, "pdf")):
+        src = next(f for f in sorted(os.listdir(fixture)) if f.endswith("." + ext))
+        in_dir = tmp_path / ext / "in"
+        os.makedirs(in_dir)
+        shutil.copy(os.path.join(fixture, src), in_dir / f"scan_0001.{ext}")
+        with pytest.raises(
+            StreamingQueryException, match="does not carry a doc_<id> identity"
+        ):
+            run(spark, str(in_dir), str(tmp_path / ext / "out"),
+                str(tmp_path / ext / "ck"))

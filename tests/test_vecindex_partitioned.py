@@ -136,3 +136,46 @@ def test_migration_out_of_singleton_cell_leaves_no_stale_posting(
     assert not any(
         f"/cell={stale_cell}/" in f for f in V._read_manifest(base, v1)["files"]
     )
+
+
+def _scan_nodes(df):
+    """The executed plan's FileSourceScanExec leaves, after running it."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    leaves = plan.collectLeaves()
+    nodes = [leaves.apply(i) for i in range(leaves.size())]
+    return [n for n in nodes if n.nodeName().startswith("Scan parquet")]
+
+
+def test_many_upserts_read_as_one_scan(spark, tmp_path):
+    """Each upsert commits files from one more writer dir; the version
+    must still read as ONE parquet scan (not one scan per writer dir
+    unioned), with the same rows and with partition pruning intact."""
+    emb = load_table(spark, SF_DIR, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    _, cents = _ivf1_index(spark, SF_DIR)
+    base = str(tmp_path / "b")
+    publish_ivf_postings(spark, SF_DIR, base)
+    corpus = emb
+    for i, vid in enumerate([1, 3, 5, 7, 9, 11]):
+        batch = _batch(spark, emb, [vid], shift=0.5 + 0.1 * i)
+        ivf_postings_upsert(spark, SF_DIR, batch, base)
+        corpus = _apply(corpus, batch)
+    manifest = V._read_manifest(base, V.latest_version(base))
+    assert len({f.split("/")[0] for f in manifest["files"]}) > 2
+
+    latest = V.read_latest(spark, base)
+    assert latest.columns == ["vec_id", "emb", "cell"]
+    assert len(_scan_nodes(latest)) == 1
+    assert _table(latest) == _table(_assign(corpus, cents))
+
+    cell = _table(latest)[0][1]
+    one_cell = latest.filter(F.col("cell") == cell)
+    (scan,) = _scan_nodes(one_cell)
+    assert "cell" in str(scan.partitionFilters())
+    cell_files = [
+        f for f in manifest["files"] if V._partition_key(f) == (f"cell={cell}",)
+    ]
+    assert scan.metrics().apply("numFiles").value() == len(cell_files)
+    assert {r.cell for r in one_cell.collect()} == {cell}

@@ -287,3 +287,13 @@ def test_only_the_store_module_names_its_layout():
         if tok in line
     ]
     assert hits == [], hits
+
+
+def test_writer_column_is_reserved(spark, tmp_path):
+    """Writer dirs are ``writer=w<hex>`` partitions of data/, so a frame
+    carrying its own ``writer`` column would read back with the dir name
+    in its place: the store refuses it before writing anything."""
+    df = spark.range(3).withColumn("writer", F.lit("alice"))
+    with pytest.raises(ValueError, match="reserved"):
+        write_version(df, str(tmp_path / "t"))
+    assert not os.path.exists(tmp_path / "t")

@@ -264,10 +264,10 @@ def main() -> int:
     # corpus-scale (one file = one row = one kernel call), and this
     # shape measures them against a corpus that dominates the fixed
     # overhead, exactly like the doc shapes.
+    from caseguarddatapipeline_spark.operators.docparse import _fixture_docs
     from caseguarddatapipeline_spark.operators.multimodal import (
         _BINFIX_JPG_N,
         _BINFIX_N,
-        _fixture_docs,
         _pixel_tiles_kernel,
     )
 
@@ -311,12 +311,13 @@ def main() -> int:
     wav_n = _replicate_payloads(wav, n * 80)
     wav_rows = wav_n.count()
 
-    # document-extraction twin (round 12): ALL SEVEN text-bearing
+    # document-extraction twin (round 12): ALL TEN text-bearing
     # container classes through their full parsers — PDF xref/Flate/
     # text operators; DOCX/XLSX/PPTX ZIP + OOXML walks; EML header
-    # unfold + MIME decode; RTF group tokenizer; MSG OLE2 FAT/miniFAT
-    # walk — dispatched per payload by magic/shape, the E4 document
-    # tier's measured docs/s record.
+    # unfold + MIME decode; RTF group tokenizer; the OLE2 family (MSG,
+    # Word 97, Excel 97, PowerPoint 97) — dispatched per payload by
+    # magic over docparse.PARSERS (sniff_text), the E4 document tier's
+    # measured docs/s record.
     docsf = _fixture_docs(
         spark, sf_dir, "doc_*.{pdf,docx,xlsx,pptx,eml,rtf,msg,doc,xls,ppt}"
     )
@@ -326,46 +327,10 @@ def main() -> int:
     def _doc_text_kernel(batches):
         import pandas as pd
 
-        from caseguarddatapipeline_spark.operators.biffops import extract_xls
-        from caseguarddatapipeline_spark.operators.cfbops import extract_msg
-        from caseguarddatapipeline_spark.operators.docxops import (
-            extract_docx_text,
-            extract_pptx_text,
-        )
-        from caseguarddatapipeline_spark.operators.pptops import extract_ppt
-        from caseguarddatapipeline_spark.operators.wordops import extract_doc
-        from caseguarddatapipeline_spark.operators.mailops import extract_eml
-        from caseguarddatapipeline_spark.operators.pdfops import (
-            extract_pdf_text,
-        )
-        from caseguarddatapipeline_spark.operators.rtfops import extract_rtf
-        from caseguarddatapipeline_spark.operators.xlsxops import (
-            extract_xlsx,
-        )
-
-        def one(raw: bytes) -> str:
-            if raw[:5] == b"%PDF-":
-                return str(extract_pdf_text(raw)["text"])
-            if raw[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
-                for fn in (extract_msg, extract_doc, extract_xls, extract_ppt):
-                    try:
-                        return str(fn(raw)["text"])
-                    except ValueError:
-                        continue
-                raise ValueError("unrecognized OLE2 compound document")
-            if raw[:5] == b"{\\rtf":
-                return str(extract_rtf(raw)["text"])
-            if raw[:6] == b"From: ":
-                return str(extract_eml(raw)["text"])
-            for fn in (extract_docx_text, extract_xlsx, extract_pptx_text):
-                try:
-                    return str(fn(raw)["text"])
-                except ValueError:
-                    continue
-            raise ValueError("undispatchable document payload")
+        from caseguarddatapipeline_spark.operators.docparse import sniff_text
 
         for pdf in batches:
-            texts = pdf["payload"].map(lambda b: one(bytes(b)))
+            texts = pdf["payload"].map(lambda b: sniff_text(bytes(b)))
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
