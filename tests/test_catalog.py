@@ -1,5 +1,6 @@
-"""Catalog-wide smoke + shape tests (the reference's TDD-interface style,
-SURVEY.md §5, applied to the driver contract)."""
+"""Catalog-wide tests: every name against its DuckDB oracle at sf0.001,
+the driver contract, and catalog assembly (the reference's TDD-interface
+style, SURVEY.md §5, applied to the driver contract)."""
 
 from __future__ import annotations
 
@@ -20,12 +21,25 @@ def test_catalog_is_nonempty():
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_runs_and_returns_rows(spark, sf_dir, name):
+def test_query_runs_and_returns_rows(spark, sf_dir, oracle_problems, name):
+    """Every catalog name at sf0.001: an oracle-backed name must equal its
+    DuckDB oracle (``tools.parity.compare``) and return rows unless it is
+    in ``MAY_BE_EMPTY``; the rows-only name must return rows with at
+    least two columns."""
     df = QUERIES[name](spark, sf_dir)
+    if name in ORACLES:
+        assert oracle_problems(df, name, may_be_empty=name in MAY_BE_EMPTY) == []
+        return
     assert len(df.columns) >= 2, f"{name}: too few columns"
-    n = df.count()
-    if name not in MAY_BE_EMPTY:
-        assert n > 0, f"{name}: returned no rows"
+    assert df.count() > 0, f"{name}: returned no rows"
+
+
+def test_survey_inventory_covered():
+    """Every SURVEY.md §2 operator ID maps to a catalog name or a library
+    symbol (``tools/coverage_check.py``)."""
+    from tools import coverage_check
+
+    assert coverage_check.main() == 0
 
 
 def test_entry_contract(spark):
@@ -55,35 +69,6 @@ def test_driver_window_all_oracle_backed():
     assert not missing, f"window slots without oracles: {missing}"
 
 
-def test_window_rotation_is_stalest_first():
-    """Round-12 rotation guarantee: after the pinned entries, the window
-    holds the stalest oracle-backed queries by (last hash-green round,
-    name) — so every query re-enters the window within
-    ceil(N / (50 - pins)) rounds. A regression that re-introduces a
-    hand-ordered window (or forgets to regenerate _window_state after a
-    round) shows up as a fresher-than-necessary slot here."""
-    from caseguarddatapipeline_spark._window_state import LAST_GREEN
-    from caseguarddatapipeline_spark.catalog import _PINNED
-
-    window = list(QUERIES)[:50]
-    assert window[: len(_PINNED)] == _PINNED
-    rotation = window[len(_PINNED) :]
-    keys = [(LAST_GREEN.get(n, 0), n) for n in rotation]
-    assert keys == sorted(keys), "rotation slots are not stalest-first"
-    # nothing OUTSIDE the window may be staler than anything inside it
-    outside = [
-        n
-        for n in list(QUERIES)[50:]
-        if n in ORACLES and n not in _PINNED
-    ]
-    if outside and rotation:
-        min_outside = min((LAST_GREEN.get(n, 0), n) for n in outside)
-        assert keys[-1] <= min_outside, (
-            "a staler query was left outside the window: "
-            f"{min_outside} vs newest inside {keys[-1]}"
-        )
-
-
 def test_aliases_live_in_one_table():
     """A second catalog name for one body is registered only in
     ``catalog.ALIASES``: no operator module maps two names to one
@@ -104,19 +89,9 @@ def test_aliases_live_in_one_table():
 
 def test_catalog_rejects_an_alias_of_a_missing_name(monkeypatch):
     """An ``ALIASES`` entry whose canonical name is absent fails catalog
-    assembly, like a mistyped pin."""
+    assembly."""
     from caseguarddatapipeline_spark import catalog
 
     monkeypatch.setattr(catalog, "ALIASES", {**catalog.ALIASES, "x_alias": "no_such_query"})
     with pytest.raises(AssertionError, match="alias of a missing name: x_alias"):
         catalog.build_catalog()
-
-
-def test_window_rejects_a_pinned_name_missing_from_the_catalog(monkeypatch):
-    """A mistyped ``_PINNED`` name fails catalog assembly instead of
-    silently dropping out of the correctness window."""
-    from caseguarddatapipeline_spark import catalog
-
-    monkeypatch.setattr(catalog, "_PINNED", [*catalog._PINNED, "no_such_query"])
-    with pytest.raises(AssertionError, match="not in the catalog: no_such_query"):
-        catalog._window(list(QUERIES), ORACLES)

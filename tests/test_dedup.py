@@ -49,21 +49,6 @@ def test_minhash_identical_signatures(spark):
     assert far_matches < matches
 
 
-def test_vectorized_lsh_matches_hof_form(spark):
-    """The numpy kernel must reproduce the portable integer pipeline
-    bit-for-bit: the catalog's one LSH body gives the DuckDB oracle's
-    candidate pairs and verified jaccard values."""
-    from caseguarddatapipeline_spark.catalog import build_catalog
-    from tools.parity import compare, oracle_connection
-
-    queries, oracles = build_catalog()
-    sf = "/root/testdata/sf0.001"
-    got = queries["e1_minhash_lsh"](spark, sf).toPandas()
-    want = oracle_connection(sf).execute(oracles["e1_minhash_lsh"]).fetchdf()
-    assert len(got) > 0
-    assert compare(got, want) == []
-
-
 def test_signature_kernel_reads_code_points(spark):
     """Non-ASCII tokens (accented, CJK, emoji) hash by code point, as the
     HOF column functions do: the kernel's shingles and band signatures

@@ -14,13 +14,15 @@ from caseguarddatapipeline_spark.operators.docxops import (
     build_docx,
     extract_docx_text,
 )
-from caseguarddatapipeline_spark.operators.jpegops import decode_jpeg
+from caseguarddatapipeline_spark.operators.jpegops import (
+    decode_jpeg,
+    encode_flat_blocks,
+)
 from caseguarddatapipeline_spark.operators.pdfops import (
     PdfParseError,
     _stream_bytes,
 )
 from caseguarddatapipeline_spark.operators.rtfops import extract_rtf
-from tests.test_jpegops import encode_flat_blocks
 
 
 def test_pdf_indirect_length_raises_not_misparses():

@@ -114,6 +114,17 @@ def test_no_corpus_sized_window(spark, sf_dir, monkeypatch):
     assert not stale, f"METADATA_WINDOWS entries that plan no such window: {stale}"
 
 
+def test_window_exec_warning_is_silenced(spark):
+    # the plan lint above is the check for unpartitioned windows, so the
+    # session keeps Spark's per-plan "No Partition Defined" warning out
+    # of the log
+    from caseguarddatapipeline_spark.session import WINDOW_EXEC_LOGGER
+
+    log4j = spark._jvm.org.apache.logging.log4j
+    level = log4j.LogManager.getLogger(WINDOW_EXEC_LOGGER).getLevel()
+    assert level.toString() == "ERROR"
+
+
 def test_topk_no_global_sort(spark, sf_dir):
     plan = _plan(QUERIES["a7_top_error_entities"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, plan

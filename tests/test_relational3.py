@@ -1,6 +1,7 @@
 """Gap-filling relational/scalar operators (relational3.py) + the
-embedding-cosine near-dup: semantic checks beyond the driver's oracle
-parity (which covers value equality)."""
+embedding-cosine near-dup: semantic checks beyond the oracle parity of
+tests/test_catalog.py::test_query_runs_and_returns_rows (which covers
+value equality)."""
 
 from __future__ import annotations
 

@@ -1,9 +1,10 @@
 """Round-7 operator semantics: winnowing fingerprints + the MOSS-style
 near-dup join, bigram-LM quality scoring, SQ8 scalar-quantized ANN, and
-Markov event transitions. Exact-value parity is the driver oracle's job;
-these pin the algorithmic GUARANTEES (winnowing's shared-run property,
-quantization error bounds, probability normalization) that a hash-equal
-oracle can't articulate."""
+Markov event transitions. Exact-value parity is
+tests/test_catalog.py::test_query_runs_and_returns_rows's job; these pin
+the algorithmic GUARANTEES (winnowing's shared-run property, quantization
+error bounds, probability normalization) that a hash-equal oracle can't
+articulate."""
 
 from __future__ import annotations
 

@@ -1,10 +1,11 @@
 """Round-8 operator semantics: the Arrow-vectorized exact set-similarity
 verify stage, the bucket-expansion winnow join, IVF-composed SQ8 search,
-and the utility-weighted mixture planner. Exact-value parity is the driver
-oracle's job; these pin the algorithmic GUARANTEES (verify-kernel
-exactness vs string-set ground truth, budget feasibility, the
-uniform-utility degenerate case, quantization/routing invariants) that a
-hash-equal oracle can't articulate."""
+and the utility-weighted mixture planner. Exact-value parity is
+tests/test_catalog.py::test_query_runs_and_returns_rows's job; these pin
+the algorithmic GUARANTEES (verify-kernel exactness vs string-set ground
+truth, budget feasibility, the uniform-utility degenerate case,
+quantization/routing invariants) that a hash-equal oracle can't
+articulate."""
 
 from __future__ import annotations
 

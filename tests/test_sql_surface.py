@@ -114,16 +114,6 @@ def test_sql_twins_cross_sf_isolation(spark):
     assert small and big and big > small
 
 
-def test_a1_body_matches_both_oracles(spark, sf_dir):
-    """The flagship has one body and two oracle texts (the CTE form and
-    the single-join form): the body must match each of them."""
-    from tests.test_quality import _oracle_problems
-
-    df = QUERIES["a1_reconciliation_summary"](spark, sf_dir)
-    for name in ("a1_reconciliation_summary", "a1_reconciliation_summary_sql"):
-        assert _oracle_problems(sf_dir, df, name) == [], name
-
-
 # Catalog names served by ONE body: each pair is the same function object,
 # so the two names cannot drift apart (catalog.ALIASES registers the second).
 ALIAS_PAIRS = [

@@ -11,18 +11,13 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-import duckdb
-
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "tools"))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from parity import compare  # noqa: E402
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+from parity import compare, oracle_connection  # noqa: E402
 
 
 def main() -> int:
@@ -46,9 +41,7 @@ def main() -> int:
         print("  ", r)
     assert len(rows) > 0, "entry() returned no rows"
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_connection(sf_dir)
 
     queries, oracles = mod.queries(), mod.oracle_sql()
     if only:
