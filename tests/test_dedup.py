@@ -49,6 +49,17 @@ def test_minhash_identical_signatures(spark):
     assert far_matches < matches
 
 
+def test_vectorized_lsh_matches_hof_form(spark, sf_dir, oracle_problems):
+    """The numpy kernel must reproduce the portable integer pipeline
+    bit-for-bit: the catalog's one LSH body gives the DuckDB oracle's
+    candidate pairs and verified jaccard values."""
+    from caseguarddatapipeline_spark.catalog import build_catalog
+
+    queries, _ = build_catalog()
+    got = queries["e1_minhash_lsh"](spark, sf_dir)
+    assert oracle_problems(got, "e1_minhash_lsh") == []
+
+
 def test_signature_kernel_reads_code_points(spark):
     """Non-ASCII tokens (accented, CJK, emoji) hash by code point, as the
     HOF column functions do: the kernel's shingles and band signatures

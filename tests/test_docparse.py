@@ -1,14 +1,46 @@
-"""The document-extraction seam (operators/docparse.py): the magic-byte
-decode preview over each admitted format and the rule that only one module
-routes bytes to the parsers. Each byte-real document op is checked against
-its oracle by tests/test_catalog.py."""
+"""The document-extraction seam (operators/docparse.py): every byte-real
+document op against its oracle, the magic-byte decode preview over each
+admitted format, and the rule that only one module routes bytes to the
+parsers."""
 
 from __future__ import annotations
 
 import ast
 from pathlib import Path
 
+import pytest
+
 PACKAGE = Path(__file__).resolve().parent.parent / "caseguarddatapipeline_spark"
+
+TEXT_OPS = [
+    "e4_pdf_text",
+    "e4_docx_text",
+    "e4_pptx_text",
+    "e4_xlsx_cells",
+    "e4_eml_text",
+    "e4_msg_text",
+    "e4_doc_text",
+    "e4_xls_cells",
+    "e4_ppt_text",
+    "e4_rtf_text",
+]
+
+
+@pytest.mark.parametrize(
+    "name",
+    TEXT_OPS
+    + [
+        "u3_binary_dispatch",
+        "u3_format_dispatch",
+        "e4_decode_pipeline",
+        "e4_zip_expand",
+    ],
+)
+def test_document_op_matches_oracle(spark, sf_dir, oracle_problems, name):
+    from caseguarddatapipeline_spark.catalog import build_catalog
+
+    queries, _ = build_catalog()
+    assert oracle_problems(queries[name](spark, sf_dir), name) == []
 
 
 def _builders():

@@ -4,6 +4,8 @@ SemDeDup-shape keep-set."""
 
 from __future__ import annotations
 
+import pytest
+
 from caseguarddatapipeline_spark.operators.dedup import e1_semantic_dedup
 from caseguarddatapipeline_spark.operators.quality import (
     N_SHARDS,
@@ -143,6 +145,31 @@ def test_quality_classifier_bounds(spark, sf_dir):
         assert 0.0 <= r.p_quality <= 1.0
         assert r.accepted == (r.p_quality >= 0.5)
     assert {r.accepted for r in rows} == {True, False}  # discriminates
+
+
+@pytest.mark.parametrize("name", ["e5_global_shuffle", "w5_batch_numbering"])
+def test_exact_rank_bodies_match_oracle(spark, sf_dir, oracle_problems, name):
+    """Both global numberings rank through topk.exact_rank (bucket
+    histogram + prefix offsets) and must equal their oracle's global
+    ntile / row_number row for row — shard boundaries included."""
+    from caseguarddatapipeline_spark.catalog import build_catalog
+
+    queries, _ = build_catalog()
+    assert oracle_problems(queries[name](spark, sf_dir), name) == []
+
+
+def test_zscore_scaled_matches_window_form(spark, sf_dir, oracle_problems):
+    """The histogram + tie-group-window decomposition is row-identical to
+    the oracle's per-source-window form — same z, percent rank, and ntile
+    decile."""
+    from caseguarddatapipeline_spark.operators.quality import (
+        zscore_by_source_scaled,
+    )
+    from caseguarddatapipeline_spark.sources import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    problems = oracle_problems(zscore_by_source_scaled(docs), "e3_zscore_by_source")
+    assert not problems, problems
 
 
 def test_neardup_recall_invariants(spark, sf_dir):
@@ -304,6 +331,22 @@ def test_token_budget_sample_prefix_and_boundary(spark, tmp_path):
         .filter(F.col("cum") <= budget)
     )
     assert {r["doc_id"] for r in kept.collect()} == kept_ids
+
+
+def test_token_budget_scaled_matches_window_form(spark, sf_dir, oracle_problems):
+    """The hash-prefix-bucket decomposition is row-identical to the
+    oracle's whole-source-window form — same kept counts, token totals,
+    hash bounds, and fill ratios per source."""
+    from caseguarddatapipeline_spark.operators.quality import (
+        token_budget_sample_scaled,
+    )
+    from caseguarddatapipeline_spark.sources import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    problems = oracle_problems(
+        token_budget_sample_scaled(docs), "e5_token_budget_sample"
+    )
+    assert not problems, problems
 
 
 def test_token_budget_scaled_skewed_giant_source(spark):
